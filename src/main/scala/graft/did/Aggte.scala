@@ -144,21 +144,31 @@ object Aggte {
     * `utils_aggte.py:53-66`): analytic `sqrt(sum IF^2)/n` in one
     * aggregation, or one COMBINED seeded multiplier bootstrap (per-member
     * IQR SEs are column-independent, so one run over all members is
-    * statistically identical to the reference's per-column calls). */
+    * statistically identical to the reference's per-column calls),
+    * clustered like the fit's own bootstrap. */
   private def familySe(p: Prep, fam: DataFrame, nMembers: Int,
       bs: Boolean): Array[Double] = {
-    val cfg = p.fit.pp.config
     val out = Array.fill(nMembers)(Double.NaN)
     if (bs) {
-      val tab = fam.select(col("rowid"), col("midx").as("cell"),
-        col("v").as("inf"))
-      val r = MBoot.run(tab, nMembers, p.n, cfg.biters, cfg.alp, cfg.seed)
+      val r = MBoot.runFor(p.fit.pp, asCells(fam), nMembers)
       r.se.copyToArray(out)
     } else {
       fam.groupBy("midx").agg(sum(col("v") * col("v")).as("ss")).collect()
         .foreach(r => out(r.getInt(0)) = math.sqrt(r.getDouble(1)) / p.n)
     }
     out.map(se => if (se <= Stats.DegenerateTol) Double.NaN else se)
+  }
+
+  /** A familyIF frame in MBoot's (rowid, cell, inf) layout. */
+  private def asCells(fam: DataFrame): DataFrame =
+    fam.select(col("rowid"), col("midx").as("cell"), col("v").as("inf"))
+
+  /** Sup-t critical value over members 0..k-1 of `fam`, bootstrapped
+    * like [[familySe]], with the reference's clamps. */
+  private def cbandCritVal(p: Prep, fam: DataFrame, k: Int): Double = {
+    val c = MBoot.runFor(p.fit.pp, asCells(fam.filter(col("midx") < k)), k)
+      .critVal
+    clampCritVal(c, Stats.normPpf(1 - p.fit.pp.config.alp / 2))
   }
 
   def simple(p: Prep, maxE: Double = Double.PositiveInfinity,
@@ -242,14 +252,8 @@ object Aggte {
     val seEgt = ses.take(nG)
     val se = ses(nG)
 
-    var critEgt = Stats.normPpf(1 - cfg.alp / 2)
-    if (cb) {
-      val asCells = fam.filter(col("midx") < nG)
-        .select(col("rowid"), col("midx").as("cell"), col("v").as("inf"))
-      val c = MBoot.run(asCells, nG, p.n, cfg.biters, cfg.alp, cfg.seed)
-        .critVal
-      critEgt = clampCritVal(c, Stats.normPpf(1 - cfg.alp / 2))
-    }
+    val critEgt =
+      if (cb) cbandCritVal(p, fam, nG) else Stats.normPpf(1 - cfg.alp / 2)
     fam.unpersist()
     AggteResult("group", overallAtt, se, p.origGlist.toSeq, attEgt.toSeq,
       seEgt.toSeq, critEgt, cfg.alp)
@@ -295,14 +299,8 @@ object Aggte {
     val seEgt = ses.take(nT)
     val se = ses(nT)
 
-    var critEgt = Stats.normPpf(1 - cfg.alp / 2)
-    if (cb) {
-      val asCells = fam.filter(col("midx") < nT)
-        .select(col("rowid"), col("midx").as("cell"), col("v").as("inf"))
-      val c = MBoot.run(asCells, nT, p.n, cfg.biters, cfg.alp, cfg.seed)
-        .critVal
-      critEgt = clampCritVal(c, Stats.normPpf(1 - cfg.alp / 2))
-    }
+    val critEgt =
+      if (cb) cbandCritVal(p, fam, nT) else Stats.normPpf(1 - cfg.alp / 2)
     fam.unpersist()
 
     val overallAtt = perT.map(_._4).sum / nT
@@ -354,7 +352,8 @@ object Aggte {
     }
     val post = perE.filter(_._1 >= 0)
     val overallAtt = post.map(_._4).sum / post.length
-    // overall member nE: mean over post event times of their per-e IFs
+    // overall member nE: mean over post event times of their per-e IFs,
+    // each carrying its own wif (R `did`; like calendar's overall)
     val wOverall = post.flatMap { case (_, which, s, _) =>
       which.map(k => k -> p.pg(k) / s / post.length)
     }.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).sum }
@@ -362,21 +361,18 @@ object Aggte {
     val cellWts = perE.zipWithIndex.flatMap { case ((_, which, s, _), ei) =>
       which.map(k => (k, ei, p.pg(k) / s))
     } ++ wOverall.toSeq.map { case (k, w) => (k, nE, w) }
-    val wifCoefs = perE.zipWithIndex.flatMap { case ((_, which, _, _), ei) =>
-      wifCoefFor(p, which).toSeq.map { case (g, c) => (ei, g, c) }
-    } ++ wifCoefFor(p, wOverall.keys.toSeq)
-      .toSeq.map { case (g, c) => (nE, g, c) }
+    val perEWif = perE.map { case (_, which, _, _) => wifCoefFor(p, which) }
+    val wifCoefs = perEWif.zipWithIndex.flatMap { case (m, ei) =>
+      m.toSeq.map { case (g, c) => (ei, g, c) }
+    } ++ perE.indices.filter(ei => perE(ei)._1 >= 0)
+      .flatMap(ei => perEWif(ei).toSeq)
+      .groupBy(_._1)
+      .map { case (g, cs) => (nE, g, cs.map(_._2).sum / post.length) }
 
     val fam = familyIF(p, cellWts, wifCoefs).persist()
     val ses = familySe(p, fam, nE + 1, bs)
-    var critEgt = Stats.normPpf(1 - cfg.alp / 2)
-    if (cb) {
-      val asCells = fam.filter(col("midx") < nE)
-        .select(col("rowid"), col("midx").as("cell"), col("v").as("inf"))
-      val c = MBoot.run(asCells, nE, p.n, cfg.biters, cfg.alp, cfg.seed)
-        .critVal
-      critEgt = clampCritVal(c, Stats.normPpf(1 - cfg.alp / 2))
-    }
+    val critEgt =
+      if (cb) cbandCritVal(p, fam, nE) else Stats.normPpf(1 - cfg.alp / 2)
     fam.unpersist()
     AggteResult("dynamic", overallAtt, ses(nE), perE.map(_._1),
       perE.map(_._4), ses.take(nE).toSeq, critEgt, cfg.alp)

@@ -164,29 +164,7 @@ object AttGt {
 
     val (se, crit) =
       if (bstrap) {
-        val cfg = pp.config
-        // `clustervar == idname` degrades to the unclustered bootstrap
-        // (the reference drops idname from clustervars,
-        // csdids/mboot.py:88-90).
-        val b = cfg.clustervar.filter(_ != cfg.idname) match {
-          case Some(cv) =>
-            val cl = pp.df
-              .select(col("rowid").cast("string").as("rowid"),
-                col(cv).cast("string").as("cluster"))
-              .distinct()
-            // Time-invariance check (csdids/mboot.py:99-104): a unit
-            // mapping to >1 cluster value cannot be cluster-bootstrapped.
-            val timeVarying = cl.groupBy("rowid")
-              .agg(count(lit(1)).as("nclust"))
-              .filter(col("nclust") > 1).limit(1).count()
-            require(timeVarying == 0,
-              s"Can't handle time-varying cluster variables: '$cv' varies " +
-                "within unit")
-            MBoot.runClustered(ifTable, cl, cells.length, cfg.biters,
-              cfg.alp, cfg.seed)
-          case None =>
-            MBoot.run(ifTable, cells.length, n, cfg.biters, cfg.alp, cfg.seed)
-        }
+        val b = MBoot.runFor(pp, ifTable, cells.length)
         (b.se, b.critVal)
       } else (Array.fill(cells.length)(0.0), 0.0)
 

@@ -54,16 +54,17 @@ object CellEstimators {
   /** Unpenalized weighted logistic MLE via IRLS (Newton-Raphson), the
     * estimator behind `glm(D ~ -1 + X, binomial, weights)`. Matches an
     * unregularized fit to ~1e-10 (SURVEY.md §7.6: ml's LBFGS-regularized
-    * LogisticRegression is NOT a substitute). */
+    * LogisticRegression is NOT a substitute). Stops after
+    * [[DistributedRc.IrlsMaxIter]] Newton steps, like the distributed
+    * loops. */
   private[did] def logisticIrls(
       x: DenseMatrix[Double], d: DenseVector[Double], w: DenseVector[Double],
-      maxIter: Int = 100,
       tol: Double = DistributedRc.IrlsTol): DenseVector[Double] = {
     val p = x.cols
     var beta = DenseVector.zeros[Double](p)
     var iter = 0
     var converged = false
-    while (iter < maxIter && !converged) {
+    while (iter < DistributedRc.IrlsMaxIter && !converged) {
       val eta = x * beta
       val mu = eta.map(e => 1.0 / (1.0 + math.exp(-e)))
       val wIrls = w *:* mu *:* (mu.map(m => 1.0 - m))

@@ -137,7 +137,7 @@ private[did] object DistributedPanel {
         lastHess = hb.result()
         pending = still.result()
       }
-      while (iter < 50 && pending.nonEmpty) {
+      while (iter < DistributedRc.IrlsMaxIter && pending.nonEmpty) {
         val iw = col("w1") / col("mw")
         val mu = lit(1.0) / (lit(1.0) + exp(-dotArr(col("gam"))))
         val s = iw * mu * (lit(1.0) - mu)

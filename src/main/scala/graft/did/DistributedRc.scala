@@ -41,19 +41,6 @@ private[did] object DistributedRc {
   def supports(estMethod: String, p: Int): Boolean =
     Set("dr", "reg", "ipw").contains(estMethod) && p <= MaxP
 
-  // profiling aid, active only under SPARK_GRAFT_DEBUG
-  private val debug = sys.env.contains("SPARK_GRAFT_DEBUG")
-  private def timed[T](name: String)(f: => T): T =
-    if (!debug) f else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"[rc] $name%-12s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
-  // ---------------------------------------------------------------------
-
   /** IRLS stops when the just-APPLIED Newton step is below this. Newton
     * is quadratically convergent here, so the step criterion overshoots:
     * 1e-10 lands gamma at machine precision (the final pass's steps
@@ -66,6 +53,11 @@ private[did] object DistributedRc {
     * Must match [[CellEstimators.logisticIrls]]'s default so the
     * distributed and collect paths run identical iterates. */
   private[did] val IrlsTol = 1e-10
+
+  /** Cap on Newton steps, shared by all three IRLS loops (this one,
+    * [[DistributedPanel]]'s and [[CellEstimators.logisticIrls]]) so the
+    * paths stop at the same iterate on cells that do not converge. */
+  private[did] val IrlsMaxIter = 50
 
   def fit(pp: PreprocessedPanel, cells: Vector[CellDef], estMethod: String,
       lf0: DataFrame)
@@ -99,8 +91,6 @@ private[did] object DistributedRc {
       col("d").cast("double").as("dd"),
       col("pst").cast("double").as("pp")) ++ covs.map(col): _*)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    if (debug) System.err.println(s"[rc] lf rows: ${timed("lf-mat")(lf.count())} " +
-      s"partitions: ${lf.rdd.getNumPartitions}")
 
     def xj(j: Int): Column = col(covs(j))
 
@@ -126,9 +116,9 @@ private[did] object DistributedRc {
         (0 until p).map(j =>
           sum(ind(dv, pv) * xj(j)).as(s"gv_${nm}_$j"))
       }
-    val p0 = timed("pass0")(
+    val p0 =
       lf.groupBy("cell").agg(bucketAggs.head, bucketAggs.tail: _*)
-        .collect().map(r => r.getInt(0) -> r).toMap)
+        .collect().map(r => r.getInt(0) -> r).toMap
     def p0d(i: Int, name: String): Double =
       p0(i).getDouble(p0(i).fieldIndex(name))
     def p0Gram(i: Int, nm: String): DenseMatrix[Double] = {
@@ -205,7 +195,7 @@ private[did] object DistributedRc {
         pending = still.result()
       }
       // remaining Newton passes scan only the straggler cells' rows
-      while (iter < 50 && pending.nonEmpty) {
+      while (iter < IrlsMaxIter && pending.nonEmpty) {
         val iw = col("w1") / col("mw")
         val mu = lit(1.0) / (lit(1.0) + exp(-dotArr(col("gam"))))
         val s = iw * mu * (lit(1.0) - mu)
@@ -214,12 +204,12 @@ private[did] object DistributedRc {
           (for (j <- 0 until p; k <- j until p)
             yield sum(s * xj(j) * xj(k)).as(s"h_${j}_$k")) ++
           (0 until p).map(j => sum(z * xj(j)).as(s"g_$j"))
-        val rows = timed(s"irls#$iter")(
+        val rows =
           CellConsts.withConsts(lf, pending, Seq(
               "mw" -> (i => meanW(i)),
               "gam" -> (i => gamma(i).toArray.toSeq)))
             .groupBy("cell").agg(aggs.head, aggs.tail: _*)
-            .collect().map(r => r.getInt(0) -> r).toMap)
+            .collect().map(r => r.getInt(0) -> r).toMap
         val hessB = Map.newBuilder[Int, DenseMatrix[Double]]
         val still = Seq.newBuilder[Int]
         pending.foreach { i =>
@@ -234,20 +224,12 @@ private[did] object DistributedRc {
           val step = h \ g
           gamma(i) = gamma(i) + step
           hessB += i -> h
-          val sz = breeze.linalg.max(step.map(math.abs))
-          if (debug) System.err.println(f"[irls] cell $i step $sz%.3e")
-          if (sz > IrlsTol) still += i
+          if (breeze.linalg.max(step.map(math.abs)) > IrlsTol) still += i
         }
         lastHess = lastHess ++ hessB.result()
         pending = still.result()
         iter += 1
-        if (debug)
-          System.err.println(
-            s"[irls] pass $iter: ${pending.size}/${live.size} cells pending")
       }
-      if (debug)
-        System.err.println(s"[irls] converged after $iter Newton passes " +
-          s"(${live.size} cells, p=$p)")
       psHessInv = lastHess.map { case (i, h) =>
         i -> inv(h /:/ nC(i).toDouble)
       }
@@ -346,7 +328,7 @@ private[did] object DistributedRc {
           Moment(s"m1_$j", wD * col("pp") * xj(j)),
           Moment(s"m2_$j", wD * (one - col("pp")) * xj(j))))
     }
-    val momRows = timed("moments") {
+    val momRows = {
       val aggs = moments.map(m => sum(m.c).as(m.name))
       CellConsts.withConsts(lf, live, constants(Nil)).groupBy("cell")
         .agg(aggs.head, aggs.tail: _*)
@@ -528,9 +510,8 @@ private[did] object DistributedRc {
       .groupBy("rowid", "cell").agg(sum("inf").as("inf"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val seSS = Array.fill(nCells)(0.0)
-    timed("if+se")(
-      ifRows.groupBy("cell").agg(sum(col("inf") * col("inf")).as("ss"))
-        .collect().foreach(r => seSS(r.getInt(0)) = r.getDouble(1)))
+    ifRows.groupBy("cell").agg(sum(col("inf") * col("inf")).as("ss"))
+      .collect().foreach(r => seSS(r.getInt(0)) = r.getDouble(1))
     lf.unpersist()
 
     (att, post, skipped, ifRows, Some(seSS))

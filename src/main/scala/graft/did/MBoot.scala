@@ -293,6 +293,43 @@ object MBoot {
     (sized, nClusters)
   }
 
+  /** The panel's rowid -> cluster map (string columns `rowid`,
+    * `cluster`), or None when the bootstrap is by unit: `clustervar`
+    * unset, or equal to `idname` (the reference drops idname from
+    * clustervars, csdids/mboot.py:88-90). A unit mapping to more than
+    * one cluster value cannot be cluster-bootstrapped
+    * (csdids/mboot.py:99-104) and is rejected. */
+  private[did] def clusterMap(pp: PreprocessedPanel): Option[DataFrame] = {
+    val cfg = pp.config
+    cfg.clustervar.filter(_ != cfg.idname).map { cv =>
+      val cl = pp.df
+        .select(col("rowid").cast("string").as("rowid"),
+          col(cv).cast("string").as("cluster"))
+        .distinct()
+      val timeVarying = cl.groupBy("rowid")
+        .agg(count(lit(1)).as("nclust"))
+        .filter(col("nclust") > 1).limit(1).count()
+      require(timeVarying == 0,
+        s"Can't handle time-varying cluster variables: '$cv' varies " +
+          "within unit")
+      cl
+    }
+  }
+
+  /** Bootstrap an influence table of `pp`'s units the way its config
+    * asks: by cluster ([[runClustered]]) when [[clusterMap]] has one,
+    * else by unit. Both the fit and every aggregation go through here,
+    * so they resample the same way. */
+  private[did] def runFor(pp: PreprocessedPanel, ifTable: DataFrame,
+      k: Int): MBootResult = {
+    val cfg = pp.config
+    clusterMap(pp) match {
+      case Some(cl) =>
+        runClustered(ifTable, cl, k, cfg.biters, cfg.alp, cfg.seed)
+      case None => run(ifTable, k, pp.n, cfg.biters, cfg.alp, cfg.seed)
+    }
+  }
+
   /** Cluster bootstrap, intended semantics (the reference's own cluster
     * path is pandas-on-Spark and raises — SURVEY.md §2.8): cluster-mean
     * influence, then bootstrap over clusters. `clusterOf` maps rowid ->

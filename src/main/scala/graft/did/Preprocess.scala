@@ -49,16 +49,6 @@ object Preprocess {
     // touching nothing session-global.
     runInner(data, cfg)
 
-  private val debug = sys.env.contains("SPARK_GRAFT_DEBUG")
-  private def timed[T](name: String)(f: => T): T =
-    if (!debug) f else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"[pp] $name%-12s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
   private def runInner(data: DataFrame, cfg: AttGtConfig): PreprocessedPanel = {
     val spark = data.sparkSession
     import cfg._
@@ -85,10 +75,10 @@ object Preprocess {
     // also materializes the cache.
     val allNull = (roleCols.map(c => col(c).isNull) :+ col("w").isNull)
       .reduce(_ && _)
-    val cntRow = timed("cntRow")(projected.agg(count(lit(1)),
+    val cntRow = projected.agg(count(lit(1)),
       count(when(allNull, 1)),
       approx_count_distinct(col(tname).cast("double")),
-      approx_count_distinct(col(gname).cast("double"))).first())
+      approx_count_distinct(col(gname).cast("double"))).first()
     val nPre = cntRow.getLong(0)
     val nDropped = cntRow.getLong(1)
     // Cardinality guard BEFORE any collect_set: collecting a
@@ -133,13 +123,13 @@ object Preprocess {
       // still shift maxT and the never-treated recode. groupBy keeps
       // the null gg as its own group; only the per-cohort stats map
       // skips it below.
-      val rows = timed("cohorts")(d
+      val rows = d
         .filter(col("tt").isNotNull)
         .groupBy("gg")
         .agg(count(lit(1)).as("cnt"),
           count_distinct(col(idname)).as("uids"),
           collect_set("tt").as("tts"))
-        .collect())
+        .collect()
       val t = rows.iterator.flatMap(_.getSeq[Double](3))
         .toVector.distinct.sorted
       (t, rows.filter(!_.isNullAt(0)).map(r => r.getDouble(0) ->
@@ -252,7 +242,7 @@ object Preprocess {
     // intermediate projection it derives from (recomputing from source
     // would redo the caller's input plan), and to pin rowid in the
     // trueRcs regime (monotonically_increasing_id must never recompute).
-    timed("pin")(df.count())
+    df.count()
     projected.unpersist()
 
     PreprocessedPanel(df, tlist, glist, n, glist.length, tlist.length,
