@@ -105,25 +105,6 @@ object SparkEntry {
     * `Dedup.releaseCaches()` unpersists the underlying frame — otherwise
     * the map would keep serving a handle whose every consumer silently
     * recomputes the whole CC loop. */
-  /** md5-flavor bootstrap draw matrix (64 draws), persisted so the
-    * explode+groupBy contraction is paid once per release window: in
-    * Verify (releaseAll only at the end) `q_mboot_draws_md5` and
-    * `q_mboot_se_md5` share one build; in Bench (releaseAll BETWEEN
-    * queries) the sharing is across one query's reps — rep 1 builds,
-    * rep 2+ reuse, so min-over-reps reports the warm pass. Registered
-    * with TrackedCaches like componentsCache so a `releaseAll` also
-    * drops the handle (a kept handle to an unpersisted frame silently
-    * recomputes per consumer). */
-  private val mbootDrawCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-  graft.operators.TrackedCaches.onRelease(() => mbootDrawCache.clear())
-  private def md5DrawsFor(s: SparkSession, dir: String): DataFrame =
-    mbootDrawCache.getOrElseUpdate(skey(s, dir), {
-      val f = fitFor(s, dir)
-      graft.operators.TrackedCaches.persist(
-        MBoot.drawMatrixMd5(f.ifTable, f.pp.n, biters = 64))
-    })
-
   private val componentsCache =
     scala.collection.concurrent.TrieMap.empty[String, DataFrame]
   graft.operators.TrackedCaches.onRelease(() => componentsCache.clear())
@@ -181,37 +162,6 @@ object SparkEntry {
       |       columns = {'input_fp': 'VARCHAR', 'g': 'DOUBLE',
       |                  't': 'DOUBLE', 'att': 'DOUBLE',
       |                  'se': 'DOUBLE'}) f, fp
-      |WHERE f.input_fp = fp.fp""".stripMargin)
-
-  /** Fixture-join oracle for the production-bootstrap SEs: the same
-    * replayable fingerprint chain as q_pretest_wald (rounded att +
-    * vcov tables over the IF-chain replay — textually identical to
-    * FP_SQL in scripts/gen_pretest_fixture.py, which
-    * gen_mboot_fixture.py imports); flavors differ only in the
-    * committed fixture file. */
-  private def mbootFixtureSql(csv: String): String = withPanelCte(
-    s""", $ifUnitCte,
-      |att_r AS (
-      |  SELECT g, tn, ROUND((mu11 - mu10) - (mu01 - mu00), 4) AS att FROM k
-      |  WHERE w11 > 0 AND w10 > 0 AND w01 > 0 AND w00 > 0),
-      |vv_r AS (
-      |  SELECT a.g AS g1, a.tn AS t1, b.g AS g2, b.tn AS t2,
-      |    ROUND(SUM(a.inf * b.inf) / (nn.n * nn.n), 2) AS cov
-      |  FROM u a JOIN u b ON a.id = b.id, nn
-      |  WHERE (a.g, a.tn) <= (b.g, b.tn)
-      |  GROUP BY a.g, a.tn, b.g, b.tn, nn.n),
-      |fp AS (SELECT md5(
-      |  (SELECT string_agg(g || ',' || tn || ',' || att, ';' ORDER BY g, tn)
-      |   FROM att_r) || '|' ||
-      |  (SELECT string_agg(g1 || ',' || t1 || ',' || g2 || ',' || t2 || ','
-      |                     || cov, ';' ORDER BY g1, t1, g2, t2)
-      |   FROM vv_r)) AS fp)
-      |SELECT f.g, f.t, f.se
-      |FROM read_csv('${new java.io.File(
-           s"src/test/resources/$csv").getAbsolutePath}',
-      |       header = true,
-      |       columns = {'input_fp': 'VARCHAR', 'g': 'DOUBLE',
-      |                  't': 'DOUBLE', 'se': 'DOUBLE'}) f, fp
       |WHERE f.input_fp = fp.fp""".stripMargin)
 
   /** Covariate (xfmla = "y ~ x1") fit surface under the given
@@ -279,6 +229,9 @@ object SparkEntry {
         PanelView.config.copy(clustervar = Some("clust")))
       AttGt.fit(pp, bstrap = true)
     })
+
+  /** Draws in `q_mboot_draws` (the production bootstrap at a smaller B). */
+  private val MbootDraws = 64
 
   private def singleValue(s: SparkSession, name: String, v: Double): DataFrame = {
     import s.implicits._
@@ -518,7 +471,7 @@ object SparkEntry {
       import s.implicits._
       val r = Aggte.simple(prepFor(s, dir))
       // familySe returns NaN for degenerate members (BigDecimal(NaN)
-      // throws) — drop them like q_mboot_se_md5 does
+      // throws) — drop them like q_mboot_se does
       Seq((r.overallAtt, r.overallSe)).filter(!_._2.isNaN)
         .map { case (a, se) =>
           (BigDecimal(a).setScale(4, BigDecimal.RoundingMode.HALF_UP)
@@ -609,13 +562,10 @@ object SparkEntry {
       }.toDF("e", "att")
     }),
 
-    // §2.8 PRODUCTION multiplier-bootstrap SEs (seeded commons-math3
-    // MersenneTwister draws). Oracle-gated via the independent-fixture
-    // pattern (scripts/gen_mboot_fixture.py: a pure-Python MT19937
-    // with the commons-math3 seeding contract replays the draw stream,
-    // DuckDB replays the IF chain, the finish arithmetic is
-    // re-derived) — the last DiD-family rows-only pair leaves the
-    // list; the md5 flavors remain the SQL-native cross-check.
+    // §2.8 PRODUCTION multiplier-bootstrap SEs at the config's B, seed
+    // and alp. Oracle: DuckDB rebuilds the per-unit IF (q_if_norms'
+    // chain), replays MBoot's splitmix64 signs and the finish() type-1
+    // quantiles by explicit rank
     "q_mboot_se" -> ((s, dir) => {
       import s.implicits._
       val f = fitFor(s, dir)
@@ -633,9 +583,9 @@ object SparkEntry {
     // reference's own cluster path raises; SURVEY.md §2.8), driven end
     // to end by config.clustervar: the cluster column rides through
     // Preprocess and AttGt.fit routes the bootstrap to
-    // MBoot.runClustered (id-mod-100 clusters). Same fixture pattern
-    // (mboot_cluster_se.csv — cluster-mean IF + MT draws over the 100
-    // string-sorted cluster keys).
+    // MBoot.runClustered (id-mod-100 clusters). Oracle: DuckDB rebuilds
+    // the clusters, the cluster-mean sizing, the signs keyed by cluster
+    // id and the type-1 quantiles
     "q_mboot_cluster_se" -> ((s, dir) => {
       import s.implicits._
       val f = clusterFitFor(s, dir)
@@ -646,61 +596,23 @@ object SparkEntry {
         .toDF("g", "t", "se")
     }),
 
-    // §2.8 md5-flavor bootstrap draw matrix — engine-replayable signs
-    // (top bit of md5("unit#draw#")) make the distributed Rademacher
-    // contraction itself DuckDB-hash-checkable; production keeps the
-    // cheaper murmur3 signs (q_mboot_se above, pinned by MBootSpec
-    // driver/distributed parity)
-    "q_mboot_draws_md5" -> ((s, dir) => {
+    // §2.8 PRODUCTION bootstrap draw matrix (bres) at 64 draws: every
+    // signed contraction hash-checked against DuckDB's replay
+    "q_mboot_draws" -> ((s, dir) => {
       import s.implicits._
       val f = fitFor(s, dir)
-      val cellMap = f.cells.filterNot(c => c.zeroCell || f.skipped(c.idx))
-        .map(c => (c.idx, c.g, c.tn)).toDF("cell", "g", "t")
-      md5DrawsFor(s, dir)
-        .join(broadcast(cellMap), "cell")
-        .select(col("g"), col("t"), col("draw").cast("long").as("draw"),
-          // 2dp: bres magnitude is ~1e5 (raw-y influence sums), so finer
-          // rounding would demand ~1e-12 RELATIVE cross-engine agreement
-          // on a 4500-term float sum — knife-edge territory
-          round(col("bres"), 2).as("bres"))
-    }),
-
-    // §2.8 md5-flavor bootstrap SE, through the SAME finish() as
-    // production (sqrt(n) scale, degenerate drop, type-1 IQR quantiles)
-    // — DuckDB replays the draws AND the inverted-cdf rank selection
-    "q_mboot_se_md5" -> ((s, dir) => {
-      import s.implicits._
-      val f = fitFor(s, dir)
-      val b = MBoot.finishFromMd5Draws(md5DrawsFor(s, dir), f.cells.length,
-        f.pp.n, biters = 64, f.pp.config.alp)
-      f.cells.indices.filter(i => !b.se(i).isNaN)
-        .map(i => (f.cells(i).g, f.cells(i).tn,
-          BigDecimal(b.se(i)).setScale(4, BigDecimal.RoundingMode.HALF_UP)
-            .toDouble))
-        .toDF("g", "t", "se")
-    }),
-
-    // §2.8 clustered md5-flavor bootstrap SE: cluster-mean influence
-    // (rowid := cluster, inf summed then divided by cluster size), signs
-    // keyed by the CLUSTER id — DuckDB rebuilds the clusters (id % 100),
-    // the sizing, the draws, and the type-1 quantile selection, so the
-    // clustered bootstrap numbers are cross-engine-pinned like the
-    // unclustered flavor; q_mboot_cluster_se keeps the production
-    // murmur3 path
-    "q_mboot_cluster_se_md5" -> ((s, dir) => {
-      import s.implicits._
-      val f = clusterFitFor(s, dir)
-      val cl = f.pp.df
-        .select(col("rowid").cast("string").as("rowid"),
-          col("clust").cast("string").as("cluster"))
-        .distinct()
-      val b = MBoot.runClusteredMd5(f.ifTable, cl, f.cells.length,
-        biters = 64, f.pp.config.alp)
-      f.cells.indices.filter(i => !b.se(i).isNaN)
-        .map(i => (f.cells(i).g, f.cells(i).tn,
-          BigDecimal(b.se(i)).setScale(4, BigDecimal.RoundingMode.HALF_UP)
-            .toDouble))
-        .toDF("g", "t", "se")
+      val cfg = f.pp.config
+      val b = MBoot.run(f.ifTable, f.cells.length, f.pp.n, MbootDraws,
+        cfg.alp, cfg.seed)
+      (for {
+        c <- f.cells.filterNot(c => c.zeroCell || f.skipped(c.idx))
+        d <- 0 until MbootDraws
+        // 2dp: bres magnitude is ~1e5 (raw-y influence sums), so finer
+        // rounding would demand ~1e-12 RELATIVE cross-engine agreement
+        // on a 4500-term float sum — knife-edge territory
+      } yield (c.g, c.tn, d.toLong, BigDecimal(b.bres(d)(c.idx))
+        .setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble))
+        .toDF("g", "t", "draw", "bres")
     }),
 
     // §2.7 influence-function store: per-cell analytic SE
@@ -728,7 +640,7 @@ object SparkEntry {
     // this matrix drives the PreTest.wald pre-trend test (driver-side
     // K_pre x K_pre solve, spec-pinned — matrix inversion is not SQL).
     // cov is raw-y scale (~1e9 here), so it is pinned at 2dp (cross-
-    // engine sum-order tolerance ~1e-4 — the q_mboot_draws_md5 rounding
+    // engine sum-order tolerance ~1e-4 — the q_mboot_draws rounding
     // rationale); corr is the scale-free flavor at a comfortable 6dp
     "q_att_gt_vcov" -> ((s, dir) => {
       import s.implicits._
@@ -5924,7 +5836,7 @@ object SparkEntry {
   /** Shared oracle CTE: per-unit influence table rebuilt from the raw
     * panel (long form -> 2x2 bucket constants -> per-unit IF sums) plus
     * the unit count — the SQL mirror of AttGt's sparse ifTable. Used by
-    * q_if_norms and both md5-bootstrap oracles. */
+    * q_if_norms and the bootstrap oracles. */
   private val ifUnitCte: String =
     """tl AS (SELECT t, row_number() OVER (ORDER BY t) AS idx
       |         FROM (SELECT DISTINCT t FROM panel)),
@@ -6018,9 +5930,6 @@ object SparkEntry {
       |  SELECT mk, sqrt(SUM(v * v)) / nn.n AS se
       |  FROM iftot, nn GROUP BY mk, nn.n)""".stripMargin
 
-  /** md5-signed draw matrix over [[ifUnitCte]]'s `u`: 64 Rademacher
-    * draws, sign = top bit of md5("unit#draw#"), bres = contraction /
-    * sqrt(n) — the SQL replay of MBoot.drawMatrixMd5. */
   private[graft] val langIdLangs: Seq[String] =
     TextFunctions.langMarkers.keys.toSeq.sorted
 
@@ -6122,15 +6031,64 @@ object SparkEntry {
       |  count(*) AS n_events, CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
       |FROM s GROUP BY 1, 2""".stripMargin
 
-  private val mbootDmCte: String =
-    """dm AS (
-      |  SELECT u.g, u.tn, r.b AS draw,
-      |    SUM(u.inf * CASE WHEN strpos('01234567',
-      |          substr(md5(CAST(u.id AS VARCHAR) || '#' ||
-      |                     CAST(r.b AS VARCHAR) || '#'), 1, 1)) > 0
-      |        THEN 1.0 ELSE -1.0 END) / sqrt(nn.n) AS bres
-      |  FROM u, range(64) r(b), nn
-      |  GROUP BY u.g, u.tn, r.b, nn.n)""".stripMargin
+  /** DuckDB replay of MBoot over a weighted-IF CTE `w(g, tn, id, inf)`
+    * with its bootstrap size in `wn(n)`: `sg(id, b, s)` holds draw b's
+    * sign of key `id` (-1 iff the top bit of
+    * splitmix64((key64(id) XOR splitmix64(seed)) + (b+1)·Gamma) is set,
+    * key64 = the first 16 hex digits of md5(id)), and
+    * `dm(g, tn, draw, bres)` the contraction `SUM(s * inf) / sqrt(n)`.
+    * splitmix64 runs in UHUGEINT arithmetic mod 2^64. */
+  private def mbootDmCtes(seed: Long, biters: Int): String = {
+    def u(v: BigInt) = s"CAST('$v' AS UHUGEINT)"
+    val m = u(BigInt(1) << 64)
+    val gamma = u(BigInt("9E3779B97F4A7C15", 16))
+    def splitmix(out: String, in: String, carry: String) =
+      s"""${out}_a AS (SELECT $carry(z + $gamma) % $m AS z FROM $in),
+         |${out}_b AS (SELECT $carry(xor(z, z >> 30) * ${u(BigInt("BF58476D1CE4E5B9", 16))}) % $m AS z FROM ${out}_a),
+         |${out}_c AS (SELECT $carry(xor(z, z >> 27) * ${u(BigInt("94D049BB133111EB", 16))}) % $m AS z FROM ${out}_b),
+         |$out AS (SELECT ${carry}xor(z, z >> 31) AS z FROM ${out}_c)""".stripMargin
+    s"""keys AS (SELECT DISTINCT id FROM w),
+       |sd0 AS (SELECT ${u(BigInt(java.lang.Long.toUnsignedString(seed)))} AS z),
+       |${splitmix("sd", "sd0", "")},
+       |kz AS (
+       |  SELECT k.id, r.b,
+       |    CAST(xor(CAST('0x' || substr(md5(CAST(k.id AS VARCHAR)), 1, 16)
+       |                  AS UBIGINT), CAST(sd.z AS UBIGINT)) AS UHUGEINT)
+       |      + CAST(r.b + 1 AS UHUGEINT) * $gamma AS z
+       |  FROM keys k, sd, range($biters) r(b)),
+       |${splitmix("sz", "kz", "id, b, ")},
+       |sg AS (
+       |  SELECT id, b, CASE WHEN z >= ${u(BigInt(1) << 63)} THEN -1.0 ELSE 1.0 END AS s
+       |  FROM sz),
+       |dm AS (
+       |  SELECT w.g, w.tn, sg.b AS draw, SUM(w.inf * sg.s) / sqrt(wn.n) AS bres
+       |  FROM w JOIN sg ON w.id = sg.id, wn
+       |  GROUP BY w.g, w.tn, sg.b, wn.n)""".stripMargin
+  }
+
+  /** MBoot.finish's SEs over [[mbootDmCtes]]: type-1 (inverted-cdf)
+    * quartiles of each cell's `biters` draws selected by explicit rank
+    * ceil(p·B), IQR over (z_0.75 − z_0.25), over sqrt(n); degenerate
+    * cells (sum of squared draws at or below the tolerance) dropped. */
+  private def mbootSeSql(seed: Long, biters: Int): String = {
+    def rank(p: Double) = math.max(math.ceil(p * biters).toInt, 1)
+    s"""${mbootDmCtes(seed, biters)},
+       |rk AS (
+       |  SELECT g, tn, bres,
+       |    row_number() OVER (PARTITION BY g, tn ORDER BY bres) AS rn
+       |  FROM dm),
+       |qq AS (
+       |  SELECT g, tn,
+       |    MAX(CASE WHEN rn = ${rank(0.75)} THEN bres END) AS q75,
+       |    MAX(CASE WHEN rn = ${rank(0.25)} THEN bres END) AS q25,
+       |    SUM(bres * bres) AS ss
+       |  FROM rk GROUP BY g, tn)
+       |SELECT qq.g, qq.tn AS t,
+       |  ROUND((qq.q75 - qq.q25)
+       |        / ${Stats.normPpf(0.75) - Stats.normPpf(0.25)}
+       |        / sqrt(wn.n), 4) AS se
+       |FROM qq, wn WHERE qq.ss > ${Stats.DegenerateTol}""".stripMargin
+  }
 
   /** Bigram-LM scoring replay shared by `q_ngram_ppl` (verbatim) and
     * `q_ppl_buckets` (as a CTE feeding the tercile thresholds). */
@@ -6739,11 +6697,28 @@ object SparkEntry {
     "q_att_gt_cov_reg" -> attCovFixtureSql("attgt_cov_reg.csv"),
     "q_att_gt_cov_ipw" -> attCovFixtureSql("attgt_cov_ipw.csv"),
 
-    // production-bootstrap fixtures: (g, t, se) from the pure-Python
-    // MT19937 + IF-chain replay (gen_mboot_fixture.py), keyed by the
-    // same input fingerprint as q_pretest_wald
-    "q_mboot_se" -> mbootFixtureSql("mboot_se.csv"),
-    "q_mboot_cluster_se" -> mbootFixtureSql("mboot_cluster_se.csv"),
+    // production bootstrap SEs: per-unit IF rebuilt from the raw panel
+    // (q_if_norms' chain), MBoot's signs, draws and quantiles replayed
+    // at the config's B and seed
+    "q_mboot_se" -> withPanelCte(
+      s""", $ifUnitCte,
+        |w AS (SELECT g, tn, id, inf FROM u),
+        |wn AS (SELECT n FROM nn),
+        |${mbootSeSql(PanelView.config.seed, PanelView.config.biters)}""".stripMargin),
+
+    // clustered production bootstrap: clusters = id % 100 rebuilt from
+    // the panel, cluster-mean influence (sum / cluster unit count),
+    // signs keyed by the cluster id, sqrt(nClusters) scaling
+    "q_mboot_cluster_se" -> withPanelCte(
+      s""", $ifUnitCte,
+        |cs AS (SELECT id % 100 AS cluster, COUNT(DISTINCT id) AS csize
+        |       FROM panel GROUP BY 1),
+        |wn AS (SELECT COUNT(*) AS n FROM cs),
+        |w AS (
+        |  SELECT u.g, u.tn, cs.cluster AS id, SUM(u.inf) / cs.csize AS inf
+        |  FROM u JOIN cs ON u.id % 100 = cs.cluster
+        |  GROUP BY u.g, u.tn, cs.cluster, cs.csize),
+        |${mbootSeSql(PanelView.config.seed, PanelView.config.biters)}""".stripMargin),
 
     // production-SimHash fixture: pure-Python XXH64 signatures +
     // banding + Hamming verify (gen_simhash_fixture.py), keyed by the
@@ -6838,68 +6813,15 @@ object SparkEntry {
         |  ROUND(es.att_m + 1.9599639845400545 * s2.se, 4) AS highci
         |FROM es JOIN sse2 s2 ON es.mk = s2.mk""".stripMargin),
 
-    // md5-flavor bootstrap draw matrix: per-unit IF rebuilt from raw
-    // panel (same chain as q_if_norms), signs = top md5 bit of
-    // "unit#draw#", contraction replayed per (cell, draw)
-    "q_mboot_draws_md5" -> withPanelCte(
-      s""", $ifUnitCte, $mbootDmCte
-        |SELECT g, tn AS t, draw, ROUND(bres, 2) AS bres FROM dm""".stripMargin),
-
-    // md5-flavor bootstrap SE: type-1 (inverted-cdf) quantiles of the 64
-    // draws selected by explicit rank (ceil(p*64) = 48/16), IQR scaled
-    // by 2*z_{0.75}, over sqrt(n) — the engine's finish() replayed
-    // clustered md5 bootstrap: clusters = id % 100 rebuilt from panel,
-    // cluster-mean influence (sum / cluster unit count), signs keyed by
-    // the cluster id, sqrt(nClusters) scaling, type-1 quantiles at
-    // rank ceil(p*64)
-    "q_mboot_cluster_se_md5" -> withPanelCte(
+    // production bootstrap draw matrix at 64 draws: per-unit IF rebuilt
+    // from the raw panel, MBoot's signs replayed, contraction per
+    // (cell, draw)
+    "q_mboot_draws" -> withPanelCte(
       s""", $ifUnitCte,
-        |cs AS (SELECT id % 100 AS cluster, COUNT(DISTINCT id) AS csize
-        |       FROM panel GROUP BY 1),
-        |nc AS (SELECT COUNT(*) AS n FROM cs),
-        |cu AS (
-        |  SELECT u.g, u.tn, u.id % 100 AS cluster, SUM(u.inf) AS inf
-        |  FROM u GROUP BY 1, 2, 3),
-        |cdm AS (
-        |  SELECT cu.g, cu.tn, r.b AS draw,
-        |    SUM(cu.inf / cs.csize * CASE WHEN strpos('01234567',
-        |          substr(md5(CAST(cu.cluster AS VARCHAR) || '#' ||
-        |                     CAST(r.b AS VARCHAR) || '#'), 1, 1)) > 0
-        |        THEN 1.0 ELSE -1.0 END) / sqrt(nc.n) AS bres
-        |  FROM cu, cs, range(64) r(b), nc
-        |  WHERE cu.cluster = cs.cluster
-        |  GROUP BY cu.g, cu.tn, r.b, nc.n),
-        |crk AS (
-        |  SELECT g, tn, bres,
-        |    row_number() OVER (PARTITION BY g, tn ORDER BY bres) AS rn
-        |  FROM cdm),
-        |cqq AS (
-        |  SELECT g, tn,
-        |    MAX(CASE WHEN rn = 48 THEN bres END) AS q75,
-        |    MAX(CASE WHEN rn = 16 THEN bres END) AS q25,
-        |    SUM(bres * bres) AS ss
-        |  FROM crk GROUP BY g, tn)
-        |SELECT cqq.g, cqq.tn AS t,
-        |  ROUND((cqq.q75 - cqq.q25) / ${2 * Stats.normPpf(0.75)}
-        |        / sqrt(nc.n), 4) AS se
-        |FROM cqq, nc WHERE cqq.ss > ${Stats.DegenerateTol}""".stripMargin),
-
-    "q_mboot_se_md5" -> withPanelCte(
-      s""", $ifUnitCte, $mbootDmCte,
-        |rk AS (
-        |  SELECT g, tn, bres,
-        |    row_number() OVER (PARTITION BY g, tn ORDER BY bres) AS rn
-        |  FROM dm),
-        |qq AS (
-        |  SELECT g, tn,
-        |    MAX(CASE WHEN rn = 48 THEN bres END) AS q75,
-        |    MAX(CASE WHEN rn = 16 THEN bres END) AS q25,
-        |    SUM(bres * bres) AS ss
-        |  FROM rk GROUP BY g, tn)
-        |SELECT qq.g, qq.tn AS t,
-        |  ROUND((qq.q75 - qq.q25) / ${2 * Stats.normPpf(0.75)}
-        |        / sqrt(nn.n), 4) AS se
-        |FROM qq, nn WHERE qq.ss > ${Stats.DegenerateTol}""".stripMargin),
+        |w AS (SELECT g, tn, id, inf FROM u),
+        |wn AS (SELECT n FROM nn),
+        |${mbootDmCtes(PanelView.config.seed, MbootDraws)}
+        |SELECT g, tn AS t, draw, ROUND(bres, 2) AS bres FROM dm""".stripMargin),
 
     "q_aggte_simple" -> withPanelCte(
       s""", $cellMeansCte,

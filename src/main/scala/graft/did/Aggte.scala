@@ -58,7 +58,7 @@ object Aggte {
       else
         pp.df.groupBy(col("rowid").cast("string").as("rowid"))
           .agg(avg("w1").as("wbar"), avg("gg").as("gbar"))
-    val units = units0.persist()
+    val units = Preprocess.persistOnce(units0)
 
     // na_rm pruning (`csdids/ATTgt.py:565-590`) or NaN rejection.
     val keep = fit.cells.indices.filter(i => !fit.att(i).isNaN).toArray

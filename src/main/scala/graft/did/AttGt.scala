@@ -2,7 +2,6 @@ package graft.did
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import breeze.linalg.DenseMatrix
 
 /** One (g,t) cell definition, resolved at the driver from tlist/glist
@@ -145,7 +144,10 @@ object AttGt {
       }
     val (att, post, skipped, ifTable, seSSPre) = fitres
 
-    ifTable.persist(StorageLevel.MEMORY_AND_DISK)
+    // DistributedPanel and DistributedRc persist their IF table before
+    // dropping the input it is computed from; the other paths leave it
+    // to here
+    Preprocess.persistOnce(ifTable)
 
     // Analytic per-cell SE: sqrt(mean(IF^2)/n) over all n units (absent
     // units contribute IF=0, so one aggregation over the sparse table) —

@@ -1,10 +1,10 @@
 package graft.did
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets
+import java.security.MessageDigest
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.commons.math3.random.MersenneTwister
-import scala.util.hashing.MurmurHash3
 
 final case class MBootResult(
     bres: Array[Array[Double]], // biters x K
@@ -53,193 +53,95 @@ final case class MBootResult(
   * (`csdids/mboot.py:63-143`).
   *
   * The influence matrix lives as the sparse long-form `ifTable`
-  * (rowid, cell, inf). Two executions produce the same `bres`:
+  * (rowid, cell, inf). Draw `b` multiplies every row of key `k` (the
+  * rowid string, or the cluster id when clustered) by one sign, -1 iff
+  * the top bit of
+  * `splitmix64((key64(k) XOR splitmix64(seed)) + (b+1)·Gamma)` is set,
+  * where `key64(k)` is the first 8 bytes, big-endian, of `md5(utf8(k))`.
+  * The sign is a pure function of (seed, k, b): a unit draws the same
+  * signs whatever other units the table holds and however it is
+  * partitioned, and DuckDB replays it in SQL (the `q_mboot_*` oracles
+  * in `SparkEntry`).
   *
-  *  - driver path (n*K small): collect the sparse triplets and loop like
-  *    the reference (seeded, deterministic);
-  *  - distributed path: one `Aggregator` pass computes, per cell, the
-  *    vector of B sign-weighted sums. Signs are a pure function
-  *    `murmur3(rowid, b, seed)` so every cell sees the SAME draw for a
-  *    given unit regardless of partitioning — the property the
-  *    reference gets from materializing Ub per iteration.
+  * One execution, one Spark job: the table is coalesced (no shuffle) to
+  * at most the default parallelism, each partition folds its rows into
+  * one B x K buffer of signed sums (caching each key's B sign bits, ~250
+  * bytes per distinct key of a partition at B = 1000), and the driver
+  * adds the buffers in partition order, so a rerun over the same table
+  * is bit-identical.
   *
   * Quantiles are exact type-1 (`inverted_cdf`) per `mboot.py:128-137`;
   * Spark's percentile_approx is NOT acceptable here (SURVEY.md §7.6).
   */
 object MBoot {
 
-  /** Deterministic Rademacher sign for (unit, draw). */
-  @inline def sign(rowidHash: Int, b: Int, seed: Long): Double = {
-    val h = MurmurHash3.mix(MurmurHash3.mix(seed.toInt, rowidHash), b)
-    val f = MurmurHash3.finalizeHash(h, 2)
-    if ((f & 1) == 0) 1.0 else -1.0
+  private val Gamma = 0x9E3779B97F4A7C15L
+
+  /** splitmix64 of `z0`: the mixer of `GridRehearsal` and
+    * `didbench.Panels`. */
+  private def splitmix64(z0: Long): Long = {
+    var z = z0 + Gamma
+    z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+    z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
+    z ^ (z >>> 31)
   }
 
+  /** Draw `b`'s sign bit (1 = sign -1) for a key whose `key64` has been
+    * XORed with `splitmix64(seed)`. */
+  @inline private def signBit(keyMix: Long, b: Int): Long =
+    splitmix64(keyMix + (b + 1L) * Gamma) >>> 63
+
   def run(ifTable: DataFrame, k: Int, n: Long, biters: Int, alp: Double,
-      seed: Long, maxDriverEntries: Long = 20L * 1000 * 1000): MBootResult = {
+      seed: Long): MBootResult = {
     // fail at the configuration site, not lazily at first .cov access
     require(biters >= 2,
       s"mboot needs biters >= 2 (SE and ddof=1 covariance), got $biters")
-    val nnz = ifTable.count()
-    val outMat: Array[Array[Double]] =
-      if (nnz <= maxDriverEntries) driverBoot(ifTable, k, n, biters, seed)
-      else distributedBoot(ifTable, k, n, biters, seed)
+    val seedMix = splitmix64(seed)
+    val parts = ifTable
+      .select(col("rowid").cast("string"), col("cell"), col("inf")).rdd
+      .coalesce(ifTable.sparkSession.sparkContext.defaultParallelism)
+      .mapPartitions(rows =>
+        Iterator.single(signedSums(rows, k, biters, seedMix)))
+      .collect()
+    // finish() takes the per-draw means
+    val outMat = Array.tabulate(biters, k) { (b, c) =>
+      parts.foldLeft(0.0)((acc, buf) => acc + buf(c * biters + b)) / n
+    }
     finish(outMat, k, n, alp)
   }
 
-  /** Driver loop over collected sparse triplets — mirrors
-    * `multiplier_bootstrap` (`csdids/mboot.py:17-31`) with a seeded
-    * MersenneTwister instead of global numpy state. */
-  private def driverBoot(ifTable: DataFrame, k: Int, n: Long, biters: Int,
-      seed: Long): Array[Array[Double]] = {
-    val triplets = ifTable.collect().map { r =>
-      (r.get(0).toString, r.getInt(1), r.getDouble(2))
-    }
-    val units = triplets.map(_._1).distinct.sorted
-    val unitIdx = units.zipWithIndex.toMap
-    // resolve to primitive index arrays ONCE — the B x nnz inner loop
-    // must not do per-entry hash lookups
-    val nnz = triplets.length
-    val uIx = new Array[Int](nnz)
-    val cIx = new Array[Int](nnz)
-    val infs = new Array[Double](nnz)
-    var t = 0
-    while (t < nnz) {
-      uIx(t) = unitIdx(triplets(t)._1)
-      cIx(t) = triplets(t)._2
-      infs(t) = triplets(t)._3
-      t += 1
-    }
-    // the MT draw stream is sequential BY CONTRACT (b-major over
-    // units — the fixture replays it draw for draw), but the
-    // contraction is embarrassingly parallel over b: pre-draw every
-    // sign into a bitset (one bit per (b, unit): ~19 MB at 150k units
-    // x 1000 draws where a double matrix would be 1.2 GB), then fan
-    // the B x nnz inner loop across cores. Per-draw accumulation
-    // order (t ascending) is unchanged, so results are BIT-IDENTICAL
-    // to the sequential loop — r14: the warm bootstrap pass at 10x
-    // was serialized on one core (7.5 s) while 31 sat idle.
-    val rng = new MersenneTwister(seed)
-    val nU = units.length
-    val signs = new java.util.BitSet(biters * nU)
-    var b = 0
-    var idx = 0
-    while (b < biters) {
-      var i = 0
-      while (i < nU) {
-        if (rng.nextBoolean()) signs.set(idx)
-        i += 1; idx += 1
-      }
-      b += 1
-    }
-    val out = Array.ofDim[Double](biters, k)
-    java.util.stream.IntStream.range(0, biters).parallel().forEach { bb =>
-      val base = bb * nU
-      val acc = new Array[Double](k)
-      var tt = 0
-      while (tt < nnz) {
-        val s = if (signs.get(base + uIx(tt))) 1.0 else -1.0
-        acc(cIx(tt)) += infs(tt) * s
-        tt += 1
-      }
-      var j = 0
-      while (j < k) { out(bb)(j) = acc(j) / n; j += 1 }
-    }
-    out
-  }
-
-  private final case class BootBuf(sums: Array[Double])
-
-  /** Distributed path: per cell, accumulate B sign-weighted sums in one
-    * shuffle-light pass (K groups, each carrying a length-B buffer). */
-  private def distributedBoot(ifTable: DataFrame, k: Int, n: Long,
-      biters: Int, seed: Long): Array[Array[Double]] = {
-    val spark = ifTable.sparkSession
-    import spark.implicits._
-
-    val agg = new Aggregator[(Int, Int, Double), Array[Double], Array[Double]] {
-      def zero: Array[Double] = new Array[Double](biters)
-      def reduce(buf: Array[Double], in: (Int, Int, Double)): Array[Double] = {
-        val ridHash = in._1
-        val inf = in._3
+  /** One partition's B x K signed sums, cell-major
+    * (`buf(cell * biters + b) = sum of s_b(rowid) * inf`). */
+  private def signedSums(rows: Iterator[Row], k: Int, biters: Int,
+      seedMix: Long): Array[Double] = {
+    val buf = new Array[Double](k * biters)
+    val words = (biters + 63) >>> 6
+    val bitsOf = new java.util.HashMap[String, Array[Long]]()
+    val md5 = MessageDigest.getInstance("MD5")
+    rows.foreach { r =>
+      val key = r.getString(0)
+      var bits = bitsOf.get(key)
+      if (bits == null) {
+        val d = md5.digest(key.getBytes(StandardCharsets.UTF_8))
+        val keyMix = ByteBuffer.wrap(d).getLong ^ seedMix
+        bits = new Array[Long](words)
         var b = 0
-        while (b < biters) { buf(b) += inf * sign(ridHash, b, seed); b += 1 }
-        buf
+        while (b < biters) {
+          bits(b >>> 6) |= signBit(keyMix, b) << (b & 63); b += 1
+        }
+        bitsOf.put(key, bits)
       }
-      def merge(a: Array[Double], b: Array[Double]): Array[Double] = {
-        var i = 0
-        while (i < a.length) { a(i) += b(i); i += 1 }
-        a
-      }
-      def finish(buf: Array[Double]): Array[Double] = buf
-      def bufferEncoder: Encoder[Array[Double]] =
-        implicitly[Encoder[Array[Double]]]
-      def outputEncoder: Encoder[Array[Double]] =
-        implicitly[Encoder[Array[Double]]]
-    }
-
-    val rows = ifTable
-      .select(hash(col("rowid")).as("rh"), col("cell"), col("inf"))
-      .as[(Int, Int, Double)]
-      .groupByKey(_._2)
-      .agg(agg.toColumn)
-      .collect()
-
-    val out = Array.ofDim[Double](biters, k)
-    rows.foreach { case (cell, sums) =>
+      // s * inf without a branch: a set bit flips inf's sign bit
+      val inf = java.lang.Double.doubleToRawLongBits(r.getDouble(2))
+      val base = r.getInt(1) * biters
       var b = 0
-      while (b < biters) { out(b)(cell) = sums(b) / n; b += 1 }
+      while (b < biters) {
+        buf(base + b) += java.lang.Double.longBitsToDouble(
+          inf ^ (((bits(b >>> 6) >>> (b & 63)) & 1L) << 63))
+        b += 1
+      }
     }
-    out
-  }
-
-  /** Engine-replayable (md5-keyed) Rademacher sign for (unit, draw):
-    * +1 iff the top bit of md5("rowid#draw#salt") is 0 (first hex char
-    * in 0..7) — derivable by any SQL engine with an md5(), unlike the
-    * production murmur3 [[sign]]. Pure column function: the same draw
-    * for a unit on every partition, no RNG state. */
-  def md5Sign(rowid: Column, draw: Column, salt: String = ""): Column =
-    when(conv(substring(md5(concat(rowid.cast("string"), lit("#"),
-      draw.cast("string"), lit("#"), lit(salt))), 1, 1), 16, 10) < 8,
-      1.0).otherwise(-1.0)
-
-  /** md5-flavor draw matrix (cell, draw, bres): one distributed
-    * explode + groupBy pass, bres = sum(inf * sign) / sqrt(n) — exactly
-    * the scaled per-draw statistic [[finish]] consumes (`bres` rows of
-    * `csdids/mboot.py:106`). This is the DuckDB-oracle twin of
-    * [[distributedBoot]]: same sparse-IF contraction, signs replayable
-    * in SQL so the bootstrap numbers themselves get hash-checked. */
-  def drawMatrixMd5(ifTable: DataFrame, n: Long, biters: Int,
-      salt: String = ""): DataFrame =
-    ifTable
-      .select(col("rowid"), col("cell"), col("inf"),
-        explode(sequence(lit(0), lit(biters - 1))).as("draw"))
-      .groupBy("cell", "draw")
-      .agg((sum(col("inf") * md5Sign(col("rowid"), col("draw"), salt))
-        / math.sqrt(n.toDouble)).as("bres"))
-
-  /** Full bootstrap over md5 draws, through the SAME [[finish]] as
-    * production (sqrt(n) scale, degenerate drop, type-1 IQR SE, sup-t
-    * critical value). */
-  def runMd5(ifTable: DataFrame, k: Int, n: Long, biters: Int, alp: Double,
-      salt: String = ""): MBootResult =
-    finishFromMd5Draws(drawMatrixMd5(ifTable, n, biters, salt), k, n,
-      biters, alp)
-
-  /** [[runMd5]] split at the draw matrix, so a caller serving BOTH the
-    * draw-matrix query and the SE query can build (and persist) the
-    * explode+groupBy pass once and feed it to each. */
-  def finishFromMd5Draws(draws: DataFrame, k: Int, n: Long, biters: Int,
-      alp: Double): MBootResult = {
-    require(biters >= 2,
-      s"mboot needs biters >= 2 (SE and ddof=1 covariance), got $biters")
-    val sqrtN = math.sqrt(n.toDouble)
-    val out = Array.ofDim[Double](biters, k)
-    draws.collect().foreach { r =>
-      // finish() expects the un-scaled per-draw mean (sum / n)
-      out(r.getInt(1))(r.getInt(0)) = r.getDouble(2) / sqrtN
-    }
-    finish(out, k, n, alp)
+    buf
   }
 
   /** `sqrt(n)` scale, degenerate-dim drop, IQR-based SE and sup-t critical
@@ -278,10 +180,13 @@ object MBoot {
     MBootResult(bres, se, critVal)
   }
 
-  /** Cluster-mean influence table (rowid := cluster id) plus the
-    * cluster count — the shared front half of both clustered flavors. */
-  private def clusterSized(ifTable: DataFrame, clusters: DataFrame)
-      : (DataFrame, Long) = {
+  /** Cluster bootstrap, intended semantics (the reference's own cluster
+    * path is pandas-on-Spark and raises — SURVEY.md §2.8): cluster-mean
+    * influence (rowid := cluster id, signs keyed by it), then bootstrap
+    * over clusters. `clusters` maps rowid -> cluster id (string columns
+    * `rowid`, `cluster`); built distributed by the caller. */
+  def runClustered(ifTable: DataFrame, clusters: DataFrame, k: Int,
+      biters: Int, alp: Double, seed: Long): MBootResult = {
     val clustered = ifTable.join(clusters, "rowid")
       .groupBy("cluster", "cell").agg(sum("inf").as("inf"))
     val nClusters = clusters.select("cluster").distinct().count()
@@ -290,7 +195,7 @@ object MBoot {
         "cluster")
       .select(col("cluster").as("rowid"), col("cell"),
         (col("inf") / col("csize")).as("inf"))
-    (sized, nClusters)
+    run(sized, k, nClusters, biters, alp, seed)
   }
 
   /** The panel's rowid -> cluster map (string columns `rowid`,
@@ -328,24 +233,5 @@ object MBoot {
         runClustered(ifTable, cl, k, cfg.biters, cfg.alp, cfg.seed)
       case None => run(ifTable, k, pp.n, cfg.biters, cfg.alp, cfg.seed)
     }
-  }
-
-  /** Cluster bootstrap, intended semantics (the reference's own cluster
-    * path is pandas-on-Spark and raises — SURVEY.md §2.8): cluster-mean
-    * influence, then bootstrap over clusters. `clusterOf` maps rowid ->
-    * cluster id; built distributed by the caller. */
-  def runClustered(ifTable: DataFrame, clusters: DataFrame, k: Int,
-      biters: Int, alp: Double, seed: Long): MBootResult = {
-    val (sized, nClusters) = clusterSized(ifTable, clusters)
-    run(sized, k, nClusters, biters, alp, seed)
-  }
-
-  /** Clustered bootstrap over md5 draws (signs keyed by the CLUSTER id)
-    * — the oracle-checkable twin of [[runClustered]], same
-    * cluster-mean sizing, same [[finish]]. */
-  def runClusteredMd5(ifTable: DataFrame, clusters: DataFrame, k: Int,
-      biters: Int, alp: Double, salt: String = ""): MBootResult = {
-    val (sized, nClusters) = clusterSized(ifTable, clusters)
-    runMd5(sized, k, nClusters, biters, alp, salt)
   }
 }

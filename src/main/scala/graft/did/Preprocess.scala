@@ -37,6 +37,14 @@ final case class PreprocessedPanel(
   */
 object Preprocess {
 
+  /** `df` persisted MEMORY_AND_DISK, unless its plan is already cached,
+    * by the path that built it or by an identical computation a caller
+    * still holds: persisting again is a no-op that Spark warns about. */
+  private[did] def persistOnce(df: DataFrame): DataFrame =
+    if (df.storageLevel == StorageLevel.NONE)
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+    else df
+
   def run(data: DataFrame, cfg: AttGtConfig): PreprocessedPanel =
     // Runs directly on the caller's session, mutating NO conf — so no
     // session scoping is needed (AttGt.fit clones because it genuinely
@@ -66,10 +74,9 @@ object Preprocess {
     val covs = cfg.covariates.filter(_ != Formula.InterceptCol)
     val roleCols =
       (Seq(idname, tname, yname, gname) ++ clustervar.toSeq ++ covs).distinct
-    val projected = data
+    val projected = persistOnce(data
       .withColumn("w", weightsName.map(col).getOrElse(lit(1.0)).cast("double"))
-      .select((roleCols.map(col) :+ col("w")): _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .select((roleCols.map(col) :+ col("w")): _*))
     // ONE action: total rows + all-null rows (the `na.drop('all')`
     // diagnostic, ATTgt.py:98-102) + the time/cohort cardinality guard —
     // also materializes the cache.
@@ -200,14 +207,12 @@ object Preprocess {
       // Fresh sample each period: synthesize a stable row id. A bare
       // monotonically_increasing_id is non-deterministic across
       // recomputation (SURVEY.md §2.2) — persist immediately to pin it.
-      df = df.withColumn("rowid", monotonically_increasing_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      df = persistOnce(df.withColumn("rowid", monotonically_increasing_id()))
     } else {
       df = df.withColumn("rowid", col(idname))
     }
 
-    df = df.withColumn("w1", col("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    df = persistOnce(df.withColumn("w1", col("w")))
 
     // Unit count n (ATTgt.py:188): the default regimes read the single
     // cohort-scan's totals; only the NON-default balanced-panel regime

@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 /** Differentially-private aggregate release.
   *
   * The Laplace mechanism over group counts, with the noise draw
-  * DERANDOMIZED the same way as the engine's bootstrap draws and JL
-  * projection (MBoot.drawMatrixMd5 / EmbedAlgebra.randomProject): the
-  * uniform comes from the md5 of `salt || groupKey`, so the release is
+  * DERANDOMIZED the same way as the engine's JL projection
+  * (EmbedAlgebra.randomProject): the uniform comes from the md5 of
+  * `salt || groupKey`, so the release is
   * a pure function of (salt, data) — reproducible across runs AND
   * bit-replayable by the SQL oracle.
   *

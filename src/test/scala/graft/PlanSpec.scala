@@ -313,17 +313,6 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("md5 draw matrix: one aggregation pass over the exploded draws") {
-    withStaticPlan {
-      val f = SparkEntry.queries("q_mboot_draws_md5")(spark, dir)
-      val plan = planOf(f)
-      assert(plan.contains("Generate explode"), s"no draw fan-out:\n$plan")
-      assert(plan.contains("partial_sum") || plan.contains("partial_"),
-        s"no map-side partial aggregate:\n$plan")
-      assert(!plan.contains("CartesianProduct"), s"cartesian in:\n$plan")
-    }
-  }
-
   test("lsh buckets are computed map-only at the scan") {
     withStaticPlan {
       val df = SparkEntry.queries("q_ann_lsh_buckets")(spark, dir)

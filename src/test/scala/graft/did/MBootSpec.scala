@@ -56,55 +56,80 @@ class MBootSpec extends AnyFunSuite with SparkSpec {
     assert(ex.getMessage.contains("biters"))
   }
 
-  test("distributed path agrees distributionally with driver path") {
-    val driver = MBoot.run(fit.ifTable, fit.cells.length, fit.pp.n,
-      999, 0.05, 5L)
-    val dist = MBoot.run(fit.ifTable, fit.cells.length, fit.pp.n,
-      999, 0.05, 5L, maxDriverEntries = 0L)
-    driver.se.indices.foreach { i =>
-      if (!driver.se(i).isNaN)
-        assert(math.abs(driver.se(i) - dist.se(i)) / driver.se(i) < 0.25,
-          s"dim $i: ${driver.se(i)} vs ${dist.se(i)}")
+  /** Same draws up to summation order: every bres entry within 1e-12 of
+    * the largest magnitude in its draw column (an entry that cancels to
+    * near 0 still carries the rounding of its column's terms); se and
+    * critVal within 1e-12 relative. */
+  private def assertAgree(a: MBootResult, b: MBootResult, tag: String): Unit = {
+    def close(x: Double, y: Double, scale: Double) =
+      x == y || (x.isNaN && y.isNaN) || math.abs(x - y) <= 1e-12 * scale
+    assert(a.bres.length == b.bres.length, tag)
+    a.se.indices.foreach { j =>
+      val scale = a.bres.map(r => math.abs(r(j))).max
+      a.bres.indices.foreach { d =>
+        assert(close(a.bres(d)(j), b.bres(d)(j), scale),
+          s"$tag: bres($d)($j) ${a.bres(d)(j)} vs ${b.bres(d)(j)}")
+      }
+      assert(close(a.se(j), b.se(j), math.abs(a.se(j))),
+        s"$tag: se($j) ${a.se(j)} vs ${b.se(j)}")
     }
-    assert(math.abs(driver.critVal - dist.critVal) / driver.critVal < 0.25)
+    assert(close(a.critVal, b.critVal, math.abs(a.critVal)),
+      s"$tag: critVal ${a.critVal} vs ${b.critVal}")
   }
 
-  test("md5 draw matrix matches an independent driver-side replay") {
-    val biters = 16
-    val dm = MBoot.drawMatrixMd5(fit.ifTable, fit.pp.n, biters)
-      .collect()
-      .map(r => ((r.getInt(0), r.getInt(1)), r.getDouble(2))).toMap
-    // independent replay: MessageDigest over the same key, top bit rule
+  test("1, 7 and 64 partitions give the same bres, se and critVal") {
+    val runs = Seq(1, 7, 64).map { p =>
+      p -> MBoot.run(fit.ifTable.repartition(p), fit.cells.length, fit.pp.n,
+        199, 0.05, 3L)
+    }
+    runs.tail.foreach { case (p, r) =>
+      assertAgree(runs.head._2, r, s"1 vs $p partitions")
+    }
+  }
+
+  test("an independent replay of signs and contraction agrees at 1e-12") {
+    val (biters, seed, k, n) = (199, 3L, fit.cells.length, fit.pp.n)
+    val gamma = 0x9E3779B97F4A7C15L
+    def splitmix64(x: Long): Long = {
+      val z1 = x + gamma
+      val z2 = (z1 ^ (z1 >>> 30)) * 0xBF58476D1CE4E5B9L
+      val z3 = (z2 ^ (z2 >>> 27)) * 0x94D049BB133111EBL
+      z3 ^ (z3 >>> 31)
+    }
     val md = java.security.MessageDigest.getInstance("MD5")
-    val expected = scala.collection.mutable.Map
-      .empty[(Int, Int), Double].withDefaultValue(0.0)
-    fit.ifTable.collect().foreach { r =>
-      val rowid = r.get(0).toString
-      val cell = r.getInt(1)
-      val inf = r.getDouble(2)
-      (0 until biters).foreach { b =>
-        md.reset()
-        val d = md.digest(s"$rowid#$b#".getBytes("UTF-8"))
-        val sgn = if ((d(0) & 0x80) == 0) 1.0 else -1.0
-        expected((cell, b)) += inf * sgn
-      }
+    def key64(k: String): Long =
+      md.digest(k.getBytes("UTF-8")).take(8)
+        .foldLeft(0L)((acc, byte) => (acc << 8) | (byte & 0xffL))
+    // dense units x cells IF matrix from the collected triplets
+    val triplets = fit.ifTable.collect()
+      .map(r => (r.get(0).toString, r.getInt(1), r.getDouble(2)))
+    val units = triplets.map(_._1).distinct
+    val row = units.zipWithIndex.toMap
+    val dense = Array.ofDim[Double](units.length, k)
+    triplets.foreach { case (u, c, v) => dense(row(u))(c) += v }
+    val out = Array.ofDim[Double](biters, k)
+    for (u <- units.indices; b <- 0 until biters) {
+      val z = splitmix64((key64(units(u)) ^ splitmix64(seed)) +
+        (b + 1).toLong * gamma)
+      val s = if (z < 0) -1.0 else 1.0
+      (0 until k).foreach(c => out(b)(c) += s * dense(u)(c))
     }
-    val sqrtN = math.sqrt(fit.pp.n.toDouble)
-    assert(dm.nonEmpty)
-    dm.foreach { case (key, v) =>
-      val e = expected(key) / sqrtN
-      assert(math.abs(v - e) <= 1e-9 * math.max(1.0, math.abs(e)),
-        s"$key: engine $v vs replay $e")
-    }
-    // md5 flavor through finish() lands near the production bootstrap
-    val md5se = MBoot.runMd5(fit.ifTable, fit.cells.length, fit.pp.n,
-      199, 0.05).se
-    val prod = MBoot.run(fit.ifTable, fit.cells.length, fit.pp.n,
-      199, 0.05, 5L).se
-    prod.indices.filterNot(i => prod(i).isNaN || md5se(i).isNaN)
-      .foreach { i =>
-        assert(math.abs(prod(i) - md5se(i)) / prod(i) < 0.3,
-          s"dim $i: prod ${prod(i)} vs md5 ${md5se(i)}")
-      }
+    val replay = MBoot.finish(out.map(_.map(_ / n)), k, n, 0.05)
+    val engine = MBoot.run(fit.ifTable, k, n, biters, 0.05, seed)
+    assertAgree(replay, engine, "replay vs engine")
+  }
+
+  test("a unit with an all-zero IF leaves bres bit-identical") {
+    import spark.implicits._
+    // one partition, so both runs add the original rows in one order
+    val base = fit.ifTable.coalesce(1)
+    val zeroUnit = fit.cells.indices.map(c => ("extra-unit", c, 0.0))
+      .toDF("rowid", "cell", "inf")
+    val k = fit.cells.length
+    val without = MBoot.run(base, k, fit.pp.n, 199, 0.05, 3L)
+    val withZero = MBoot.run(base.union(zeroUnit), k, fit.pp.n, 199, 0.05, 3L)
+    def bits(r: MBootResult) =
+      r.bres.toSeq.map(_.toSeq.map(java.lang.Double.doubleToLongBits))
+    assert(bits(without) == bits(withZero))
   }
 }
