@@ -79,12 +79,25 @@ object Aggte {
     val tlistR = t.distinct.sorted
 
     // pg: cohort probability weights pg[g] = mean(wbar * 1{gbar==g})
-    // (`csdids/ATTgt.py:637-646`) — one groupBy pass. One generated agg
-    // column per cohort would be the same single pass but blows up
-    // codegen at many cohorts (10k cohorts = 10k expressions).
+    // (`csdids/ATTgt.py:637-646`) — one pass over the units, which also
+    // materializes their cache, each partition folded into a driver-side
+    // cohort -> sum map (no SQL aggregate to generate code for), added
+    // in partition order.
     val n = pp.n
-    val sums = units.groupBy("gbar").agg(sum("wbar").as("sw")).collect()
-      .map(r => r.getDouble(0) -> r.getDouble(1)).toMap
+    val sums = units.select("gbar", "wbar").queryExecution.toRdd
+      .mapPartitions { rows =>
+        val m = scala.collection.mutable.LinkedHashMap.empty[Double, Double]
+        rows.foreach { r =>
+          if (!r.isNullAt(0) && !r.isNullAt(1))
+            m(r.getDouble(0)) = m.getOrElse(r.getDouble(0), 0.0) + r.getDouble(1)
+        }
+        Iterator.single(m.toSeq)
+      }.collect()
+      .foldLeft(Map.empty[Double, Double]) { (acc, part) =>
+        part.foldLeft(acc) { case (a, (g, sw)) =>
+          a.updated(g, a.getOrElse(g, 0.0) + sw)
+        }
+      }
     val pgByCohort =
       pp.glist.map(g => g -> sums.getOrElse(g, 0.0) / n).toMap
     val pg = origCohort.map(pgByCohort)

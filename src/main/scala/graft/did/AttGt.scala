@@ -94,17 +94,15 @@ object AttGt {
         "the repeated-cross-section regime; pass customRc instead or set " +
         "allowUnbalancedPanel=false")
 
-    // Every internal query here aggregates to K = #cells rows, and the
-    // only join is a broadcast of the tiny grid — AQE has nothing to
-    // re-plan but adds a planning round + extra jobs to each of the
-    // ~(IRLS iters + 5) passes. Scoped off on an INTERNAL session clone
-    // (own SQLConf, shared context + cache), so the caller's session conf
-    // is never touched and concurrent fits/queries cannot interleave.
-    val scoped = org.apache.spark.sql.graftbridge.SessionScope
-      .cloned(pp.df.sparkSession)
-    scoped.conf.set("spark.sql.adaptive.enabled", "false")
-    val ppScoped = pp.copy(df = org.apache.spark.sql.graftbridge.SessionScope
-      .rebind(pp.df, scoped))
+    // Every internal pass here reduces to K = #cells rows or joins a
+    // broadcast of a tiny driver-built table: AQE has nothing to re-plan
+    // but adds a planning round and extra jobs to each of them. So the
+    // fit plans on the caller session's engine session (AQE off, the
+    // caller's conf otherwise), never touching the caller's conf. The
+    // engine session is made once per caller session and reused, so a
+    // repeated fit finds its generated code cached (SessionScope).
+    val ppScoped = pp.copy(
+      df = org.apache.spark.sql.graftbridge.SessionScope.onEngine(pp.df))
     fitInner(ppScoped, estMethod, basePeriod, bstrap, customRc, customPanel,
       maxDriverCellRows)
   }
@@ -158,10 +156,9 @@ object AttGt {
       case Some(ss) =>
         ss.indices.foreach(i => seA(i) = math.sqrt(ss(i)) / n)
       case None =>
-        ifTable.groupBy("cell").agg(sum(col("inf") * col("inf")).as("ss"))
-          .collect().foreach { r =>
-            seA(r.getInt(0)) = math.sqrt(r.getDouble(1)) / n
-          }
+        cellSumSq(ifTable, cells.length).zipWithIndex.foreach {
+          case (ss, i) => seA(i) = math.sqrt(ss) / n
+        }
     }
 
     val (se, crit) =
@@ -245,37 +242,34 @@ object AttGt {
     * 2x2 difference-in-means and its influence function to
     * `sign * w * (y - mu_dt) * ncell / sw_dt` per (D,post) bucket; all
     * propensity/outcome-regression estimation-effect corrections vanish.
+    *
+    * A cell's four (D, post) buckets are unions of (cohort, period)
+    * groups of rows, so the statistics come from one pass of per-group
+    * sums ([[groupSums]]), and the IF pass joins each row's group to its
+    * cells' constants: one broadcast equi-join of a driver-built table.
     */
   private def fitRcDistributed(
       pp: PreprocessedPanel, cells: Vector[CellDef], estMethod: String)
       : (Array[Double], Array[Int], Array[Boolean], DataFrame) = {
     val spark = pp.df.sparkSession
     import spark.implicits._
-    val lf = longForm(pp, cells)
-
-    // the stat pass reduces to K = #cells rows — a handful of reduce
-    // partitions is right at any scale. Restored on every exit: early
-    // on success (the rowid-level IF aggregation below needs data-sized
-    // partitioning), by the finally on exceptions.
-    val shuffleNarrow = new ShuffleNarrow(spark, 4)
-    try {
-
-    def bucket(dv: Int, pv: Int): Column =
-      (col("d") === dv) && (col("pst") === pv)
-    def wsum(dv: Int, pv: Int): Column =
-      sum(when(bucket(dv, pv), col("w1")).otherwise(0.0))
-    def wysum(dv: Int, pv: Int): Column =
-      sum(when(bucket(dv, pv), col("w1") * col("yy")).otherwise(0.0))
-    def cnt(dv: Int, pv: Int): Column =
-      sum(when(bucket(dv, pv), 1L).otherwise(0L))
-
-    val statRows = lf.groupBy("cell").agg(
-      count(lit(1)).as("ncell"),
-      wsum(1, 1).as("w11"), wysum(1, 1).as("wy11"), cnt(1, 1).as("c11"),
-      wsum(1, 0).as("w10"), wysum(1, 0).as("wy10"), cnt(1, 0).as("c10"),
-      wsum(0, 1).as("w01"), wysum(0, 1).as("wy01"), cnt(0, 1).as("c01"),
-      wsum(0, 0).as("w00"), wysum(0, 0).as("wy00"), cnt(0, 0).as("c00")
-    ).collect()
+    val groups = groupSums(pp.df)
+    val cohorts = groups.keys.map(_._1).toVector.distinct.sorted
+    val nyt = pp.config.controlGroup == "notyettreated"
+    // the control cohorts of a cell: never treated, plus (not-yet-treated
+    // control group) the cohorts first treated after n2val, like longForm
+    def controls(c: CellDef): Vector[Double] = cohorts.filter(gc =>
+      gc == 0.0 || (nyt && gc > c.n2val && gc != c.g))
+    // a cell's buckets: (cohorts, period) for (1,1), (1,0), (0,1), (0,0)
+    def buckets(c: CellDef): Seq[(Seq[Double], Double)] = {
+      val ctl = controls(c)
+      Seq((Seq(c.g), c.tn), (Seq(c.g), c.tpre), (ctl, c.tn), (ctl, c.tpre))
+    }
+    // (count, sum w1, sum w1 * yy) of one bucket, cohorts in sorted order
+    def bucketSums(gs: Seq[Double], t: Double): Array[Double] =
+      gs.flatMap(g => groups.get((g, t)))
+        .foldLeft(Array(0.0, 0.0, 0.0))((a, b) =>
+          Array(a(0) + b(0), a(1) + b(1), a(2) + b(2)))
 
     val att = Array.fill(cells.length)(0.0)
     val post = Array.fill(cells.length)(0)
@@ -284,25 +278,21 @@ object AttGt {
     // where IF contribution of a row in bucket dt = k_dt * w * (y - mu_dt)
     val consts = Array.fill(cells.length)(
       (0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0))
-    val seen = Array.fill(cells.length)(false)
 
-    statRows.foreach { r =>
-      val i = r.getInt(0)
-      seen(i) = true
-      val ncell = r.getLong(1).toDouble
-      val w11 = r.getDouble(2); val wy11 = r.getDouble(3); val c11 = r.getLong(4)
-      val w10 = r.getDouble(5); val wy10 = r.getDouble(6); val c10 = r.getLong(7)
-      val w01 = r.getDouble(8); val wy01 = r.getDouble(9); val c01 = r.getLong(10)
-      val w00 = r.getDouble(11); val wy00 = r.getDouble(12); val c00 = r.getLong(13)
-      if (c11 == 0 || c10 == 0 || c01 == 0 || c00 == 0) {
+    cells.filterNot(_.zeroCell).foreach { c =>
+      val i = c.idx
+      val Seq(b11, b10, b01, b00) = buckets(c).map((bucketSums _).tupled)
+      if (Seq(b11, b10, b01, b00).exists(_(0) == 0.0)) {
         // degenerate-cell skip, ATT=0/post=0 like add_att_data()
-        // (`csdids/ATTgt.py:400-422`)
+        // (`csdids/ATTgt.py:400-422`); also a cell with no rows at all
         skipped(i) = true
       } else {
-        val mu11 = wy11 / w11; val mu10 = wy10 / w10
-        val mu01 = wy01 / w01; val mu00 = wy00 / w00
+        val ncell = b11(0) + b10(0) + b01(0) + b00(0)
+        val w11 = b11(1); val w10 = b10(1); val w01 = b01(1); val w00 = b00(1)
+        val mu11 = b11(2) / w11; val mu10 = b10(2) / w10
+        val mu01 = b01(2) / w01; val mu00 = b00(2) / w00
         att(i) = (mu11 - mu01) - (mu10 - mu00)
-        post(i) = cells(i).postTreat
+        post(i) = c.postTreat
         if (estMethod == "dr" || estMethod == "ipw") {
           // intercept-only dr and ipw share this closed form: the
           // propensity is constant, all estimation-effect terms vanish
@@ -317,41 +307,79 @@ object AttGt {
         }
       }
     }
-    // cells absent from statRows entirely (no eligible rows at all)
-    cells.foreach { c =>
-      if (!c.zeroCell && !seen(c.idx)) skipped(c.idx) = true
-    }
 
-    val liveCells = cells.filterNot(c => c.zeroCell || skipped(c.idx))
-      .map(_.idx)
-    val constMap: Seq[(String, Int => Any)] = Seq(
-      "m11" -> (i => consts(i)._1), "m10" -> (i => consts(i)._2),
-      "m01" -> (i => consts(i)._3), "m00" -> (i => consts(i)._4),
-      "k11" -> (i => consts(i)._5), "k10" -> (i => consts(i)._6),
-      "k01" -> (i => consts(i)._7), "k00" -> (i => consts(i)._8))
-
-    shuffleNarrow.restore()
+    // (cohort, period, cell, k, mu) for every group of every live cell
+    val groupConsts = cells.filterNot(c => c.zeroCell || skipped(c.idx))
+      .flatMap { c =>
+        val k = consts(c.idx)
+        val kmu = Seq((k._5, k._1), (k._6, k._2), (k._7, k._3), (k._8, k._4))
+        buckets(c).zip(kmu).flatMap { case ((gs, t), (kd, mu)) =>
+          gs.map(g => (g, t, c.idx, kd, mu))
+        }
+      }
 
     // The groupBy is REAL aggregation, not dedup: in the default
     // unbalanced-panel-as-RC regime rowid := unit id, so a unit's pre-
     // and post-period rows in the same cell must SUM into one unit-level
     // IF entry (n = #units; sum(inf^2) SEs depend on it).
     val ifRows =
-      if (liveCells.isEmpty)
+      if (groupConsts.isEmpty)
         Seq.empty[(String, Int, Double)].toDF("rowid", "cell", "inf")
-      else CellConsts.withConsts(lf, liveCells, constMap)
-        .withColumn("inf",
-          col("w1") * (
-            when(bucket(1, 1), col("k11") * (col("yy") - col("m11")))
-              .when(bucket(1, 0), col("k10") * (col("yy") - col("m10")))
-              .when(bucket(0, 1), col("k01") * (col("yy") - col("m01")))
-              .otherwise(col("k00") * (col("yy") - col("m00")))))
+      else pp.df
+        .join(broadcast(groupConsts.toDF("gg", "tt", "cell", "k", "mu")),
+          Seq("gg", "tt"))
         .groupBy(col("rowid").cast("string").as("rowid"), col("cell"))
-        .agg(sum("inf").as("inf"))
-        .select("rowid", "cell", "inf")
+        .agg(sum(col("w1") * (col("k") * (col("yy") - col("mu")))).as("inf"))
 
     (att, post, skipped, ifRows)
-    } finally shuffleNarrow.restore() // no-op unless an exception skipped it
+  }
+
+  /** Row count, sum of `w1` and sum of `w1 * yy` per (cohort `gg`,
+    * period `tt`) group of `df`, in one Spark job that folds each
+    * partition into a driver-side map (no shuffle and no generated
+    * aggregation code). Partitions are added in partition order, so a
+    * rerun is bit-identical. Rows with a null cohort or period belong to
+    * no cell and are left out; null weights and outcomes drop out of the
+    * sums they enter, as in a SQL `sum`. */
+  private def groupSums(df: DataFrame): Map[(Double, Double), Array[Double]] = {
+    val parts = df.select("tt", "yy", "gg", "rowid", "w1").queryExecution.toRdd
+      .mapPartitions { rows =>
+        val m = scala.collection.mutable.LinkedHashMap
+          .empty[(Double, Double), Array[Double]]
+        rows.foreach { r =>
+          if (!r.isNullAt(2) && !r.isNullAt(0)) {
+            val a = m.getOrElseUpdate((r.getDouble(2), r.getDouble(0)),
+              new Array[Double](3))
+            a(0) += 1
+            if (!r.isNullAt(4)) {
+              a(1) += r.getDouble(4)
+              if (!r.isNullAt(1)) a(2) += r.getDouble(4) * r.getDouble(1)
+            }
+          }
+        }
+        Iterator.single(m.toMap)
+      }.collect()
+    parts.foldLeft(Map.empty[(Double, Double), Array[Double]]) { (acc, m) =>
+      m.foldLeft(acc) { case (a, (key, v)) =>
+        a.updated(key, a.get(key).fold(v)(u => Array.tabulate(3)(j => u(j) + v(j))))
+      }
+    }
+  }
+
+  /** Per-cell sum of squared influence values of `ifTable`, in one Spark
+    * job folded into driver arrays, partitions added in order. */
+  private[did] def cellSumSq(ifTable: DataFrame, k: Int): Array[Double] = {
+    // all three columns, as MBoot reads them: one scan of the cache to
+    // generate code for
+    val parts = ifTable.select("rowid", "cell", "inf").queryExecution.toRdd
+      .mapPartitions { rows =>
+        val ss = new Array[Double](k)
+        rows.foreach { r =>
+          if (!r.isNullAt(2)) ss(r.getInt(1)) += r.getDouble(2) * r.getDouble(2)
+        }
+        Iterator.single(ss)
+      }.collect()
+    Array.tabulate(k)(i => parts.foldLeft(0.0)(_ + _(i)))
   }
 
   /** Collect-based rc path for covariate / custom-estimator runs — parity

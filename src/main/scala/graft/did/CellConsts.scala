@@ -11,18 +11,19 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType,
   *
   * The K-cell fit phases repeatedly need tiny per-cell constant vectors
   * (mean weights, gamma, betas, IF contraction vectors) next to every
-  * row. Two pitfalls this helper avoids:
+  * row. The constants travel as a broadcast hash join of a LocalRelation
+  * (`createDataFrame(java.util.List)`), probed once per row.
   *
-  *  - `parallelize(rows)` puts the constants in an RDD, so the
-  *    broadcast exchange must run a one-task JOB per pass to collect
-  *    them — pure latency on an iterative fit. A LocalRelation
-  *    (`createDataFrame(java.util.List)`) collects driver-side with no
-  *    job at all.
-  *  - plan-embedded `typedlit(Map(cell -> v))` lookups avoid the join
-  *    but get INLINED into every reference site by project collapse —
-  *    the wide IF expression references each constant many times, and
-  *    the duplicated O(K) probes doubled every pass (measured). The
-  *    broadcast hash join probes once per row.
+  * Each such broadcast costs one Spark job: on Spark 4.1 the broadcast
+  * exchange collects even a LocalRelation through a 1-stage job over a
+  * `ParallelCollectionRDD` (one task per default-parallelism slice,
+  * 12-50 ms on 4 cores), so every pass that joins constants pays that
+  * job before its own.
+  *
+  * Plan-embedded `typedlit(Map(cell -> v))` lookups would avoid the join
+  * but get INLINED into every reference site by project collapse — the
+  * wide IF expression references each constant many times, and the
+  * duplicated O(K) probes doubled every pass (measured).
   */
 private[did] object CellConsts {
 

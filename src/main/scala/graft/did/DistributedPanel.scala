@@ -61,17 +61,7 @@ private[did] object DistributedPanel {
       (0 until p).map(j => sum(wC * xj(j) * col("dy")).as(s"gyC_$j")) ++
       (0 until p).map(j => sum(wT * xj(j)).as(s"gvT_$j")) ++
       (0 until p).map(j => sum(wC * xj(j)).as(s"gvC_$j"))
-    val p0 = lf.groupBy("cell").agg(p0Aggs.head, p0Aggs.tail: _*)
-      .collect().map(r => r.getInt(0) -> r).toMap
-    // Every remaining pass reduces to K = #cells rows; a handful of
-    // reduce partitions is right at any scale (map-side partial aggs do
-    // the work; AQE would coalesce, but it's off here). Set only AFTER
-    // pass 0 — ITS action also materializes `lf`, whose lineage carries
-    // the rowid-level pivot shuffle that needs data-sized partitioning.
-    // Restored on every exit: early on success (the trailing shuffle
-    // needs data-sized partitioning), by the finally on exceptions.
-    val shuffleNarrow = new ShuffleNarrow(spark, 4)
-    try {
+    val p0 = DistributedRc.cellRows(lf, p0Aggs)
     def p0d(i: Int, name: String): Double =
       p0(i).getDouble(p0(i).fieldIndex(name))
     def p0Gram(i: Int, prefix: String): DenseMatrix[Double] = {
@@ -102,7 +92,6 @@ private[did] object DistributedPanel {
     }
     if (live.isEmpty) {
       lf.unpersist()
-      shuffleNarrow.restore()
       return (att, post, skipped,
         Seq.empty[(String, Int, Double)].toDF("rowid", "cell", "inf"),
         Some(Array.fill(nCells)(0.0)))
@@ -146,11 +135,10 @@ private[did] object DistributedPanel {
           (for (j <- 0 until p; k <- j until p)
             yield sum(s * xj(j) * xj(k)).as(s"h_${j}_$k")) ++
           (0 until p).map(j => sum(z * xj(j)).as(s"g_$j"))
-        val rows = CellConsts.withConsts(lf, pending, Seq(
+        val rows = DistributedRc.cellRows(
+          CellConsts.withConsts(lf, pending, Seq(
             "mw" -> (i => meanW(i)),
-            "gam" -> (i => gamma(i).toArray.toSeq)))
-          .groupBy("cell").agg(aggs.head, aggs.tail: _*)
-          .collect().map(r => r.getInt(0) -> r).toMap
+            "gam" -> (i => gamma(i).toArray.toSeq))), aggs)
         val hb = Map.newBuilder[Int, DenseMatrix[Double]]
         val still = Seq.newBuilder[Int]
         pending.foreach { i =>
@@ -219,9 +207,8 @@ private[did] object DistributedPanel {
         sum(wTreat * xj(j)).as(s"mT_$j"),
         sum(wCont * xj(j)).as(s"mC_$j"),
         sum(wCont * contTarget * xj(j)).as(s"mCt_$j")))
-    val momRows = CellConsts.withConsts(lf, live, momConsts)
-      .groupBy("cell").agg(momAggs.head, momAggs.tail: _*)
-      .collect().map(r => r.getInt(0) -> r).toMap
+    val momRows = DistributedRc.cellRows(
+      CellConsts.withConsts(lf, live, momConsts), momAggs)
 
     final case class K(etaT: Double, etaC: Double, mwT: Double, mwC: Double,
         uWols: Seq[Double], uPs: Seq[Double])
@@ -283,13 +270,9 @@ private[did] object DistributedPanel {
       .select(col("rowid"), col("cell"),
         ((infBase + infNuis) * col("scale")).as("inf"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val seSS = Array.fill(nCells)(0.0)
-    ifRows.groupBy("cell").agg(sum(col("inf") * col("inf")).as("ss"))
-      .collect().foreach(r => seSS(r.getInt(0)) = r.getDouble(1))
+    val seSS = AttGt.cellSumSq(ifRows, nCells)
     lf.unpersist()
-    shuffleNarrow.restore()
 
     (att, post, skipped, ifRows, Some(seSS))
-    } finally shuffleNarrow.restore() // no-op unless an exception skipped it
   }
 }

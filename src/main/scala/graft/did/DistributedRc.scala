@@ -69,19 +69,6 @@ private[did] object DistributedRc {
     val p = covs.length
     val nCells = cells.length
 
-    // Every stat pass below reduces to K = #cells rows; map-side partial
-    // aggregation does the real work, so a handful of reduce partitions
-    // is right at ANY input scale — 32 mostly-empty reducers just add
-    // task-launch latency per pass (AQE would coalesce them, but it's
-    // off here for its per-job planning cost). The session is the fit's
-    // internal clone (single-threaded by construction), so the toggle
-    // can't leak: restored before the rowid-level IF aggregation, which
-    // DOES need data-sized partitioning.
-    // Restored on every exit: early on success (the trailing shuffle
-    // needs data-sized partitioning), by the finally on exceptions.
-    val shuffleNarrow = new ShuffleNarrow(spark, 4)
-    try {
-
     // Every pass below (bucket counts, each IRLS Newton step, the WLS
     // Grams, the moment pass, the final IF pass) scans this frame; without
     // the persist each scan re-executes the broadcast grid join and
@@ -116,9 +103,7 @@ private[did] object DistributedRc {
         (0 until p).map(j =>
           sum(ind(dv, pv) * xj(j)).as(s"gv_${nm}_$j"))
       }
-    val p0 =
-      lf.groupBy("cell").agg(bucketAggs.head, bucketAggs.tail: _*)
-        .collect().map(r => r.getInt(0) -> r).toMap
+    val p0 = cellRows(lf, bucketAggs)
     def p0d(i: Int, name: String): Double =
       p0(i).getDouble(p0(i).fieldIndex(name))
     def p0Gram(i: Int, nm: String): DenseMatrix[Double] = {
@@ -150,7 +135,6 @@ private[did] object DistributedRc {
 
     if (live.isEmpty) {
       lf.unpersist()
-      shuffleNarrow.restore()
       val empty = Seq.empty[(String, Int, Double)]
         .toDF("rowid", "cell", "inf")
       return (att, post, skipped, empty, Some(Array.fill(nCells)(0.0)))
@@ -204,12 +188,10 @@ private[did] object DistributedRc {
           (for (j <- 0 until p; k <- j until p)
             yield sum(s * xj(j) * xj(k)).as(s"h_${j}_$k")) ++
           (0 until p).map(j => sum(z * xj(j)).as(s"g_$j"))
-        val rows =
+        val rows = cellRows(
           CellConsts.withConsts(lf, pending, Seq(
-              "mw" -> (i => meanW(i)),
-              "gam" -> (i => gamma(i).toArray.toSeq)))
-            .groupBy("cell").agg(aggs.head, aggs.tail: _*)
-            .collect().map(r => r.getInt(0) -> r).toMap
+            "mw" -> (i => meanW(i)),
+            "gam" -> (i => gamma(i).toArray.toSeq))), aggs)
         val hessB = Map.newBuilder[Int, DenseMatrix[Double]]
         val still = Seq.newBuilder[Int]
         pending.foreach { i =>
@@ -328,12 +310,8 @@ private[did] object DistributedRc {
           Moment(s"m1_$j", wD * col("pp") * xj(j)),
           Moment(s"m2_$j", wD * (one - col("pp")) * xj(j))))
     }
-    val momRows = {
-      val aggs = moments.map(m => sum(m.c).as(m.name))
-      CellConsts.withConsts(lf, live, constants(Nil)).groupBy("cell")
-        .agg(aggs.head, aggs.tail: _*)
-        .collect().map(r => r.getInt(0) -> r).toMap
-    }
+    val momRows = cellRows(CellConsts.withConsts(lf, live, constants(Nil)),
+      moments.map(m => sum(m.c).as(m.name)))
     val momIdx = moments.map(_.name).zipWithIndex.map { case (n, i) => n -> (i + 1) }.toMap
     def mom(i: Int, name: String): Double =
       momRows(i).getDouble(momIdx(name)) / nC(i)
@@ -497,10 +475,6 @@ private[did] object DistributedRc {
     // would force one more uncached grid-join execution. The
     // materializing action doubles as the analytic-SE aggregation
     // (sum of squared IFs per cell), so the caller pays no extra pass.
-    // rowid-level shuffle ahead: back to data-sized partitioning (also
-    // inherited by the bootstrap's downstream scans of ifRows)
-    shuffleNarrow.restore()
-
     // The groupBy is REAL aggregation, not dedup: in the default
     // unbalanced-panel-as-RC regime rowid := unit id, so a unit's pre-
     // and post-period rows in the same cell must SUM into one
@@ -509,12 +483,22 @@ private[did] object DistributedRc {
       .select(col("rowid"), col("cell"), infCol.as("inf"))
       .groupBy("rowid", "cell").agg(sum("inf").as("inf"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val seSS = Array.fill(nCells)(0.0)
-    ifRows.groupBy("cell").agg(sum(col("inf") * col("inf")).as("ss"))
-      .collect().foreach(r => seSS(r.getInt(0)) = r.getDouble(1))
+    val seSS = AttGt.cellSumSq(ifRows, nCells)
     lf.unpersist()
 
     (att, post, skipped, ifRows, Some(seSS))
-    } finally shuffleNarrow.restore() // no-op unless an exception skipped it
   }
+
+  /** Reduce partitions of a per-cell pass: the result has K = #cells
+    * rows and map-side partial aggregation does the real work, so a
+    * handful of reduce tasks is right at any input scale. */
+  private val CellPassPartitions = 4
+
+  /** `aggs` per cell of `df`, keyed by cell. The shuffle keeps the
+    * session's width; `coalesce` only narrows the reduce tasks that
+    * merge the K rows, without setting a conf. */
+  private[did] def cellRows(df: DataFrame, aggs: Seq[Column]): Map[Int, Row] =
+    df.groupBy("cell").agg(aggs.head, aggs.tail: _*)
+      .coalesce(CellPassPartitions)
+      .collect().map(r => r.getInt(0) -> r).toMap
 }

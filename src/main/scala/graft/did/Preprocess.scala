@@ -1,6 +1,9 @@
 package graft.did
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -27,8 +30,8 @@ final case class PreprocessedPanel(
 }
 
 /** Replicates `_preprocess_did` (`csdids/ATTgt.py:57-231`) with the
-  * reference's ~13 separate actions batched into a handful of aggregate
-  * passes and the result persisted once (SURVEY.md §4).
+  * reference's ~13 separate actions batched into three Spark jobs and
+  * the result persisted once (SURVEY.md §4).
   *
   * Intended-semantics divergences (SURVEY.md §7.5): `_w` is always kept
   * (the reference drops it when `weights_name` is set — column-list bug);
@@ -45,116 +48,130 @@ object Preprocess {
       df.persist(StorageLevel.MEMORY_AND_DISK)
     else df
 
-  def run(data: DataFrame, cfg: AttGtConfig): PreprocessedPanel =
-    // Runs directly on the caller's session, mutating NO conf — so no
-    // session scoping is needed (AttGt.fit clones because it genuinely
-    // toggles confs mid-fit). AQE is deliberately left at the caller's
-    // setting: unlike the fit's K-row internal passes, preprocess
-    // actions execute the CALLER's input plan, which often carries real
-    // shuffles (e.g. a groupBy-built panel view), and AQE's post-shuffle
-    // coalescing measurably helps there — forcing it off cost ~35% per
-    // action at sf0.1 (BENCH_NOTES r4). Thread-safe by virtue of
-    // touching nothing session-global.
-    runInner(data, cfg)
+  /** Largest number of distinct periods, of distinct cohorts, and of
+    * distinct (cohort, period) pairs a panel may hold. */
+  private val MaxPeriods = 10000
+  private val MaxPairs = 1000000
 
-  private def runInner(data: DataFrame, cfg: AttGtConfig): PreprocessedPanel = {
-    val spark = data.sparkSession
+  /** Runs on the caller's session and sets no conf on it. AQE stays at
+    * the caller's setting: the first pass executes the CALLER's input
+    * plan, which often carries real shuffles (e.g. a groupBy-built panel
+    * view), and AQE's post-shuffle coalescing measurably helps there —
+    * forcing it off cost ~35% per action at sf0.1 (BENCH_NOTES r4).
+    *
+    * Three Spark jobs, folded into driver-side maps instead of SQL
+    * aggregates, so a run generates little code: one pass counts rows per
+    * (cohort, period), one shuffle finds each unit's first period within
+    * its cohort, and one pass materializes the result. Every later step —
+    * the never-treated recode, the period cut when no unit is never
+    * treated, the first-period drop, the unit count n — is arithmetic on
+    * those two maps. */
+  def run(data: DataFrame, cfg: AttGtConfig): PreprocessedPanel = {
     import cfg._
-    // NOTE: no shuffle-partition toggle here, deliberately — the
-    // caller's input plan may carry shuffles (e.g. a window-built panel
-    // view), and the FIRST action below materializes the projected
-    // cache, which would pin that lineage at the reduced partition
-    // count and serialize every downstream pass over pp.df.
 
     // Project role columns; synthesize _w / _intercept (ATTgt.py:74-98).
-    // Persist the projected frame IMMEDIATELY: every subsequent action
-    // (counts, distinct lists, max(t), cohort sizes) otherwise recomputes
-    // the caller's input plan from scratch — the reference's #1 cost
-    // (SURVEY.md §4 "caching: none").
+    // Persist the projected frame IMMEDIATELY: both passes below
+    // otherwise recompute the caller's input plan from scratch — the
+    // reference's #1 cost (SURVEY.md §4 "caching: none").
     val covs = cfg.covariates.filter(_ != Formula.InterceptCol)
     val roleCols =
       (Seq(idname, tname, yname, gname) ++ clustervar.toSeq ++ covs).distinct
     val projected = persistOnce(data
       .withColumn("w", weightsName.map(col).getOrElse(lit(1.0)).cast("double"))
       .select((roleCols.map(col) :+ col("w")): _*))
-    // ONE action: total rows + all-null rows (the `na.drop('all')`
-    // diagnostic, ATTgt.py:98-102) + the time/cohort cardinality guard —
-    // also materializes the cache.
+    val tCol = col(tname).cast("double")
+    val gCol = col(gname).cast("double")
+
+    // Pass 1 (also materializes the projection): all-null rows (the
+    // `na.drop('all')` diagnostic, ATTgt.py:98-102) and rows per
+    // (cohort, period) — a null cohort is its own group, because the
+    // reference's tlist is distinct() over all rows. A continuous-valued
+    // period or cohort column would flood the driver, and the staggered-
+    // DiD grid is only meaningful for small |tlist| x |glist|, so a
+    // partition stops collecting past the caps and the run fails.
     val allNull = (roleCols.map(c => col(c).isNull) :+ col("w").isNull)
       .reduce(_ && _)
-    val cntRow = projected.agg(count(lit(1)),
-      count(when(allNull, 1)),
-      approx_count_distinct(col(tname).cast("double")),
-      approx_count_distinct(col(gname).cast("double"))).first()
-    val nPre = cntRow.getLong(0)
-    val nDropped = cntRow.getLong(1)
-    // Cardinality guard BEFORE any collect_set: collecting a
-    // continuous-valued time/cohort column would OOM the driver, and the
-    // staggered-DiD grid is only meaningful for small |tlist|x|glist|.
-    val MaxPeriods = 10000L
-    require(cntRow.getLong(2) <= MaxPeriods && cntRow.getLong(3) <= MaxPeriods,
-      s"'$tname'/'$gname' look continuous (~${cntRow.getLong(2)}/" +
-        s"${cntRow.getLong(3)} distinct values); ATT(g,t) needs ordinal " +
-        "periods and cohorts")
+    // both passes read this one projection: one scan plan to generate
+    val roles = projected.select(gCol, tCol, allNull, col(idname))
+      .queryExecution.toRdd
+    val counted = roles
+      .mapPartitions { rows =>
+        val m = mutable.LinkedHashMap.empty[(Option[Double], Double), Long]
+        val ts = mutable.HashSet.empty[Double]
+        val gs = mutable.HashSet.empty[Option[Double]]
+        var dropped = 0L
+        var over = false
+        rows.foreach { r =>
+          if (r.getBoolean(2)) dropped += 1
+          else if (!over && !r.isNullAt(1)) {
+            val key = (if (r.isNullAt(0)) None else Some(r.getDouble(0)),
+              r.getDouble(1))
+            m(key) = m.getOrElse(key, 0L) + 1
+            ts += key._2; gs += key._1
+            over = ts.size > MaxPeriods || gs.size > MaxPeriods ||
+              m.size > MaxPairs
+          }
+        }
+        Iterator.single((dropped, over, m.toMap))
+      }.collect()
+    val nDropped = counted.map(_._1).sum
+    val raw = counted.foldLeft(Map.empty[(Option[Double], Double), Long]) {
+      case (acc, (_, _, m)) => addAll(acc, m)
+    }
+    require(!counted.exists(_._2) &&
+        raw.keys.map(_._2).toSet.size <= MaxPeriods &&
+        raw.keys.map(_._1).toSet.size <= MaxPeriods && raw.size <= MaxPairs,
+      s"'$tname'/'$gname' look continuous (over $MaxPeriods distinct " +
+        s"periods or cohorts, or $MaxPairs (cohort, period) pairs); " +
+        "ATT(g,t) needs ordinal periods and cohorts")
     if (nDropped != 0)
       System.err.println(
         s"[graft.did] Dropped $nDropped rows from original data due to missing data")
 
+    // Pass 2: units per (cohort, first period of the unit), so the unit
+    // count of every cohort follows the period cut below exactly (a unit
+    // survives `tt < cut` iff its first period does).
+    val idType = projected.schema(idname).dataType
+    val firstRaw = roles
+      .filter(r => !r.getBoolean(2) && !r.isNullAt(0) && !r.isNullAt(1) &&
+        !r.isNullAt(3))
+      .map(r => ((r.getDouble(0), InternalRow.copyValue(r.get(3, idType))),
+        r.getDouble(1)))
+      .reduceByKey(math.min(_, _))
+      .mapPartitions { units =>
+        val m = mutable.LinkedHashMap.empty[(Double, Double), Long]
+        units.foreach { case ((g, _), t) => m((g, t)) = m.getOrElse((g, t), 0L) + 1 }
+        Iterator.single(m.toMap)
+      }.collect().foldLeft(Map.empty[(Double, Double), Long])(addAll)
+
+    // never-treated recode (ATTgt.py:111-118): cohorts past maxT merge
+    // into 0.0 — their unit sets are disjoint (gg is unit-level), so
+    // counts add
+    val maxT = raw.keys.map(_._2).max
+    def recode(g: Double): Double = if (g > maxT) 0.0 else g
+    var rows = raw.foldLeft(Map.empty[(Option[Double], Double), Long]) {
+      case (acc, ((g, t), c)) => addAll(acc, Map((g.map(recode), t) -> c))
+    }
+    var firsts = firstRaw.foldLeft(Map.empty[(Double, Double), Long]) {
+      case (acc, ((g, t), c)) => addAll(acc, Map((recode(g), t) -> c))
+    }
+    def tlist: Vector[Double] = rows.keys.map(_._2).toVector.distinct.sorted
+    // per cohort: (rows, units); null-cohort rows only shape tlist
+    def perCohort: Map[Double, (Long, Long)] = {
+      val r = rows.toSeq.collect { case ((Some(g), _), c) => (g, c) }
+        .groupMapReduce(_._1)(_._2)(_ + _)
+      val u = firsts.toSeq.map { case ((g, _), c) => (g, c) }
+        .groupMapReduce(_._1)(_._2)(_ + _)
+      r.map { case (g, c) => g -> (c, u.getOrElse(g, 0L)) }
+    }
+
     var df = projected
       .na.drop("all")
       .withColumn(Formula.InterceptCol, lit(1.0))
-
-    // Canonical numeric roles.
-    df = df
-      .withColumn("tt", col(tname).cast("double"))
+      .withColumn("tt", tCol)
       .withColumn("yy", col(yname).cast("double"))
-      .withColumn("gg", col(gname).cast("double"))
-
-    // ONE pass for the distinct lists AND the per-cohort stats: the
-    // group keys ARE the cohort list, the union of the per-cohort
-    // period sets IS tlist (each set bounded by the cardinality guard
-    // above), and the counts feed the first-period drop (ATTgt.py:
-    // 135-156), the unit count n (:188), and the small-group warning
-    // (:199-216). The reference runs ~5 separate actions for these; the
-    // r3 engine ran 2 (lists + stats); this is 1 scan. The grand totals
-    // derive driver-side — gg is a function of the unit, so per-cohort
-    // distinct-unit counts partition the unit set. (rollup(gg) would
-    // fold the totals in-engine, but Spark's ambiguous-self-join check
-    // misfires on rollup's Expand whenever the input lineage contains
-    // ANY join.)
-    def cohortScan(d: DataFrame)
-        : (Vector[Double], Map[Double, (Long, Long)]) = {
-      // null-cohort rows STAY in the scan: their periods belong in
-      // tlist (the reference's tlist_glist is distinct() over all
-      // rows), so a period appearing only on missing-cohort rows must
-      // still shift maxT and the never-treated recode. groupBy keeps
-      // the null gg as its own group; only the per-cohort stats map
-      // skips it below.
-      val rows = d
-        .filter(col("tt").isNotNull)
-        .groupBy("gg")
-        .agg(count(lit(1)).as("cnt"),
-          count_distinct(col(idname)).as("uids"),
-          collect_set("tt").as("tts"))
-        .collect()
-      val t = rows.iterator.flatMap(_.getSeq[Double](3))
-        .toVector.distinct.sorted
-      (t, rows.filter(!_.isNullAt(0)).map(r => r.getDouble(0) ->
-        (r.getLong(1), r.getLong(2))).toMap)
-    }
-    // never-treated recode (ATTgt.py:111-118) applied to scan results:
-    // cohorts past maxT merge into 0.0 — their unit sets are disjoint
-    // (gg is unit-level), so counts add
-    def recoded(per: Map[Double, (Long, Long)], mt: Double)
-        : Map[Double, (Long, Long)] =
-      per.groupMapReduce { case (g, _) => if (g > mt) 0.0 else g }(_._2) {
-        case ((c1, u1), (c2, u2)) => (c1 + c2, u1 + u2)
-      }
-
-    var (tlist, perRaw) = cohortScan(df)
-    val maxT = tlist.last
+      .withColumn("gg", gCol)
     df = df.withColumn("gg", when(col("gg") > maxT, 0.0).otherwise(col("gg")))
-    var perCohort = recoded(perRaw, maxT)
     var glistAll = perCohort.keys.toVector.sorted
 
     // No never-treated units (ATTgt.py:120-128).
@@ -164,14 +181,12 @@ object Preprocess {
           "There is no available never-treated group; set controlGroup='notyettreated'")
       val cut = glistAll.max - anticipation
       df = df.filter(col("tt") < cut)
-      val scan = cohortScan(df)
-      tlist = scan._1
-      perCohort = recoded(scan._2, maxT) // no-op remap: gg already recoded
+      rows = rows.filter(_._1._2 < cut)
+      firsts = firsts.filter(_._1._2 < cut)
       // tlist_glist(_filter=True): drop cohorts >= max cohort
-      // (utils.py:41-43) from the GRID list; the stats keep every
-      // cohort, as the post-branch stats pass always did
-      glistAll = perCohort.keys.toVector.filter(_ < perCohort.keys.max)
-        .sorted
+      // (utils.py:41-43) from the GRID list; the stats keep every cohort
+      val cohorts = perCohort.keys
+      glistAll = cohorts.toVector.filter(_ < cohorts.max).sorted
     }
 
     var fp = tlist.head
@@ -189,10 +204,9 @@ object Preprocess {
         s"[graft.did] Dropped $nFirstPeriod units that were already treated in the first period.")
       val keep = glist :+ 0.0
       df = df.filter(col("gg").isin(keep: _*))
-      val scan = cohortScan(df)
-      tlist = scan._1
+      rows = rows.filter(_._1._1.exists(keep.contains))
+      firsts = firsts.filter(k => keep.contains(k._1._1))
       fp = tlist.head
-      perCohort = recoded(scan._2, maxT)
       glist = perCohort.keys.toVector.sorted
         .filter(g => g > 0 && g > fp + anticipation)
     }
@@ -214,13 +228,12 @@ object Preprocess {
 
     df = persistOnce(df.withColumn("w1", col("w")))
 
-    // Unit count n (ATTgt.py:188): the default regimes read the single
-    // cohort-scan's totals; only the NON-default balanced-panel regime
-    // pays one extra count action (rows at the first period), which
-    // doubles as the final-cache materializer there.
+    // Unit count n (ATTgt.py:188): rows at the first period in the
+    // balanced-panel regime, every row in the repeated cross-section
+    // (each row is its own unit), distinct units otherwise.
     val n =
-      if (effPanel) df.filter(col("tt") === fp).count()
-      else if (trueRcs) totRows // every row is its own unit
+      if (effPanel) rows.collect { case ((_, t), c) if t == fp => c }.sum
+      else if (trueRcs) totRows
       else totUnits
 
     if (glist.isEmpty)
@@ -232,8 +245,9 @@ object Preprocess {
 
     val nCov = cfg.covariates.length
     val reqSize = nCov + 5
+    val nT = tlist.length
     val small = perCohort.collect {
-      case (g, (cnt, _)) if cnt.toDouble / tlist.length < reqSize => g
+      case (g, (cnt, _)) if cnt.toDouble / nT < reqSize => g
     }.toSeq.sorted
     if (small.nonEmpty) {
       System.err.println(
@@ -247,10 +261,14 @@ object Preprocess {
     // intermediate projection it derives from (recomputing from source
     // would redo the caller's input plan), and to pin rowid in the
     // trueRcs regime (monotonically_increasing_id must never recompute).
-    df.count()
+    df.queryExecution.toRdd.count()
     projected.unpersist()
 
-    PreprocessedPanel(df, tlist, glist, n, glist.length, tlist.length,
+    PreprocessedPanel(df, tlist, glist, n, glist.length, nT,
       effPanel, trueRcs, effCband, cfg)
   }
+
+  /** `a` with every count of `b` added, in `b`'s order. */
+  private def addAll[K](a: Map[K, Long], b: Map[K, Long]): Map[K, Long] =
+    b.foldLeft(a) { case (acc, (k, c)) => acc.updated(k, acc.getOrElse(k, 0L) + c) }
 }

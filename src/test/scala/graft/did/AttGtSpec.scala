@@ -75,6 +75,23 @@ class AttGtSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("the engine session follows the caller's shuffle width at each fit") {
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    try {
+      val pp = Preprocess.run(staggered(spark, nUnits = 120), cfg)
+      val widths = Seq(3, 5).map { w =>
+        spark.conf.set(key, w.toString)
+        val f = AttGt.fit(pp, estMethod = "dr")
+        val got = f.ifTable.rdd.getNumPartitions
+        f.unpersist()
+        got
+      }
+      pp.unpersist()
+      assert(widths == Seq(3, 5), s"IF table widths $widths")
+    } finally spark.conf.set(key, saved)
+  }
+
   test("DGP truth recovery: post cells match tau, pre cells are placebo") {
     val pp = Preprocess.run(
       staggered(spark, nUnits = 400, noise = 0.05), cfg)

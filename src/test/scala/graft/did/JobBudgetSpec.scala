@@ -16,10 +16,10 @@ class JobBudgetSpec extends AnyFunSuite with SparkSpec {
   private val Key = "graft.jobBudget"
 
   /** Jobs submitted while `f` runs on this thread (and on the threads it
-    * hands its local properties to). A marker job submitted after `f`
-    * reaches the listener after every job start of `f`, so waiting for
-    * it drains the count. */
-  private def jobsOf(f: => Any): Int = {
+    * hands its local properties to), with `f`'s result. A marker job
+    * submitted after `f` reaches the listener after every job start of
+    * `f`, so waiting for it drains the count. */
+  private def jobsAnd[T](f: => T): (Int, T) = {
     val sc = spark.sparkContext
     val span = java.util.UUID.randomUUID().toString
     val jobs = new AtomicInteger
@@ -34,15 +34,25 @@ class JobBudgetSpec extends AnyFunSuite with SparkSpec {
     sc.addSparkListener(listener)
     try {
       sc.setLocalProperty(Key, span)
-      f
+      val out = f
       sc.setLocalProperty(Key, s"$span/end")
       sc.parallelize(Seq(1), 1).count()
       assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
-      jobs.get
+      (jobs.get, out)
     } finally {
       sc.setLocalProperty(Key, null)
       sc.removeSparkListener(listener)
     }
+  }
+
+  private def jobsOf(f: => Any): Int = jobsAnd(f)._1
+
+  /** Asserts every call's count at once, so a failure shows them all. */
+  private def assertBudget(got: Seq[(String, Int)],
+      budget: Map[String, Int]): Unit = {
+    val table = got.map { case (c, n) => f"  $c%-28s $n%3d (budget ${budget(c)})" }
+    assert(got.forall { case (c, n) => budget(c) == n },
+      table.mkString("job counts per call:\n", "\n", ""))
   }
 
   test("MBoot.run is one Spark job") {
@@ -51,5 +61,53 @@ class JobBudgetSpec extends AnyFunSuite with SparkSpec {
     val n = jobsOf(MBoot.run(fit.ifTable, fit.cells.length, pp.n, 199, 0.05, 1L))
     assert(n == 1, s"MBoot.run ran $n jobs")
     fit.unpersist(); pp.unpersist()
+  }
+
+  test("every public call of an intercept-only analysis holds its job budget") {
+    val df = staggered(spark, nUnits = 200, noise = 0.1)
+    val (nPre, pp) = jobsAnd(Preprocess.run(df, cfg))
+    val (nFit, fit0) = jobsAnd(AttGt.fit(pp, estMethod = "dr"))
+    fit0.unpersist()
+    val (nFitB, fit) = jobsAnd(AttGt.fit(pp, estMethod = "dr", bstrap = true))
+    val (nPrep, p) = jobsAnd(Aggte.prepare(fit))
+    val no = Some(false); val yes = Some(true)
+    val got = Seq(
+      "Preprocess.run" -> nPre,
+      "AttGt.fit" -> nFit,
+      "AttGt.fit(bstrap)" -> nFitB,
+      "Aggte.prepare" -> nPrep,
+      "Aggte.simple" -> jobsOf(Aggte.simple(p, bstrap = no)),
+      "Aggte.group" -> jobsOf(Aggte.group(p, bstrap = no)),
+      "Aggte.calendar" -> jobsOf(Aggte.calendar(p, bstrap = no)),
+      "Aggte.dynamic" -> jobsOf(Aggte.dynamic(p, bstrap = no)),
+      "Aggte.simple(bstrap)" -> jobsOf(Aggte.simple(p, bstrap = yes)),
+      "Aggte.group(bstrap)" -> jobsOf(Aggte.group(p, bstrap = yes)),
+      "Aggte.calendar(bstrap)" -> jobsOf(Aggte.calendar(p, bstrap = yes)),
+      "Aggte.dynamic(bstrap)" -> jobsOf(Aggte.dynamic(p, bstrap = yes)),
+      "PreTest.wald" -> jobsOf(PreTest.wald(fit)))
+    p.units.unpersist(); fit.unpersist(); pp.unpersist()
+    assertBudget(got, Map(
+      "Preprocess.run" -> 3,
+      "AttGt.fit" -> 3,
+      "AttGt.fit(bstrap)" -> 4,
+      "Aggte.prepare" -> 1,
+      "Aggte.simple" -> 3,
+      "Aggte.group" -> 3,
+      "Aggte.calendar" -> 3,
+      "Aggte.dynamic" -> 3,
+      "Aggte.simple(bstrap)" -> 3,
+      "Aggte.group(bstrap)" -> 3,
+      "Aggte.calendar(bstrap)" -> 3,
+      "Aggte.dynamic(bstrap)" -> 3,
+      "PreTest.wald" -> 2))
+  }
+
+  test("a covariate DistributedRc fit holds its job budget") {
+    val pp = Preprocess.run(staggered(spark, nUnits = 200, noise = 0.1),
+      cfg.copy(xfmla = Some("y ~ x1 + x2")))
+    val (n, fit) = jobsAnd(AttGt.fit(pp, estMethod = "dr"))
+    fit.unpersist(); pp.unpersist()
+    assertBudget(Seq("AttGt.fit(dr, x1 + x2)" -> n),
+      Map("AttGt.fit(dr, x1 + x2)" -> 14))
   }
 }
