@@ -438,14 +438,14 @@ object SparkEntry {
         PanelView.config.copy(weightsName = Some("w"))))
     }),
 
-    // §2.7 covariate (xfmla) doubly-robust run via the distributed
-    // Gram/moment path (DistributedRc) — customer balance as covariate.
+    // §2.7 covariate (xfmla) doubly-robust run via the per-cell path
+    // (each cell estimated in its task) — customer balance as covariate.
     // Oracle-gated via the independent-fixture pattern (IRLS is not
     // ANSI SQL): scripts/gen_attgt_cov_fixture.py fits the same
     // published Sant'Anna-Zhao estimator in numpy and the oracle joins
     // its committed (att, se) rows by a SQL-replayed input fingerprint;
-    // DistributedRcSpec additionally pins 1e-8 parity vs the Breeze
-    // collect path
+    // DistributedRcSpec additionally pins the path against a loop over
+    // collected cells
     "q_att_gt_cov" -> ((s, dir) => covFitTable(s, dir, "dr")),
 
     // §2.7 the SAME covariate surface under the outcome-regression-only

@@ -1,7 +1,12 @@
 package graft.did
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import scala.collection.mutable.{ArrayBuffer, ArrayBuilder}
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType,
+  StructField, StructType}
 import breeze.linalg.DenseMatrix
 
 /** One (g,t) cell definition, resolved at the driver from tlist/glist
@@ -53,19 +58,20 @@ final case class AttGtFit(
 
 /** Driver-orchestrated in the reference (one growing logical plan and >=3
   * Spark jobs per (g,t) cell — SURVEY.md §3.2); here the whole surface is
-  * computed in a constant number of passes:
+  * computed in a constant number of Spark jobs, on one of two paths
+  * chosen from the input alone:
   *
-  *   1. broadcast the tiny (g,t) grid against the persisted panel and
-  *      aggregate per-cell sufficient statistics (one shuffle of K rows);
-  *   2. finish the 2x2 arithmetic on the driver (K cells, closed form for
-  *      the intercept-only doubly-robust/outcome-regression estimators);
-  *   3. one more pass computes the per-row influence function from
-  *      broadcast per-cell constants.
-  *
-  * Covariate (`xfmla`) and custom-estimator runs collect per-cell arrays
-  * and run the Breeze estimators — parity with the reference's own
-  * collect-based execution (`csdids/ATTgt.py:391-432`); guarded by
-  * `maxDriverCellRows` so the scale path stays the closed form.
+  *  - closed form: a built-in estimator in the repeated-cross-section
+  *    regime with an intercept-only formula. Per-(cohort, period) sums in
+  *    one pass, the 2x2 arithmetic on the driver, and the per-row
+  *    influence function from one broadcast equi-join of per-cell
+  *    constants ([[fitRcDistributed]]);
+  *  - per cell: every other fit (covariates in either regime, the
+  *    balanced panel, custom estimators). The rows are shuffled once by
+  *    cell and each cell is estimated inside its task with
+  *    [[CellEstimators]] or the caller's estimator, the way R `did` and
+  *    the reference estimate one 2x2 per cell (`csdids/ATTgt.py:391-432`),
+  *    without collecting a cell's rows out of Spark ([[fitPerCell]]).
   */
 object AttGt {
 
@@ -75,8 +81,7 @@ object AttGt {
       basePeriod: String = "varying",
       bstrap: Boolean = false,
       customRc: Option[RcCellEstimator] = None,
-      customPanel: Option[PanelCellEstimator] = None,
-      maxDriverCellRows: Long = 10L * 1000 * 1000): AttGtFit = {
+      customPanel: Option[PanelCellEstimator] = None): AttGtFit = {
     require(basePeriod == "varying" || basePeriod == "universal",
       s"basePeriod must be varying|universal: $basePeriod")
     require(Set("dr", "reg", "ipw").contains(estMethod) ||
@@ -94,17 +99,17 @@ object AttGt {
         "the repeated-cross-section regime; pass customRc instead or set " +
         "allowUnbalancedPanel=false")
 
-    // Every internal pass here reduces to K = #cells rows or joins a
-    // broadcast of a tiny driver-built table: AQE has nothing to re-plan
-    // but adds a planning round and extra jobs to each of them. So the
-    // fit plans on the caller session's engine session (AQE off, the
-    // caller's conf otherwise), never touching the caller's conf. The
-    // engine session is made once per caller session and reused, so a
-    // repeated fit finds its generated code cached (SessionScope).
+    // Every internal pass here reduces to K = #cells rows, joins a
+    // broadcast of a tiny driver-built table or shuffles once by cell:
+    // AQE has nothing to re-plan but adds a planning round and extra jobs
+    // to each of them. So the fit plans on the caller session's engine
+    // session (AQE off, the caller's conf otherwise), never touching the
+    // caller's conf. The engine session is made once per caller session
+    // and reused, so a repeated fit finds its generated code cached
+    // (SessionScope).
     val ppScoped = pp.copy(
       df = org.apache.spark.sql.graftbridge.SessionScope.onEngine(pp.df))
-    fitInner(ppScoped, estMethod, basePeriod, bstrap, customRc, customPanel,
-      maxDriverCellRows)
+    fitInner(ppScoped, estMethod, basePeriod, bstrap, customRc, customPanel)
   }
 
   private def fitInner(
@@ -113,53 +118,20 @@ object AttGt {
       basePeriod: String,
       bstrap: Boolean,
       customRc: Option[RcCellEstimator],
-      customPanel: Option[PanelCellEstimator],
-      maxDriverCellRows: Long): AttGtFit = {
+      customPanel: Option[PanelCellEstimator]): AttGtFit = {
     val cells = buildCells(pp, basePeriod)
-    // the two distributed paths fold the SE aggregation into their
-    // IF-materializing action and return the per-cell sum of squares
-    val fitres: (Array[Double], Array[Int], Array[Boolean], DataFrame,
-        Option[Array[Double]]) =
-      if (pp.panel && customPanel.isEmpty &&
-          DistributedPanel.supports(estMethod, pp.config.covariates.length))
-        DistributedPanel.fit(pp, cells, estMethod, panelWide(pp, cells))
-      else if (pp.panel) {
-        val r = fitPanelCollect(pp, cells, estMethod, customPanel,
-          maxDriverCellRows)
-        (r._1, r._2, r._3, r._4, None)
-      } else if (pp.config.interceptOnly && customRc.isEmpty) {
-        val r = fitRcDistributed(pp, cells, estMethod)
-        (r._1, r._2, r._3, r._4, None)
-      } else if (customRc.isEmpty &&
-          DistributedRc.supports(estMethod, pp.config.covariates.length))
-        // covariate scale path: Gram/moment aggregations + broadcast
-        // constants, nothing O(rows) at the driver (DistributedRc)
-        DistributedRc.fit(pp, cells, estMethod, longForm(pp, cells))
-      else {
-        val r = fitRcCollect(pp, cells, estMethod, customRc,
-          maxDriverCellRows)
-        (r._1, r._2, r._3, r._4, None)
-      }
-    val (att, post, skipped, ifTable, seSSPre) = fitres
-
-    // DistributedPanel and DistributedRc persist their IF table before
-    // dropping the input it is computed from; the other paths leave it
-    // to here
-    Preprocess.persistOnce(ifTable)
+    // both paths end with the IF table persisted and materialized, and
+    // the per-cell sums of squared influence values in hand
+    val (att, post, skipped, ifTable, sumSq) =
+      if (!pp.panel && pp.config.interceptOnly && customRc.isEmpty) {
+        val (a, p, s, t) = fitRcDistributed(pp, cells, estMethod)
+        Preprocess.persistOnce(t)
+        (a, p, s, t, cellSumSq(t, cells.length))
+      } else fitPerCell(pp, cells, estMethod, customRc, customPanel)
 
     // Analytic per-cell SE: sqrt(mean(IF^2)/n) over all n units (absent
-    // units contribute IF=0, so one aggregation over the sparse table) —
-    // precomputed by the distributed paths, one aggregation otherwise.
-    val n = pp.n
-    val seA = Array.fill(cells.length)(0.0)
-    seSSPre match {
-      case Some(ss) =>
-        ss.indices.foreach(i => seA(i) = math.sqrt(ss(i)) / n)
-      case None =>
-        cellSumSq(ifTable, cells.length).zipWithIndex.foreach {
-          case (ss, i) => seA(i) = math.sqrt(ss) / n
-        }
-    }
+    // units contribute IF=0)
+    val seA = sumSq.map(ss => math.sqrt(ss) / pp.n)
 
     val (se, crit) =
       if (bstrap) {
@@ -205,35 +177,6 @@ object AttGt {
       idx += 1
     }
     out.result()
-  }
-
-  /** Long-form (row x eligible cell) frame. Cell membership is
-    * `(G_m|C) & (post | tPret)`: both periods restricted to the treated
-    * cohort or the control set. The reference's rc filter
-    * `GmC & post | tPret` (`csdids/ATTgt.py:388`) parses as
-    * `(GmC & post) | tPret` under Python precedence, letting EVERY
-    * base-period row (any cohort) into the control-pre bucket — an
-    * operator-precedence bug contradicting its own panel branch
-    * (`:336-339`, `dis_idx = G_m|C`) and the R `did` original. We
-    * implement the intended semantics (SURVEY.md §7.5). */
-  private def longForm(pp: PreprocessedPanel, cells: Vector[CellDef])
-      : DataFrame = {
-    val spark = pp.df.sparkSession
-    import spark.implicits._
-    val grid = cells.filterNot(_.zeroCell)
-      .map(c => (c.idx, c.g, c.tn, c.tpre, c.n2val))
-      .toDF("cell", "cg", "ctn", "ctpre", "cn2")
-    val nyt = pp.config.controlGroup == "notyettreated"
-    val cCond: Column =
-      if (nyt) (col("gg") === 0.0) ||
-        ((col("gg") > col("cn2")) && (col("gg") =!= col("cg")))
-      else col("gg") === 0.0
-    val eligible =
-      ((col("tt") === col("ctn")) || (col("tt") === col("ctpre"))) &&
-        ((col("gg") === col("cg")) || cCond)
-    pp.df.join(broadcast(grid), eligible)
-      .withColumn("d", (col("gg") === col("cg")).cast("int"))
-      .withColumn("pst", (col("tt") === col("ctn")).cast("int"))
   }
 
   /** Distributed intercept-only path: per-cell sufficient statistics, then
@@ -368,7 +311,7 @@ object AttGt {
 
   /** Per-cell sum of squared influence values of `ifTable`, in one Spark
     * job folded into driver arrays, partitions added in order. */
-  private[did] def cellSumSq(ifTable: DataFrame, k: Int): Array[Double] = {
+  private def cellSumSq(ifTable: DataFrame, k: Int): Array[Double] = {
     // all three columns, as MBoot reads them: one scan of the cache to
     // generate code for
     val parts = ifTable.select("rowid", "cell", "inf").queryExecution.toRdd
@@ -382,186 +325,202 @@ object AttGt {
     Array.tabulate(k)(i => parts.foldLeft(0.0)(_ + _(i)))
   }
 
-  /** Collect-based rc path for covariate / custom-estimator runs — parity
-    * with the reference's own per-cell collection (`csdids/ATTgt.py:391-432`)
-    * but batched into ONE Spark pass for all cells. */
-  /** Pre-collect guard for the driver parity paths: counts the frame
-    * BEFORE materializing it and fails with the ESTIMATED DRIVER BYTES,
-    * not just a row count — 10M rows of wide covariates can be multiple
-    * GiB of boxed Rows. The byte budget is what `maxRows` rows of the
-    * default 8-column frame would occupy, so narrow frames are row-capped
-    * and wide frames byte-capped by the same knob. Costs one extra
-    * count() job — acceptable on a parity path that is about to collect
-    * the same frame anyway. */
-  private def guardedCollect(df: DataFrame, maxRows: Long, path: String)
-      : Array[org.apache.spark.sql.Row] = {
-    // persist so the guard's count() and the collect() share one
-    // computation of the long-form plan instead of running it twice
-    val pinned = df.persist(org.apache.spark.storage.StorageLevel
-      .MEMORY_AND_DISK)
-    try guardedCollectPinned(pinned, maxRows, path)
-    finally pinned.unpersist()
+  /** Largest working set one cell's estimation may hold, in doubles: the
+    * cell's own arrays, rows x (p + 4) (outcome, period, treatment,
+    * weight and p covariates). The estimators' temporaries are a small
+    * multiple of it, all in the memory of the one task that estimates
+    * the cell. 2^25 doubles is 256 MiB: ~5.6M rows per cell at p = 2. */
+  private[did] val MaxCellDoubles: Long = 1L << 25
+
+  /** Fails the fit when a cell reaching `rows` rows with `p` covariates
+    * would hold more than `maxDoubles` doubles. [[CellRows]] checks it as
+    * it gathers each row, so an oversized cell fails before it is held. */
+  private[did] def checkCellSize(c: CellDef, rows: Long, p: Int,
+      maxDoubles: Long = MaxCellDoubles): Unit = {
+    val doubles = rows * (p + 4)
+    def mib(d: Long) = f"${d * 8 / 1048576.0}%.1f MiB"
+    require(doubles <= maxDoubles,
+      s"cell (g=${c.g}, t=${c.tn}) reaches $rows rows with p=$p covariates: " +
+        s"$doubles doubles (${mib(doubles)}), over the per-cell cap of " +
+        s"$maxDoubles (${mib(maxDoubles)}; each cell is estimated in the " +
+        "memory of one task)")
   }
 
-  private def guardedCollectPinned(df: DataFrame, maxRows: Long,
-      path: String): Array[org.apache.spark.sql.Row] = {
-    val nCols = df.schema.length
-    val nRows = df.count()
-    // ~48 B Row overhead + ~24 B per boxed field (header + pointer)
-    val estBytes = nRows * (48L + 24L * nCols)
-    val maxBytes = maxRows * (48L + 24L * 8)
-    require(nRows <= maxRows && estBytes <= maxBytes,
-      f"$path path collects per-cell arrays to the driver: $nRows rows x " +
-        f"$nCols cols ~= ${estBytes / 1048576.0}%.0f MiB (cap " +
-        f"${maxBytes / 1048576.0}%.0f MiB / $maxRows rows). Use " +
-        "intercept-only xfmla (or p <= 16 with a built-in est_method) for " +
-        "the distributed path, or raise maxDriverCellRows")
-    df.collect()
-  }
-
-  private def fitRcCollect(
+  /** Per-cell path: every fit but the intercept-only closed form.
+    *
+    * A row belongs to the cells whose post or base period it sits in and
+    * whose treated cohort or control set holds its cohort: never treated,
+    * plus (not-yet-treated control group) the cohorts first treated after
+    * the cell's `n2val`. That is the R `did` cell sample. The reference's
+    * rc filter `GmC & post | tPret` (`csdids/ATTgt.py:388`) parses as
+    * `(GmC & post) | tPret` under Python precedence, letting EVERY
+    * base-period row (any cohort) into the control-pre bucket — an
+    * operator-precedence bug contradicting its own panel branch
+    * (`:336-339`, `dis_idx = G_m|C`). We implement the intended semantics
+    * (SURVEY.md §7.5).
+    *
+    * The rows are shuffled once by cell and sorted by (rowid, period), and
+    * each task estimates its cells in turn ([[CellRows]]). It emits the
+    * cell's IF rows, and adds the cell's ATT, skip flag and sum of squared
+    * IF to an accumulator, read once the one job that materializes the
+    * persisted IF table has run. A cell's rows reach its task in
+    * the same order however the input and the shuffle are partitioned,
+    * so its numbers are bit-identical across partitionings. */
+  private def fitPerCell(
       pp: PreprocessedPanel, cells: Vector[CellDef], estMethod: String,
-      customRc: Option[RcCellEstimator], maxRows: Long)
-      : (Array[Double], Array[Int], Array[Boolean], DataFrame) = {
+      customRc: Option[RcCellEstimator],
+      customPanel: Option[PanelCellEstimator])
+      : (Array[Double], Array[Int], Array[Boolean], DataFrame,
+         Array[Double]) = {
     val spark = pp.df.sparkSession
-    import spark.implicits._
-    val covNames = pp.config.covariates
-    val lf = longForm(pp, cells)
-      .select(Seq(col("cell"), col("rowid").cast("string").as("rid"),
-        col("w1"), col("yy"), col("d"), col("pst")) ++
-        covNames.map(col): _*)
-
-    val collected = guardedCollect(lf, maxRows, "covariate")
-
-    val byCell = collected.groupBy(_.getInt(0))
-    val est: RcCellEstimator = customRc.getOrElse(estMethod match {
-      case "reg" => CellEstimators.RegDidRc
-      case "ipw" => CellEstimators.IpwDidRc
-      case _ => CellEstimators.DrDidRc
-    })
-
-    val att = Array.fill(cells.length)(0.0)
-    val post = Array.fill(cells.length)(0)
-    val skipped = Array.fill(cells.length)(false)
-    val ifBuf = Vector.newBuilder[(String, Int, Double)]
-
-    cells.foreach { c =>
-      if (!c.zeroCell) {
-        byCell.get(c.idx) match {
-          case None => skipped(c.idx) = true
-          case Some(rows) =>
-            val nC = rows.length
-            val d = rows.map(_.getInt(4).toDouble)
-            val pst = rows.map(_.getInt(5).toDouble)
-            def empty(dv: Double, pv: Double) =
-              !rows.indices.exists(i => d(i) == dv && pst(i) == pv)
-            if (empty(1, 1) || empty(1, 0) || empty(0, 1) || empty(0, 0)) {
-              skipped(c.idx) = true
-            } else {
-              val cov = DenseMatrix.tabulate(nC, covNames.length)((i, j) =>
-                rows(i).getAs[Number](6 + j).doubleValue())
-              val cell = RcCell(rows.map(_.getDouble(3)), pst, d,
-                rows.map(_.getDouble(2)), cov)
-              val (a, inf) = est.estimate(cell)
-              att(c.idx) = a
-              post(c.idx) = c.postTreat
-              rows.indices.foreach { i =>
-                ifBuf += ((rows(i).getString(1), c.idx, inf(i)))
-              }
-            }
-        }
-      }
-    }
-    val ifRows = ifBuf.result().toDF("rowid", "cell", "inf")
-      .groupBy("rowid", "cell").agg(sum("inf").as("inf"))
-    (att, post, skipped, ifRows)
-  }
-
-  /** Balanced-panel path (only reachable with
-    * `allowUnbalancedPanel=false`): real `panel2cs2` pre/post pivot per
-    * cell (the reference's is broken — SURVEY.md §7.5a), then the panel
-    * estimators with the reference's n/n1 influence rescale
-    * (`csdids/ATTgt.py:374-376`). */
-  /** Wide per-(cell, unit) frame: one pass builds pre/post outcomes for
-    * every cell via conditional aggregation — the scalable pivot
-    * (SURVEY.md §2.3). Columns: cell, rid, y1, y0, gg, w1, cg, covs. */
-  private def panelWide(pp: PreprocessedPanel, cells: Vector[CellDef])
-      : DataFrame = {
-    val spark = pp.df.sparkSession
-    import spark.implicits._
-    val covNames = pp.config.covariates
+    val covs = pp.config.covariates
     val nyt = pp.config.controlGroup == "notyettreated"
-    val grid = cells.filterNot(_.zeroCell)
-      .map(c => (c.idx, c.g, c.tn, c.tpre, c.n2val))
-      .toDF("cell", "cg", "ctn", "ctpre", "cn2")
-    val cCond: Column =
-      if (nyt) (col("gg") === 0.0) ||
-        ((col("gg") > col("cn2")) && (col("gg") =!= col("cg")))
-      else col("gg") === 0.0
-    pp.df.join(broadcast(grid),
-        (col("tt") === col("ctn")) || (col("tt") === col("ctpre")))
-      .filter((col("gg") === col("cg")) || cCond)
-      .groupBy(col("cell"), col("rowid").cast("string").as("rid"))
-      .agg(
-        max(when(col("tt") === col("ctn"), col("yy"))).as("y1"),
-        (Seq(
-          max(when(col("tt") === col("ctpre"), col("yy"))).as("y0"),
-          first("gg").as("gg"), first("w1").as("w1"),
-          first("cg").as("cg")) ++
-          covNames.map(c => first(col(c)).as(c))): _*)
-      .na.drop(Seq("y1", "y0"))
-  }
+    val byPeriod: Map[Double, Seq[CellDef]] = cells.filterNot(_.zeroCell)
+      .flatMap(c => Seq(c.tn -> c, c.tpre -> c)).groupMap(_._1)(_._2)
+    // null period or cohort: null cells, exploded to no row
+    val cellsOf = udf((tt: Double, gg: Double) =>
+      byPeriod.getOrElse(tt, Nil).collect {
+        case c if gg == c.g || gg == 0.0 || (nyt && gg > c.n2val) => c.idx
+      })
+    val sorted = pp.df
+      .select((Seq(explode(cellsOf(col("tt"), col("gg"))).as("cell"),
+        col("rowid").cast("string").as("rowid"), col("tt"), col("gg"),
+        col("yy"), col("w1")) ++ covs.map(c => col(c).cast("double"))): _*)
+      .repartition(col("cell"))
+      .sortWithinPartitions("cell", "rowid", "tt")
 
-  private def fitPanelCollect(
-      pp: PreprocessedPanel, cells: Vector[CellDef], estMethod: String,
-      customPanel: Option[PanelCellEstimator], maxRows: Long)
-      : (Array[Double], Array[Int], Array[Boolean], DataFrame) = {
-    val spark = pp.df.sparkSession
-    import spark.implicits._
-    val covNames = pp.config.covariates
     val n = pp.n
-
-    val wide = panelWide(pp, cells)
-    val collected = guardedCollect(wide, maxRows, "panel")
-    val byCell = collected.groupBy(_.getInt(0))
-
-    val est: PanelCellEstimator = customPanel.getOrElse(estMethod match {
-      case "reg" => CellEstimators.RegDidPanel
-      case "ipw" => CellEstimators.IpwDidPanel
-      case _ => CellEstimators.DrDidPanel
-    })
-
-    val att = Array.fill(cells.length)(0.0)
-    val post = Array.fill(cells.length)(0)
-    val skipped = Array.fill(cells.length)(false)
-    val ifBuf = Vector.newBuilder[(String, Int, Double)]
-
-    cells.foreach { c =>
-      if (!c.zeroCell) {
-        byCell.get(c.idx) match {
-          case None => skipped(c.idx) = true
-          case Some(rows) =>
-            val d = rows.map(r => if (r.getDouble(4) == c.g) 1.0 else 0.0)
-            if (!d.contains(1.0) || !d.contains(0.0)) {
-              skipped(c.idx) = true
-            } else {
-              val n1 = rows.length
-              val cov = DenseMatrix.tabulate(n1, covNames.length)((i, j) =>
-                rows(i).getAs[Number](7 + j).doubleValue())
-              val cell = PanelCell(rows.map(_.getDouble(2)),
-                rows.map(_.getDouble(3)), d, rows.map(_.getDouble(5)), cov)
-              val (a, inf) = est.estimate(cell)
-              att(c.idx) = a
-              post(c.idx) = c.postTreat
-              val scale = n.toDouble / n1
-              rows.indices.foreach { i =>
-                ifBuf += ((rows(i).getString(1), c.idx, inf(i) * scale))
-              }
-            }
-        }
+    val estimate: CellRows => (CellOut, Iterator[Row]) =
+      if (pp.panel) {
+        val est = customPanel.getOrElse(estMethod match {
+          case "reg" => CellEstimators.RegDidPanel
+          case "ipw" => CellEstimators.IpwDidPanel
+          case _ => CellEstimators.DrDidPanel
+        })
+        _.panel(est, n)
+      } else {
+        val est = customRc.getOrElse(estMethod match {
+          case "reg" => CellEstimators.RegDidRc
+          case "ipw" => CellEstimators.IpwDidRc
+          case _ => CellEstimators.DrDidRc
+        })
+        _.rc(est)
+      }
+    val defs = cells.toArray
+    val p = covs.length
+    val outs = spark.sparkContext.collectionAccumulator[CellOut]("AttGt cells")
+    val ifRows = sorted.queryExecution.toRdd.mapPartitions { rows =>
+      val it = rows.buffered
+      Iterator.continually(()).takeWhile(_ => it.hasNext).flatMap { _ =>
+        val cell = new CellRows(defs(it.head.getInt(0)), p)
+        while (it.hasNext && it.head.getInt(0) == cell.c.idx) cell.add(it.next())
+        val (o, inf) = estimate(cell)
+        outs.add(o)
+        inf
       }
     }
-    val ifRows = ifBuf.result().toDF("rowid", "cell", "inf")
-    (att, post, skipped, ifRows)
+    val ifTable = Preprocess.persistOnce(spark.createDataFrame(ifRows,
+      StructType(Seq(StructField("rowid", StringType),
+        StructField("cell", IntegerType), StructField("inf", DoubleType)))))
+    ifTable.select("rowid", "cell", "inf").queryExecution.toRdd.count()
+
+    // a cell no row reached is skipped like a degenerate one; a re-run
+    // task reports its cells again with the same numbers
+    val att = Array.fill(cells.length)(0.0)
+    val post = Array.fill(cells.length)(0)
+    val skipped = cells.map(!_.zeroCell).toArray
+    val sumSq = Array.fill(cells.length)(0.0)
+    outs.value.forEach { o =>
+      att(o.cell) = o.att
+      skipped(o.cell) = o.skipped
+      if (!o.skipped) post(o.cell) = defs(o.cell).postTreat
+      sumSq(o.cell) = o.sumSq
+    }
+    (att, post, skipped, ifTable, sumSq)
+  }
+}
+
+/** What the per-cell path reports of one cell besides its IF rows. */
+private[did] final case class CellOut(
+    cell: Int, att: Double, skipped: Boolean, sumSq: Double)
+
+/** One cell's rows in its task, in (rowid, period) order, as
+  * [[AttGt.fitPerCell]] projects them: cell, rowid, tt, gg, yy, w1, then
+  * the `p` covariates. A row with a null rowid, outcome, weight or
+  * covariate is left out (complete cases); so, in the balanced panel,
+  * is a unit that then lacks the post or the base period. */
+private final class CellRows(val c: CellDef, p: Int,
+    maxDoubles: Long = AttGt.MaxCellDoubles) {
+  private val ids = ArrayBuffer.empty[String]
+  private val tt = new ArrayBuilder.ofDouble
+  private val gg = new ArrayBuilder.ofDouble
+  private val yy = new ArrayBuilder.ofDouble
+  private val ww = new ArrayBuilder.ofDouble
+  private val xs = new ArrayBuilder.ofDouble // row-major, p per row
+
+  def add(r: InternalRow): Unit =
+    if (!(r.isNullAt(1) || (4 until 6 + p).exists(r.isNullAt))) {
+      AttGt.checkCellSize(c, ids.length + 1L, p, maxDoubles)
+      ids += r.getUTF8String(1).toString
+      tt += r.getDouble(2); gg += r.getDouble(3)
+      yy += r.getDouble(4); ww += r.getDouble(5)
+      var j = 0
+      while (j < p) { xs += r.getDouble(6 + j); j += 1 }
+    }
+
+  /** Start index of each run of equal rowids, and the end. */
+  private def unitStarts: Array[Int] =
+    (ids.indices.filter(i => i == 0 || ids(i) != ids(i - 1)) :+ ids.length)
+      .toArray
+
+  /** Repeated cross section: the estimator on the cell's rows; the IF
+    * of a unit's rows (rowid := unit id puts a unit's pre- and
+    * post-period rows in one cell) summed into one entry. */
+  def rc(est: RcCellEstimator): (CellOut, Iterator[Row]) = {
+    val n = ids.length
+    val t = tt.result(); val g = gg.result(); val x = xs.result()
+    val post = t.map(v => if (v == c.tn) 1.0 else 0.0)
+    val d = g.map(v => if (v == c.g) 1.0 else 0.0)
+    val buckets = (0 until n).map(i => (d(i), post(i))).toSet
+    if (buckets.size < 4) return (CellOut(c.idx, 0.0, true, 0.0), Iterator.empty)
+    val (att, inf) = est.estimate(RcCell(yy.result(), post, d, ww.result(),
+      DenseMatrix.tabulate(n, p)((i, j) => x(i * p + j))))
+    require(inf.length == n,
+      s"estimator returned ${inf.length} influence values for $n rows")
+    val starts = unitStarts
+    val unitInf = starts.indices.init.map(u =>
+      (starts(u) until starts(u + 1)).foldLeft(0.0)((s, i) => s + inf(i)))
+    (CellOut(c.idx, att, false, unitInf.foldLeft(0.0)((s, v) => s + v * v)),
+      starts.indices.init.iterator.map(u =>
+        Row(ids(starts(u)), c.idx, unitInf(u))))
+  }
+
+  /** Balanced panel: each unit's outcomes at the post and the base
+    * period (their max, like a SQL pivot), its cohort, weight and
+    * covariates from its earliest row; the IF rescaled by n/n1
+    * (`csdids/ATTgt.py:374-376`) for the `n` units of the panel. */
+  def panel(est: PanelCellEstimator, n: Long): (CellOut, Iterator[Row]) = {
+    val t = tt.result(); val y = yy.result()
+    def at(from: Int, to: Int, period: Double): Option[Double] =
+      (from until to).filter(t(_) == period).map(y).maxOption
+    val starts = unitStarts
+    val units = starts.indices.init.flatMap { u =>
+      val (a, b) = (starts(u), starts(u + 1))
+      for (y1 <- at(a, b, c.tn); y0 <- at(a, b, c.tpre)) yield (a, y1, y0)
+    }
+    val first = units.map(_._1).toArray
+    val g = gg.result(); val w = ww.result(); val x = xs.result()
+    val d = first.map(i => if (g(i) == c.g) 1.0 else 0.0)
+    if (!d.contains(1.0) || !d.contains(0.0))
+      return (CellOut(c.idx, 0.0, true, 0.0), Iterator.empty)
+    val n1 = first.length
+    val (att, inf) = est.estimate(PanelCell(units.map(_._2).toArray,
+      units.map(_._3).toArray, d, first.map(w),
+      DenseMatrix.tabulate(n1, p)((k, j) => x(first(k) * p + j))))
+    require(inf.length == n1,
+      s"estimator returned ${inf.length} influence values for $n1 units")
+    val scaled = inf.map(_ * (n.toDouble / n1))
+    (CellOut(c.idx, att, false, scaled.foldLeft(0.0)((s, v) => s + v * v)),
+      first.indices.iterator.map(k => Row(ids(first(k)), c.idx, scaled(k))))
   }
 }

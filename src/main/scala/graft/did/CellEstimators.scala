@@ -27,19 +27,39 @@ final case class PanelCell(
 }
 
 /** Extension point mirroring the reference's callable `est_method`
-  * (`csdids/ATTgt.py:362-363,424-425`): any `(cell) => (att, IF)` works. */
-trait RcCellEstimator { def estimate(cell: RcCell): (Double, Array[Double]) }
-trait PanelCellEstimator { def estimate(cell: PanelCell): (Double, Array[Double]) }
+  * (`csdids/ATTgt.py:362-363,424-425`): any `(cell) => (att, IF)` works.
+  * The fit runs it inside the Spark task that holds the cell, so an
+  * implementation must serialize. */
+trait RcCellEstimator extends Serializable {
+  def estimate(cell: RcCell): (Double, Array[Double])
+}
+trait PanelCellEstimator extends Serializable {
+  def estimate(cell: PanelCell): (Double, Array[Double])
+}
 
 /** Sant'Anna & Zhao (2020) doubly-robust / outcome-regression 2x2 DiD
   * estimators with analytic influence functions — the surface the
   * reference imports from the external `drdid` package
   * (`csdids/ATTgt.py:19`, `Pipfile:12`). Implemented from the published
-  * formulas (J. Econometrics 219(1)); driver-side Breeze on collected
-  * cells. Cells reduced to sufficient statistics stay small; the
-  * intercept-only fast path never materializes cells at all (AttGt).
+  * formulas (J. Econometrics 219(1)); Breeze on one cell's arrays,
+  * inside the Spark task that holds the cell (`AttGt.fitPerCell`). The
+  * intercept-only repeated-cross-section fit never builds cells at all
+  * (`AttGt.fitRcDistributed`).
   */
 object CellEstimators {
+
+  /** IRLS stops when the just-APPLIED Newton step is below this. Newton
+    * is quadratically convergent here, so the step criterion overshoots:
+    * 1e-10 lands gamma at machine precision. The tight stop is what lets
+    * `q_att_gt_cov`'s analytic SE be pinned at 6dp against the
+    * INDEPENDENT numpy fixture (scripts/gen_attgt_cov_fixture.py):
+    * high-leverage odds weights amplify residual gamma error ~1e-14 into
+    * ~5e-5 absolute SE wiggle at 1e-7, which straddled the 6dp round on
+    * 3 of 54 fixture cells. */
+  private[did] val IrlsTol = 1e-10
+
+  /** Cap on Newton steps of [[logisticIrls]]. */
+  private[did] val IrlsMaxIter = 50
 
   /** Weighted OLS via normal equations; returns coefficients. */
   private[did] def wls(
@@ -55,16 +75,15 @@ object CellEstimators {
     * estimator behind `glm(D ~ -1 + X, binomial, weights)`. Matches an
     * unregularized fit to ~1e-10 (SURVEY.md §7.6: ml's LBFGS-regularized
     * LogisticRegression is NOT a substitute). Stops after
-    * [[DistributedRc.IrlsMaxIter]] Newton steps, like the distributed
-    * loops. */
+    * [[IrlsMaxIter]] Newton steps. */
   private[did] def logisticIrls(
       x: DenseMatrix[Double], d: DenseVector[Double], w: DenseVector[Double],
-      tol: Double = DistributedRc.IrlsTol): DenseVector[Double] = {
+      tol: Double = IrlsTol): DenseVector[Double] = {
     val p = x.cols
     var beta = DenseVector.zeros[Double](p)
     var iter = 0
     var converged = false
-    while (iter < DistributedRc.IrlsMaxIter && !converged) {
+    while (iter < IrlsMaxIter && !converged) {
       val eta = x * beta
       val mu = eta.map(e => 1.0 / (1.0 + math.exp(-e)))
       val wIrls = w *:* mu *:* (mu.map(m => 1.0 - m))

@@ -1,10 +1,11 @@
 package graft.did
 
 import java.nio.ByteBuffer
-import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 final case class MBootResult(
     bres: Array[Array[Double]], // biters x K
@@ -98,7 +99,8 @@ object MBoot {
       s"mboot needs biters >= 2 (SE and ddof=1 covariance), got $biters")
     val seedMix = splitmix64(seed)
     val parts = ifTable
-      .select(col("rowid").cast("string"), col("cell"), col("inf")).rdd
+      .select(col("rowid").cast("string"), col("cell"), col("inf"))
+      .queryExecution.toRdd
       .coalesce(ifTable.sparkSession.sparkContext.defaultParallelism)
       .mapPartitions(rows =>
         Iterator.single(signedSums(rows, k, biters, seedMix)))
@@ -112,24 +114,25 @@ object MBoot {
 
   /** One partition's B x K signed sums, cell-major
     * (`buf(cell * biters + b) = sum of s_b(rowid) * inf`). */
-  private def signedSums(rows: Iterator[Row], k: Int, biters: Int,
+  private def signedSums(rows: Iterator[InternalRow], k: Int, biters: Int,
       seedMix: Long): Array[Double] = {
     val buf = new Array[Double](k * biters)
     val words = (biters + 63) >>> 6
-    val bitsOf = new java.util.HashMap[String, Array[Long]]()
+    val bitsOf = new java.util.HashMap[UTF8String, Array[Long]]()
     val md5 = MessageDigest.getInstance("MD5")
     rows.foreach { r =>
-      val key = r.getString(0)
+      // the row's bytes are reused by the next row: a cached key is a copy
+      val key = r.getUTF8String(0)
       var bits = bitsOf.get(key)
       if (bits == null) {
-        val d = md5.digest(key.getBytes(StandardCharsets.UTF_8))
+        val d = md5.digest(key.getBytes)
         val keyMix = ByteBuffer.wrap(d).getLong ^ seedMix
         bits = new Array[Long](words)
         var b = 0
         while (b < biters) {
           bits(b >>> 6) |= signBit(keyMix, b) << (b & 63); b += 1
         }
-        bitsOf.put(key, bits)
+        bitsOf.put(key.copy(), bits)
       }
       // s * inf without a branch: a set bit flips inf's sign bit
       val inf = java.lang.Double.doubleToRawLongBits(r.getDouble(2))

@@ -127,8 +127,7 @@ object Similarity {
     * (default) derives the block count from a one-pass count x dim
     * estimate so per-task bytes stay under `maxTaskBlockBytes` (and task
     * count ~ cluster parallelism); an explicit `nBlocks` that would
-    * exceed the budget is rejected with the estimated bytes, like
-    * `AttGt.guardedCollect`. */
+    * exceed the budget is rejected with the estimated bytes. */
   def cosineNearDupPairs(df: DataFrame, threshold: Double,
       idCol: String = "vec_id", vecCol: String = "embedding",
       nBlocks: Int = 0, maxTaskBlockBytes: Long = 512L << 20): DataFrame = {

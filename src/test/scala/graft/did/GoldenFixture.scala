@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Frozen end-to-end fixture: one seeded DGP run through the full
   * engine surface (ATT(g,t) with bootstrap, all four aggte types, and a
-  * covariate run through the distributed Gram path), serialized as
+  * covariate run through the per-cell path), serialized as
   * labeled CSV lines at 10 significant digits.
   *
   * The reference repo cannot provide this pin — its committed notebook
@@ -53,7 +53,7 @@ object GoldenFixture {
     emit("dynamic", Aggte.dynamic(prep))
     f1.unpersist(); pp1.unpersist()
 
-    // run 2: covariate doubly-robust via the distributed Gram/IRLS path
+    // run 2: covariate doubly-robust via the per-cell path
     val pp2 = Preprocess.run(data,
       TestPanels.cfg.copy(xfmla = Some("y ~ x1 + x2")))
     val f2 = AttGt.fit(pp2)

@@ -102,12 +102,29 @@ class JobBudgetSpec extends AnyFunSuite with SparkSpec {
       "PreTest.wald" -> 2))
   }
 
-  test("a covariate DistributedRc fit holds its job budget") {
-    val pp = Preprocess.run(staggered(spark, nUnits = 200, noise = 0.1),
-      cfg.copy(xfmla = Some("y ~ x1 + x2")))
-    val (n, fit) = jobsAnd(AttGt.fit(pp, estMethod = "dr"))
+  private def fitJobs(c: AttGtConfig,
+      custom: Option[RcCellEstimator] = None): Int = {
+    val pp = Preprocess.run(staggered(spark, nUnits = 200, noise = 0.1), c)
+    val (n, fit) = jobsAnd(AttGt.fit(pp, estMethod = "dr", customRc = custom))
     fit.unpersist(); pp.unpersist()
-    assertBudget(Seq("AttGt.fit(dr, x1 + x2)" -> n),
-      Map("AttGt.fit(dr, x1 + x2)" -> 14))
+    n
+  }
+
+  private val covCfg = cfg.copy(xfmla = Some("y ~ x1 + x2"))
+
+  // The covariate repeated-cross-section fit, once its own distributed
+  // path, runs the per-cell path: one job, the IF table's materialization.
+  test("a covariate DistributedRc fit holds its job budget") {
+    assertBudget(Seq("AttGt.fit(dr, x1 + x2)" -> fitJobs(covCfg)),
+      Map("AttGt.fit(dr, x1 + x2)" -> 1))
+  }
+
+  test("per-cell fits (balanced-panel covariates, a custom estimator) " +
+      "hold their job budgets") {
+    assertBudget(Seq(
+      "AttGt.fit(panel dr, x1 + x2)" ->
+        fitJobs(covCfg.copy(allowUnbalancedPanel = false)),
+      "AttGt.fit(customRc)" -> fitJobs(cfg, Some(CellEstimators.RegDidRc))),
+      Map("AttGt.fit(panel dr, x1 + x2)" -> 1, "AttGt.fit(customRc)" -> 1))
   }
 }
