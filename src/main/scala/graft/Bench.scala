@@ -29,8 +29,8 @@ object Bench {
   val FlagshipName = "att_fit_cold_bstrap"
 
   /** Warm bootstrap-pass timing: builds + materializes the DiD fit
-    * UNTIMED, then times only `MBoot.run` over the persisted IF
-    * table. The decade table's mboot >1 exponent reads carried the
+    * UNTIMED, then times only `MBoot.run` over the long-form view of
+    * the persisted IF store (regrouped by unit inside the timed job). The decade table's mboot >1 exponent reads carried the
     * COLD fit+preprocess inside the timing — this entry is the number
     * that answers "is the bootstrap pass itself sublinear" without
     * the fit conflated in. Like the flagship, not a `queries` entry
@@ -166,7 +166,7 @@ object Bench {
     // warm bootstrap-pass split (VERDICT r13 #5): the mboot query
     // timings carry the cold fit+preprocess, which muddied the decade
     // table's only >1 exponent reads. Build + MATERIALIZE the fit
-    // untimed (ifTable.count() forces the persisted IF frame), then
+    // untimed (ifTable.count() forces the persisted IF store), then
     // time only the bootstrap contraction — min over reps like every
     // other entry.
     val results =

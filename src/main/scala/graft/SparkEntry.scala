@@ -633,9 +633,9 @@ object SparkEntry {
     }),
 
     // §2.7 extension: full covariance matrix of the ATT(g,t) estimates
-    // (upper triangle) off the sparse IF store — ONE unit-id self-join
-    // whose shuffle carries only K^2-row partial aggregates (PreTest
-    // .vcov), then the tiny cell grid broadcast on for labels. The same
+    // (upper triangle) off the unit-major IF store — ONE shuffle-free
+    // pass folding each unit's pair products into a K x K triangle
+    // (PreTest.vcov), then the tiny cell grid broadcast on for labels. The same
     // per-unit IF chain as q_if_norms makes every entry ANSI-expressible;
     // this matrix drives the PreTest.wald pre-trend test (driver-side
     // K_pre x K_pre solve, spec-pinned — matrix inversion is not SQL).

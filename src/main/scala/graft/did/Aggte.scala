@@ -1,7 +1,6 @@
 package graft.did
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
 /** Aggregation of the ATT(g,t) surface (`compute_aggte`,
   * `csdids/ATTgt.py:519-878`): `simple`, `group` (cohort), `calendar`,
@@ -9,13 +8,16 @@ import org.apache.spark.sql.functions._
   * reference (SURVEY.md §2.9), implemented here as a flagged extension
   * with the R `did` package semantics.
   *
-  * All influence-function algebra runs distributed on the sparse
-  * long-form IF table; only K-sized vectors ever reach the driver. The
+  * All influence-function algebra runs distributed on the fit's
+  * unit-major store ([[IFStore]]): a request is one Spark job with no
+  * shuffle, a pass over the units that maps each to its members'
+  * influence values and folds them into sums of squares or bootstrap
+  * draws; only member-sized vectors reach the driver. The
   * weight-estimation influence (`wif`, `csdids/utils_aggte.py:7-36`)
   * reduces to a per-unit closed form
-  * `wbar * (attW(gbar)/S - c2 * cnt(gbar))` over small broadcast
-  * cohort->coefficient maps, so it is one `when`-chain column, not a
-  * matrix product.
+  * `wbar * (attW(gbar)/S - c2 * cnt(gbar))` over a small
+  * cohort->coefficient map held in the task closure, not a matrix
+  * product.
   *
   * Intended-semantics notes (SURVEY.md §7.5): the reference's overall
   * `group` wif indexes cohorts through the first nG cells
@@ -27,7 +29,6 @@ object Aggte {
 
   final case class Prep(
       fit: AttGtFit,
-      units: DataFrame,      // rowid (string), wbar, gbar — persisted small
       group: Array[Double],  // recoded per-cell cohort index
       t: Array[Double],      // recoded per-cell period index
       glist: Array[Double],  // recoded cohorts
@@ -41,24 +42,19 @@ object Aggte {
       attCell: Array[Double],
       naRm: Boolean) {
     def att(k: Int): Double = attCell(k)
+
+    /** Per-unit weight and cohort: rowid STRING, wbar, gbar — a view of
+      * the fit's store. */
+    lazy val units: DataFrame = fit.store.unitsView
   }
 
   /** `naRm` drops cells whose ATT estimate is NaN before aggregating
     * (`csdids/ATTgt.py:565-590`); without it any NaN raises, like the
     * reference. Skipped-degenerate cells carry att=0 (reference
-    * `add_att_data()` default) and are NOT pruned. */
+    * `add_att_data()` default) and are NOT pruned. Runs no Spark job:
+    * the cohort weights were folded when the fit built its store. */
   def prepare(fit: AttGtFit, naRm: Boolean = false): Prep = {
     val pp = fit.pp
-    // Per-unit weights and cohort (`csdids/ATTgt.py:591-601`).
-    val units0 =
-      if (pp.panel)
-        pp.df.filter(col("tt") === pp.tlist.head)
-          .select(col("rowid").cast("string").as("rowid"),
-            col("w1").as("wbar"), col("gg").as("gbar"))
-      else
-        pp.df.groupBy(col("rowid").cast("string").as("rowid"))
-          .agg(avg("w1").as("wbar"), avg("gg").as("gbar"))
-    val units = Preprocess.persistOnce(units0)
 
     // na_rm pruning (`csdids/ATTgt.py:565-590`) or NaN rejection.
     val keep = fit.cells.indices.filter(i => !fit.att(i).isNaN).toArray
@@ -79,31 +75,14 @@ object Aggte {
     val tlistR = t.distinct.sorted
 
     // pg: cohort probability weights pg[g] = mean(wbar * 1{gbar==g})
-    // (`csdids/ATTgt.py:637-646`) — one pass over the units, which also
-    // materializes their cache, each partition folded into a driver-side
-    // cohort -> sum map (no SQL aggregate to generate code for), added
-    // in partition order.
+    // (`csdids/ATTgt.py:637-646`), from the store's per-cohort sums
     val n = pp.n
-    val sums = units.select("gbar", "wbar").queryExecution.toRdd
-      .mapPartitions { rows =>
-        val m = scala.collection.mutable.LinkedHashMap.empty[Double, Double]
-        rows.foreach { r =>
-          if (!r.isNullAt(0) && !r.isNullAt(1))
-            m(r.getDouble(0)) = m.getOrElse(r.getDouble(0), 0.0) + r.getDouble(1)
-        }
-        Iterator.single(m.toSeq)
-      }.collect()
-      .foldLeft(Map.empty[Double, Double]) { (acc, part) =>
-        part.foldLeft(acc) { case (a, (g, sw)) =>
-          a.updated(g, a.getOrElse(g, 0.0) + sw)
-        }
-      }
     val pgByCohort =
-      pp.glist.map(g => g -> sums.getOrElse(g, 0.0) / n).toMap
+      pp.glist.map(g => g -> fit.store.stats.cohortW.getOrElse(g, 0.0) / n).toMap
     val pg = origCohort.map(pgByCohort)
     val origGlist = pp.glist.filter(keptCohorts.contains).toArray
 
-    Prep(fit, units, group, t, glist, tlistR, origGlist,
+    Prep(fit, group, t, glist, tlistR, origGlist,
       pgByCohort, pg, origCohort, n, keep, attCell, naRm)
   }
 
@@ -121,67 +100,37 @@ object Aggte {
     }
   }
 
-  /** Family of aggregated per-unit influence functions, ONE pass for all
-    * members (`get_agg_inf_func`, `utils_aggte.py:38-50`, batched):
-    * member m has `IF_m(unit) = sum_cells wt*inf + wbar*coef_m(gbar)`.
-    * Returns long-form (rowid, midx, v); units touched only by the wif
-    * term still appear (union-aggregate, no outer join needed). */
-  private def familyIF(p: Prep,
-      cellWts: Seq[(Int, Int, Double)],      // (cell, midx, wt)
-      wifCoefs: Seq[(Int, Double, Double)])  // (midx, cohort g, coef)
-      : DataFrame = {
-    val spark = p.fit.ifTable.sparkSession
-    import spark.implicits._
-    // positions -> ifTable cell ids (differ after na_rm pruning)
-    val wdf = cellWts.map { case (k, m, w) => (p.cellIds(k), m, w) }
-      .toDF("cell", "midx", "wt")
-    // ONE shuffle keyed (rowid, midx): the raw weighted-IF rows union
-    // the wif rows BEFORE the aggregation — a pre-aggregated base would
-    // shuffle the same data twice on the same keys.
-    val base = p.fit.ifTable.join(broadcast(wdf), "cell")
-      .select(col("rowid"), col("midx"), (col("inf") * col("wt")).as("v"))
-    val rows =
-      if (wifCoefs.isEmpty) base
-      else {
-        val cdf = wifCoefs.toDF("midx", "cg", "coef")
-        val wifRows = p.units.join(broadcast(cdf), col("gbar") === col("cg"))
-          .select(col("rowid"), col("midx"),
-            (col("wbar") * col("coef")).as("v"))
-        base.union(wifRows)
-      }
-    rows.groupBy("rowid", "midx").agg(sum("v").as("v"))
-      .select("rowid", "midx", "v")
-  }
-
-  /** Per-member SEs from a familyIF frame (`get_se`,
-    * `utils_aggte.py:53-66`): analytic `sqrt(sum IF^2)/n` in one
-    * aggregation, or one COMBINED seeded multiplier bootstrap (per-member
-    * IQR SEs are column-independent, so one run over all members is
+  /** SEs of a family of aggregated members in ONE pass over the store
+    * (`get_agg_inf_func` and `get_se`, `utils_aggte.py:38-66`, batched):
+    * member m has `IF_m(unit) = sum_cells wt*inf + wbar*coef_m(gbar)`
+    * ([[Members]]), from (cell position, member, weight) and (member,
+    * cohort, coefficient) triples. The pass folds it into `sum IF^2` for
+    * the analytic SE `sqrt(sum IF^2)/n`, and, bootstrapped, into one
+    * COMBINED seeded multiplier bootstrap of all members (per-member IQR
+    * SEs are column-independent, so one run over all members is
     * statistically identical to the reference's per-column calls),
-    * clustered like the fit's own bootstrap. */
-  private def familySe(p: Prep, fam: DataFrame, nMembers: Int,
-      bs: Boolean): Array[Double] = {
-    val out = Array.fill(nMembers)(Double.NaN)
-    if (bs) {
-      val r = MBoot.runFor(p.fit.pp, asCells(fam), nMembers)
-      r.se.copyToArray(out)
-    } else {
-      fam.groupBy("midx").agg(sum(col("v") * col("v")).as("ss")).collect()
-        .foreach(r => out(r.getInt(0)) = math.sqrt(r.getDouble(1)) / p.n)
-    }
-    out.map(se => if (se <= Stats.DegenerateTol) Double.NaN else se)
-  }
-
-  /** A familyIF frame in MBoot's (rowid, cell, inf) layout. */
-  private def asCells(fam: DataFrame): DataFrame =
-    fam.select(col("rowid"), col("midx").as("cell"), col("v").as("inf"))
-
-  /** Sup-t critical value over members 0..k-1 of `fam`, bootstrapped
-    * like [[familySe]], with the reference's clamps. */
-  private def cbandCritVal(p: Prep, fam: DataFrame, k: Int): Double = {
-    val c = MBoot.runFor(p.fit.pp, asCells(fam.filter(col("midx") < k)), k)
-      .critVal
-    clampCritVal(c, Stats.normPpf(1 - p.fit.pp.config.alp / 2))
+    * clustered like the fit's own bootstrap. With `band = Some(k)` the
+    * sup-t critical value over members 0..k-1 comes from the first k
+    * columns of the same draws, with the reference's clamps; else it is
+    * the pointwise normal quantile. */
+  private def family(p: Prep, typec: String,
+      cellWts: Seq[(Int, Int, Double)],   // (cell position, member, wt)
+      wifCoefs: Seq[(Int, Double, Double)], // (member, cohort g, coef)
+      nMembers: Int, bs: Boolean, band: Option[Int])
+      : (Array[Double], Double) = {
+    val alp = p.fit.pp.config.alp
+    val z = Stats.normPpf(1 - alp / 2)
+    // positions -> store cell ids (differ after na_rm pruning)
+    val members = Members(nMembers,
+      cellWts.map { case (k, m, w) => (p.cellIds(k), m, w) }, wifCoefs)
+    val pass = MBoot.passOver(p.fit.pp, p.fit.store, members,
+      bootstrap = bs || band.nonEmpty, s"Aggte.$typec/pass")
+    val se =
+      if (bs) MBoot.finish(pass.draws, nMembers, pass.n, alp).se
+      else pass.sumSq.map(ss => math.sqrt(ss) / p.n)
+    val crit = band.fold(z)(k => clampCritVal(
+      MBoot.finish(pass.draws.map(_.take(k)), k, pass.n, alp).critVal, z))
+    (se.map(se => if (se <= Stats.DegenerateTol) Double.NaN else se), crit)
   }
 
   def simple(p: Prep, maxE: Double = Double.PositiveInfinity,
@@ -191,11 +140,11 @@ object Aggte {
       .filter(i => p.group(i) <= p.t(i) && p.t(i) <= p.group(i) + maxE)
     val s = keepers.map(p.pg).sum
     val att = keepers.map(k => p.att(k) * p.pg(k)).sum / s
-    val fam = familyIF(p,
+    val (ses, _) = family(p, "simple",
       keepers.map(k => (k, 0, p.pg(k) / s)),
-      wifCoefFor(p, keepers).toSeq.map { case (g, c) => (0, g, c) })
-    val se = familySe(p, fam, 1, bs)(0)
-    AggteResult("simple", att, se, Nil, Nil, Nil,
+      wifCoefFor(p, keepers).toSeq.map { case (g, c) => (0, g, c) },
+      1, bs, None)
+    AggteResult("simple", att, ses(0), Nil, Nil, Nil,
       Stats.normPpf(1 - p.fit.pp.config.alp / 2), p.fit.pp.config.alp)
   }
 
@@ -260,14 +209,10 @@ object Aggte {
     val cellWts = perG.flatMap { case (gi, which, s) =>
       which.map(k => (k, gi, p.pg(k) / s))
     } ++ overallWts
-    val fam = familyIF(p, cellWts, overallWif).persist()
-    val ses = familySe(p, fam, nG + 1, bs)
+    val (ses, critEgt) = family(p, "group", cellWts, overallWif, nG + 1, bs,
+      Option.when(cb)(nG))
     val seEgt = ses.take(nG)
     val se = ses(nG)
-
-    val critEgt =
-      if (cb) cbandCritVal(p, fam, nG) else Stats.normPpf(1 - cfg.alp / 2)
-    fam.unpersist()
     AggteResult("group", overallAtt, se, p.origGlist.toSeq, attEgt.toSeq,
       seEgt.toSeq, critEgt, cfg.alp)
   }
@@ -307,14 +252,10 @@ object Aggte {
       .groupBy(_._1)
       .map { case (g, cs) => (nT, g, cs.map(_._2).sum / nT) }
 
-    val fam = familyIF(p, cellWts, wifCoefs).persist()
-    val ses = familySe(p, fam, nT + 1, bs)
+    val (ses, critEgt) = family(p, "calendar", cellWts, wifCoefs, nT + 1, bs,
+      Option.when(cb)(nT))
     val seEgt = ses.take(nT)
     val se = ses(nT)
-
-    val critEgt =
-      if (cb) cbandCritVal(p, fam, nT) else Stats.normPpf(1 - cfg.alp / 2)
-    fam.unpersist()
 
     val overallAtt = perT.map(_._4).sum / nT
     AggteResult("calendar", overallAtt, se, perT.map(t => t2orig(t._1)),
@@ -382,11 +323,8 @@ object Aggte {
       .groupBy(_._1)
       .map { case (g, cs) => (nE, g, cs.map(_._2).sum / post.length) }
 
-    val fam = familyIF(p, cellWts, wifCoefs).persist()
-    val ses = familySe(p, fam, nE + 1, bs)
-    val critEgt =
-      if (cb) cbandCritVal(p, fam, nE) else Stats.normPpf(1 - cfg.alp / 2)
-    fam.unpersist()
+    val (ses, critEgt) = family(p, "dynamic", cellWts, wifCoefs, nE + 1, bs,
+      Option.when(cb)(nE))
     AggteResult("dynamic", overallAtt, ses(nE), perE.map(_._1),
       perE.map(_._4), ses.take(nE).toSeq, critEgt, cfg.alp)
   }

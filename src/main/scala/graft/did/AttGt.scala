@@ -5,8 +5,6 @@ import scala.collection.mutable.{ArrayBuffer, ArrayBuilder}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType,
-  StructField, StructType}
 import breeze.linalg.DenseMatrix
 
 /** One (g,t) cell definition, resolved at the driver from tlist/glist
@@ -20,11 +18,13 @@ final case class CellDef(
 
 /** Fitted ATT(g,t) surface plus the distributed influence-function store.
   *
-  * `ifTable` is the long-form sparse equivalent of the reference's dense
-  * n x K driver matrix (`csdids/ATTgt.py:273,476`): one row per
-  * (unit, cell) with a non-zero influence value. At 100 TB the dense
-  * matrix is impossible; the long form keeps every downstream consumer
-  * (SE, bootstrap, aggregation) a distributed aggregation.
+  * `store` holds the influence function unit-major, one persisted row per
+  * unit with its cells and values ([[IFStore]]): the sparse equivalent of
+  * the reference's dense n x K driver matrix (`csdids/ATTgt.py:273,476`),
+  * which no driver could hold at scale. The bootstrap, every aggregation
+  * and the pre-test each read it in one pass without a shuffle.
+  * `ifTable` is the long-form view of the same rows, one (rowid, cell,
+  * inf) row per unit and cell.
   */
 final case class AttGtFit(
     pp: PreprocessedPanel,
@@ -32,12 +32,15 @@ final case class AttGtFit(
     att: Array[Double],
     post: Array[Int],
     skipped: Array[Boolean],
-    ifTable: DataFrame, // columns: rowid, cell INT, inf DOUBLE
+    store: IFStore,
     seAnalytic: Array[Double],
     se: Array[Double],
     critVal: Double,
     estMethod: String,
     bstrap: Boolean) {
+
+  /** Columns: rowid STRING, cell INT, inf DOUBLE. */
+  lazy val ifTable: DataFrame = store.longForm
 
   /** Result surface as a typed Dataset-backed DataFrame, correct
     * lower/upper orientation (reference swaps them, SURVEY.md §7.5b). */
@@ -53,7 +56,7 @@ final case class AttGtFit(
     }.toDF()
   }
 
-  def unpersist(): Unit = { ifTable.unpersist(); () }
+  def unpersist(): Unit = store.unpersist()
 }
 
 /** Driver-orchestrated in the reference (one growing logical plan and >=3
@@ -64,14 +67,18 @@ final case class AttGtFit(
   *  - closed form: a built-in estimator in the repeated-cross-section
   *    regime with an intercept-only formula. Per-(cohort, period) sums in
   *    one pass, the 2x2 arithmetic on the driver, and the per-row
-  *    influence function from one broadcast equi-join of per-cell
-  *    constants ([[fitRcDistributed]]);
+  *    influence function from per-cell constants held in the task
+  *    closure ([[fitRcDistributed]]);
   *  - per cell: every other fit (covariates in either regime, the
   *    balanced panel, custom estimators). The rows are shuffled once by
   *    cell and each cell is estimated inside its task with
   *    [[CellEstimators]] or the caller's estimator, the way R `did` and
   *    the reference estimate one 2x2 per cell (`csdids/ATTgt.py:391-432`),
   *    without collecting a cell's rows out of Spark ([[fitPerCell]]).
+  *
+  * Both paths end in the same job: the rows' influence entries and the
+  * units' weights, cohorts and clusters are shuffled by rowid and folded
+  * into one row per unit, the persisted [[IFStore]].
   */
 object AttGt {
 
@@ -99,8 +106,8 @@ object AttGt {
         "the repeated-cross-section regime; pass customRc instead or set " +
         "allowUnbalancedPanel=false")
 
-    // Every internal pass here reduces to K = #cells rows, joins a
-    // broadcast of a tiny driver-built table or shuffles once by cell:
+    // Every internal pass here reduces to K = #cells rows or shuffles
+    // once by cell and once by unit:
     // AQE has nothing to re-plan but adds a planning round and extra jobs
     // to each of them. So the fit plans on the caller session's engine
     // session (AQE off, the caller's conf otherwise), never touching the
@@ -120,13 +127,14 @@ object AttGt {
       customRc: Option[RcCellEstimator],
       customPanel: Option[PanelCellEstimator]): AttGtFit = {
     val cells = buildCells(pp, basePeriod)
-    // both paths end with the IF table persisted and materialized, and
-    // the per-cell sums of squared influence values in hand
-    val (att, post, skipped, ifTable, sumSq) =
+    // both paths end with the store persisted and materialized, and the
+    // per-cell sums of squared influence values in hand: the closed form
+    // folds them from the store's units, the per-cell path sums each
+    // cell in its task, in an order no partitioning changes
+    val (att, post, skipped, store, sumSq) =
       if (!pp.panel && pp.config.interceptOnly && customRc.isEmpty) {
-        val (a, p, s, t) = fitRcDistributed(pp, cells, estMethod)
-        Preprocess.persistOnce(t)
-        (a, p, s, t, cellSumSq(t, cells.length))
+        val (a, p, s, st) = fitRcDistributed(pp, cells, estMethod)
+        (a, p, s, st, st.stats.sumSq)
       } else fitPerCell(pp, cells, estMethod, customRc, customPanel)
 
     // Analytic per-cell SE: sqrt(mean(IF^2)/n) over all n units (absent
@@ -135,12 +143,29 @@ object AttGt {
 
     val (se, crit) =
       if (bstrap) {
-        val b = MBoot.runFor(pp, ifTable, cells.length)
-        (b.se, b.critVal)
+        val k = cells.length
+        val b = MBoot.passOver(pp, store, Members.identity(k),
+          bootstrap = true, "MBoot/signedSums")
+        val r = MBoot.finish(b.draws, k, b.n, pp.config.alp)
+        (r.se, r.critVal)
       } else (Array.fill(cells.length)(0.0), 0.0)
 
-    AttGtFit(pp, cells, att, post, skipped, ifTable, seA, se, crit,
+    AttGtFit(pp, cells, att, post, skipped, store, seA, se, crit,
       estMethod, bstrap)
+  }
+
+  /** The store of `pp`'s fragments: a clustered fit carries each unit's
+    * cluster id (`clustervar` unset or equal to `idname` bootstraps by
+    * unit, as the reference drops idname from clustervars,
+    * `csdids/mboot.py:88-90`), and a balanced panel takes each unit's
+    * weight and cohort from its first-period row. */
+  private def buildStore(pp: PreprocessedPanel, k: Int,
+      entries: Option[DataFrame], lookup: IFStore.Lookup): IFStore = {
+    val cfg = pp.config
+    val cv = cfg.clustervar.filter(_ != cfg.idname)
+    val rows = IFStore.rowFragments(pp.df, cv.fold(lit(null))(col))
+    IFStore.build(entries.fold(rows)(e => rows.union(IFStore.entryFragments(e))),
+      k, if (pp.panel) Some(pp.tlist.head) else None, lookup, cv.nonEmpty)
   }
 
   /** (g,t) grid with the varying/universal base-period logic of
@@ -188,15 +213,16 @@ object AttGt {
     *
     * A cell's four (D, post) buckets are unions of (cohort, period)
     * groups of rows, so the statistics come from one pass of per-group
-    * sums ([[groupSums]]), and the IF pass joins each row's group to its
-    * cells' constants: one broadcast equi-join of a driver-built table.
+    * sums ([[groupSums]]). The store's job then shuffles the rows by
+    * rowid and maps each to its cells' entries through a driver-built
+    * (cohort, period) -> cells lookup held in the task closure.
     */
   private def fitRcDistributed(
       pp: PreprocessedPanel, cells: Vector[CellDef], estMethod: String)
-      : (Array[Double], Array[Int], Array[Boolean], DataFrame) = {
-    val spark = pp.df.sparkSession
-    import spark.implicits._
-    val groups = groupSums(pp.df)
+      : (Array[Double], Array[Int], Array[Boolean], IFStore) = {
+    val groups = Phase(pp.df.sparkSession.sparkContext, "AttGt.fit/groupSums") {
+      groupSums(pp.df)
+    }
     val cohorts = groups.keys.map(_._1).toVector.distinct.sorted
     val nyt = pp.config.controlGroup == "notyettreated"
     // the control cohorts of a cell: never treated, plus (not-yet-treated
@@ -251,30 +277,24 @@ object AttGt {
       }
     }
 
-    // (cohort, period, cell, k, mu) for every group of every live cell
-    val groupConsts = cells.filterNot(c => c.zeroCell || skipped(c.idx))
-      .flatMap { c =>
+    // (cohort, period) -> (cell, k, mu) of every live cell whose
+    // buckets hold the group
+    val lookup: IFStore.Lookup =
+      cells.filterNot(c => c.zeroCell || skipped(c.idx)).flatMap { c =>
         val k = consts(c.idx)
         val kmu = Seq((k._5, k._1), (k._6, k._2), (k._7, k._3), (k._8, k._4))
         buckets(c).zip(kmu).flatMap { case ((gs, t), (kd, mu)) =>
-          gs.map(g => (g, t, c.idx, kd, mu))
+          gs.map(g => ((g, t), (c.idx, kd, mu)))
         }
+      }.groupMap(_._1)(_._2).map { case (gt, es) =>
+        gt -> ((es.map(_._1).toArray, es.map(_._2).toArray, es.map(_._3).toArray))
       }
 
-    // The groupBy is REAL aggregation, not dedup: in the default
+    // The store SUMS entries per (unit, cell): in the default
     // unbalanced-panel-as-RC regime rowid := unit id, so a unit's pre-
-    // and post-period rows in the same cell must SUM into one unit-level
-    // IF entry (n = #units; sum(inf^2) SEs depend on it).
-    val ifRows =
-      if (groupConsts.isEmpty)
-        Seq.empty[(String, Int, Double)].toDF("rowid", "cell", "inf")
-      else pp.df
-        .join(broadcast(groupConsts.toDF("gg", "tt", "cell", "k", "mu")),
-          Seq("gg", "tt"))
-        .groupBy(col("rowid").cast("string").as("rowid"), col("cell"))
-        .agg(sum(col("w1") * (col("k") * (col("yy") - col("mu")))).as("inf"))
-
-    (att, post, skipped, ifRows)
+    // and post-period rows in the same cell make one unit-level IF entry
+    // (n = #units; sum(inf^2) SEs depend on it).
+    (att, post, skipped, buildStore(pp, cells.length, None, lookup))
   }
 
   /** Row count, sum of `w1` and sum of `w1 * yy` per (cohort `gg`,
@@ -282,8 +302,8 @@ object AttGt {
     * partition into a driver-side map (no shuffle and no generated
     * aggregation code). Partitions are added in partition order, so a
     * rerun is bit-identical. Rows with a null cohort or period belong to
-    * no cell and are left out; null weights and outcomes drop out of the
-    * sums they enter, as in a SQL `sum`. */
+    * no cell and are left out; `Preprocess` keeps no row with a null
+    * weight or outcome. */
   private def groupSums(df: DataFrame): Map[(Double, Double), Array[Double]] = {
     val parts = df.select("tt", "yy", "gg", "rowid", "w1").queryExecution.toRdd
       .mapPartitions { rows =>
@@ -291,13 +311,12 @@ object AttGt {
           .empty[(Double, Double), Array[Double]]
         rows.foreach { r =>
           if (!r.isNullAt(2) && !r.isNullAt(0)) {
+            require(!r.isNullAt(1) && !r.isNullAt(4), NullRole)
             val a = m.getOrElseUpdate((r.getDouble(2), r.getDouble(0)),
               new Array[Double](3))
             a(0) += 1
-            if (!r.isNullAt(4)) {
-              a(1) += r.getDouble(4)
-              if (!r.isNullAt(1)) a(2) += r.getDouble(4) * r.getDouble(1)
-            }
+            a(1) += r.getDouble(4)
+            a(2) += r.getDouble(4) * r.getDouble(1)
           }
         }
         Iterator.single(m.toMap)
@@ -309,21 +328,12 @@ object AttGt {
     }
   }
 
-  /** Per-cell sum of squared influence values of `ifTable`, in one Spark
-    * job folded into driver arrays, partitions added in order. */
-  private def cellSumSq(ifTable: DataFrame, k: Int): Array[Double] = {
-    // all three columns, as MBoot reads them: one scan of the cache to
-    // generate code for
-    val parts = ifTable.select("rowid", "cell", "inf").queryExecution.toRdd
-      .mapPartitions { rows =>
-        val ss = new Array[Double](k)
-        rows.foreach { r =>
-          if (!r.isNullAt(2)) ss(r.getInt(1)) += r.getDouble(2) * r.getDouble(2)
-        }
-        Iterator.single(ss)
-      }.collect()
-    Array.tabulate(k)(i => parts.foldLeft(0.0)(_ + _(i)))
-  }
+  /** Why a row with a null role value fails a fit: `Preprocess.run`
+    * keeps complete cases only, so such a row never reaches a cell of a
+    * preprocessed panel. */
+  private[did] val NullRole =
+    "a row with a null rowid, outcome, weight or covariate reached a cell; " +
+      "Preprocess.run keeps complete cases only"
 
   /** Largest working set one cell's estimation may hold, in doubles: the
     * cell's own arrays, rows x (p + 4) (outcome, period, treatment,
@@ -361,16 +371,18 @@ object AttGt {
     *
     * The rows are shuffled once by cell and sorted by (rowid, period), and
     * each task estimates its cells in turn ([[CellRows]]). It emits the
-    * cell's IF rows, and adds the cell's ATT, skip flag and sum of squared
-    * IF to an accumulator, read once the one job that materializes the
-    * persisted IF table has run. A cell's rows reach its task in
-    * the same order however the input and the shuffle are partitioned,
-    * so its numbers are bit-identical across partitionings. */
+    * cell's IF entries, and adds the cell's ATT, skip flag and sum of
+    * squared IF to an accumulator, read once the one job that
+    * materializes the store has run: the entries take one more shuffle,
+    * by rowid, to their units. A
+    * cell's rows reach its task in the same order however the input and
+    * the shuffle are partitioned, so its numbers are bit-identical across
+    * partitionings. */
   private def fitPerCell(
       pp: PreprocessedPanel, cells: Vector[CellDef], estMethod: String,
       customRc: Option[RcCellEstimator],
       customPanel: Option[PanelCellEstimator])
-      : (Array[Double], Array[Int], Array[Boolean], DataFrame,
+      : (Array[Double], Array[Int], Array[Boolean], IFStore,
          Array[Double]) = {
     val spark = pp.df.sparkSession
     val covs = pp.config.covariates
@@ -419,10 +431,8 @@ object AttGt {
         inf
       }
     }
-    val ifTable = Preprocess.persistOnce(spark.createDataFrame(ifRows,
-      StructType(Seq(StructField("rowid", StringType),
-        StructField("cell", IntegerType), StructField("inf", DoubleType)))))
-    ifTable.select("rowid", "cell", "inf").queryExecution.toRdd.count()
+    val store = buildStore(pp, cells.length,
+      Some(spark.createDataFrame(ifRows, IFStore.LongSchema)), Map.empty)
 
     // a cell no row reached is skipped like a degenerate one; a re-run
     // task reports its cells again with the same numbers
@@ -436,7 +446,7 @@ object AttGt {
       if (!o.skipped) post(o.cell) = defs(o.cell).postTreat
       sumSq(o.cell) = o.sumSq
     }
-    (att, post, skipped, ifTable, sumSq)
+    (att, post, skipped, store, sumSq)
   }
 }
 
@@ -447,8 +457,8 @@ private[did] final case class CellOut(
 /** One cell's rows in its task, in (rowid, period) order, as
   * [[AttGt.fitPerCell]] projects them: cell, rowid, tt, gg, yy, w1, then
   * the `p` covariates. A row with a null rowid, outcome, weight or
-  * covariate is left out (complete cases); so, in the balanced panel,
-  * is a unit that then lacks the post or the base period. */
+  * covariate fails the fit ([[AttGt.NullRole]]); in the balanced panel, a
+  * unit that lacks the post or the base period is left out. */
 private final class CellRows(val c: CellDef, p: Int,
     maxDoubles: Long = AttGt.MaxCellDoubles) {
   private val ids = ArrayBuffer.empty[String]
@@ -458,15 +468,16 @@ private final class CellRows(val c: CellDef, p: Int,
   private val ww = new ArrayBuilder.ofDouble
   private val xs = new ArrayBuilder.ofDouble // row-major, p per row
 
-  def add(r: InternalRow): Unit =
-    if (!(r.isNullAt(1) || (4 until 6 + p).exists(r.isNullAt))) {
-      AttGt.checkCellSize(c, ids.length + 1L, p, maxDoubles)
-      ids += r.getUTF8String(1).toString
-      tt += r.getDouble(2); gg += r.getDouble(3)
-      yy += r.getDouble(4); ww += r.getDouble(5)
-      var j = 0
-      while (j < p) { xs += r.getDouble(6 + j); j += 1 }
-    }
+  def add(r: InternalRow): Unit = {
+    require(!(r.isNullAt(1) || (4 until 6 + p).exists(r.isNullAt)),
+      AttGt.NullRole)
+    AttGt.checkCellSize(c, ids.length + 1L, p, maxDoubles)
+    ids += r.getUTF8String(1).toString
+    tt += r.getDouble(2); gg += r.getDouble(3)
+    yy += r.getDouble(4); ww += r.getDouble(5)
+    var j = 0
+    while (j < p) { xs += r.getDouble(6 + j); j += 1 }
+  }
 
   /** Start index of each run of equal rowids, and the end. */
   private def unitStarts: Array[Int] =

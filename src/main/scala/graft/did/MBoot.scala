@@ -1,11 +1,10 @@
 package graft.did
 
-import java.nio.ByteBuffer
 import java.security.MessageDigest
+
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.unsafe.types.UTF8String
 
 final case class MBootResult(
     bres: Array[Array[Double]], // biters x K
@@ -50,26 +49,96 @@ final case class MBootResult(
   }
 }
 
+/** Linear members of the per-unit influence: member m of unit u is
+  * `IF_m(u) = sum_c wt(c, m) * inf(u, c) + wbar(u) * coef_m(gbar(u))`
+  * (`get_agg_inf_func` with the `wif` term, `csdids/utils_aggte.py:7-50`).
+  * The bootstrap of a fit's cells is the identity family; each
+  * aggregation builds its weights and cohort coefficients on the driver,
+  * and they ride to the tasks in the closure. */
+private[did] final class Members private (
+    val m: Int,
+    cellM: Array[Array[Int]],    // cell id -> members it enters (or null)
+    cellW: Array[Array[Double]], // cell id -> their weights
+    cohorts: Map[Double, (Array[Int], Array[Double])]) extends Serializable {
+
+  /** Writes unit `u`'s non-zero members into `v` and lists them in `nz`;
+    * returns how many. `v` and `seen` must come in cleared, and the
+    * caller clears the listed entries after use. */
+  def values(u: UnitIF, v: Array[Double], seen: Array[Boolean],
+      nz: Array[Int]): Int = {
+    var cnt = 0
+    var i = 0
+    while (i < u.cells.length) {
+      val c = u.cells(i)
+      if (c < cellM.length && cellM(c) != null) {
+        val ms = cellM(c); val ws = cellW(c)
+        var j = 0
+        while (j < ms.length) {
+          val mm = ms(j)
+          if (!seen(mm)) { seen(mm) = true; nz(cnt) = mm; cnt += 1 }
+          v(mm) += ws(j) * u.infs(i)
+          j += 1
+        }
+      }
+      i += 1
+    }
+    if (!u.wbar.isNaN && !u.gbar.isNaN) cohorts.get(u.gbar).foreach {
+      case (ms, cs) =>
+        var j = 0
+        while (j < ms.length) {
+          val mm = ms(j)
+          if (!seen(mm)) { seen(mm) = true; nz(cnt) = mm; cnt += 1 }
+          v(mm) += u.wbar * cs(j)
+          j += 1
+        }
+    }
+    cnt
+  }
+}
+
+private[did] object Members {
+
+  /** Member c is cell c: the fit's own bootstrap. */
+  def identity(k: Int): Members =
+    new Members(k, Array.tabulate(k)(Array(_)), Array.fill(k)(Array(1.0)),
+      Map.empty)
+
+  /** `m` members from (cell id, member, weight) and (member, cohort,
+    * coefficient) triples. */
+  def apply(m: Int, cellWts: Seq[(Int, Int, Double)],
+      wifCoefs: Seq[(Int, Double, Double)]): Members = {
+    val k = if (cellWts.isEmpty) 0 else cellWts.map(_._1).max + 1
+    val byCell = cellWts.groupBy(_._1)
+    val cohorts = wifCoefs.groupBy(_._2).map { case (g, cs) =>
+      g -> ((cs.map(_._1).toArray, cs.map(_._3).toArray))
+    }
+    new Members(m,
+      Array.tabulate(k)(c => byCell.get(c).map(_.map(_._2).toArray).orNull),
+      Array.tabulate(k)(c => byCell.get(c).map(_.map(_._3).toArray).orNull),
+      cohorts)
+  }
+}
+
 /** Rademacher multiplier bootstrap with sup-t simultaneous critical value
   * (`csdids/mboot.py:63-143`).
   *
-  * The influence matrix lives as the sparse long-form `ifTable`
-  * (rowid, cell, inf). Draw `b` multiplies every row of key `k` (the
-  * rowid string, or the cluster id when clustered) by one sign, -1 iff
+  * Draw `b` multiplies every influence value of key `k` (the unit's
+  * rowid string, or its cluster id when clustered) by one sign, -1 iff
   * the top bit of
   * `splitmix64((key64(k) XOR splitmix64(seed)) + (b+1)·Gamma)` is set,
   * where `key64(k)` is the first 8 bytes, big-endian, of `md5(utf8(k))`.
   * The sign is a pure function of (seed, k, b): a unit draws the same
-  * signs whatever other units the table holds and however it is
+  * signs whatever other units the store holds and however it is
   * partitioned, and DuckDB replays it in SQL (the `q_mboot_*` oracles
   * in `SparkEntry`).
   *
-  * One execution, one Spark job: the table is coalesced (no shuffle) to
-  * at most the default parallelism, each partition folds its rows into
-  * one B x K buffer of signed sums (caching each key's B sign bits, ~250
-  * bytes per distinct key of a partition at B = 1000), and the driver
-  * adds the buffers in partition order, so a rerun over the same table
-  * is bit-identical.
+  * One execution, one Spark job, over the fit's unit-major store
+  * ([[IFStore]]): each unit draws its B signs once from the key stored
+  * with it, maps itself to its members' values ([[Members]]), and adds
+  * them signed into one B x M buffer per partition; the driver adds the
+  * buffers in partition order, so a rerun over the same store is
+  * bit-identical. A long-form table given to [[run]] is first regrouped
+  * by rowid into the same unit rows, inside the same job.
   *
   * Quantiles are exact type-1 (`inverted_cdf`) per `mboot.py:128-137`;
   * Spark's percentile_approx is NOT acceptable here (SURVEY.md §7.6).
@@ -92,59 +161,134 @@ object MBoot {
   @inline private def signBit(keyMix: Long, b: Int): Long =
     splitmix64(keyMix + (b + 1L) * Gamma) >>> 63
 
+  /** Draws `0 until biters` sign bits of `keyMix` into `words`. */
+  private def fillSigns(words: Array[Long], keyMix: Long, biters: Int): Unit = {
+    java.util.Arrays.fill(words, 0L)
+    var b = 0
+    while (b < biters) {
+      words(b >>> 6) |= signBit(keyMix, b) << (b & 63); b += 1
+    }
+  }
+
+  /** How a pass resamples: B draws of `seed`, by unit, or by cluster with
+    * each unit's values divided by its cluster's unit count. */
+  private[did] final case class Boot(biters: Int, seed: Long,
+      clusterSizes: Option[Map[String, Long]])
+
+  /** What one pass of a family over the units returns: each member's sum
+    * of squared values, and with a bootstrap the B x M mean draws, taken
+    * over `n` units or clusters. */
+  private[did] final case class Pass(sumSq: Array[Double],
+      draws: Array[Array[Double]], n: Long)
+
+  /** One Spark job over `units`: every member's sum of squared values
+    * and, with `boot`, its B signed sums, each partition folded into one
+    * buffer (`buf(m * biters + b)`) and the buffers added in partition
+    * order; the draws are divided by `n`. */
+  private[did] def pass(units: RDD[UnitIF], members: Members,
+      boot: Option[Boot], n: Long, label: String): Pass = {
+    val m = members.m
+    val biters = boot.fold(0)(_.biters)
+    val seedMix = boot.fold(0L)(b => splitmix64(b.seed))
+    val clusterSizes = boot.flatMap(_.clusterSizes).map(_.map { case (c, s) =>
+      c -> s.toDouble })
+    val parts = Phase(units.sparkContext, label) {
+      units.mapPartitions { us =>
+        val ss = new Array[Double](m)
+        val buf = new Array[Double](m * biters)
+        val v = new Array[Double](m)
+        val seen = new Array[Boolean](m)
+        val nz = new Array[Int](m)
+        val words = new Array[Long]((biters + 63) >>> 6)
+        val byCluster = new java.util.HashMap[String, Array[Long]]()
+        val md5 = MessageDigest.getInstance("MD5")
+        us.foreach { u =>
+          val cnt = members.values(u, v, seen, nz)
+          if (cnt > 0) {
+            var i = 0
+            while (i < cnt) { val j = nz(i); ss(j) += v(j) * v(j); i += 1 }
+            if (biters > 0) {
+              // signs keyed by the unit, or shared by its cluster
+              val (bits, size) = clusterSizes match {
+                case None =>
+                  fillSigns(words, u.key ^ seedMix, biters)
+                  (words, 1.0)
+                case Some(sizes) =>
+                  var cb = byCluster.get(u.cluster)
+                  if (cb == null) {
+                    cb = new Array[Long](words.length)
+                    fillSigns(cb, IFStore.key64(u.cluster, md5) ^ seedMix, biters)
+                    byCluster.put(u.cluster, cb)
+                  }
+                  (cb, sizes(u.cluster))
+              }
+              i = 0
+              while (i < cnt) {
+                val j = nz(i)
+                // s * x without a branch: a set bit flips x's sign bit
+                val x = java.lang.Double.doubleToRawLongBits(v(j) / size)
+                val base = j * biters
+                var b = 0
+                while (b < biters) {
+                  buf(base + b) += java.lang.Double.longBitsToDouble(
+                    x ^ (((bits(b >>> 6) >>> (b & 63)) & 1L) << 63))
+                  b += 1
+                }
+                i += 1
+              }
+            }
+            i = 0
+            while (i < cnt) { val j = nz(i); v(j) = 0.0; seen(j) = false; i += 1 }
+          }
+        }
+        Iterator.single((ss, buf))
+      }.collect()
+    }
+    val sumSq = Array.tabulate(m)(j => parts.foldLeft(0.0)(_ + _._1(j)))
+    val draws = Array.tabulate(biters, m) { (b, j) =>
+      parts.foldLeft(0.0)((acc, p) => acc + p._2(j * biters + b)) / n
+    }
+    Pass(sumSq, draws, n)
+  }
+
+  /** A pass over a fit's store, bootstrapped (when `bootstrap`) the way
+    * its config asks: by cluster when the fit is clustered, else by unit.
+    * The fit and every aggregation resample through here, so they
+    * resample the same way. A unit whose cluster id varies cannot be
+    * cluster-bootstrapped (`csdids/mboot.py:99-104`) and fails the
+    * bootstrap. */
+  private[did] def passOver(pp: PreprocessedPanel, store: IFStore,
+      members: Members, bootstrap: Boolean, label: String): Pass = {
+    val cfg = pp.config
+    val boot =
+      if (!bootstrap) None
+      else if (!store.clustered) Some(Boot(cfg.biters, cfg.seed, None))
+      else {
+        require(store.stats.varyingClusters == 0,
+          s"Can't handle time-varying cluster variables: " +
+            s"'${cfg.clustervar.getOrElse("")}' varies within unit")
+        Some(Boot(cfg.biters, cfg.seed, Some(store.stats.clusterSizes)))
+      }
+    if (bootstrap) require(cfg.biters >= 2,
+      s"mboot needs biters >= 2 (SE and ddof=1 covariance), got ${cfg.biters}")
+    val n = if (bootstrap && store.clustered) store.stats.clusterSizes.size.toLong
+      else pp.n
+    pass(store.readable, members, boot, n, label)
+  }
+
+  /** Bootstrap of a long-form influence table (rowid, cell, inf): its
+    * rows are regrouped by rowid into unit rows within the one job. */
   def run(ifTable: DataFrame, k: Int, n: Long, biters: Int, alp: Double,
       seed: Long): MBootResult = {
     // fail at the configuration site, not lazily at first .cov access
     require(biters >= 2,
       s"mboot needs biters >= 2 (SE and ddof=1 covariance), got $biters")
-    val seedMix = splitmix64(seed)
-    val parts = ifTable
-      .select(col("rowid").cast("string"), col("cell"), col("inf"))
-      .queryExecution.toRdd
-      .coalesce(ifTable.sparkSession.sparkContext.defaultParallelism)
-      .mapPartitions(rows =>
-        Iterator.single(signedSums(rows, k, biters, seedMix)))
-      .collect()
-    // finish() takes the per-draw means
-    val outMat = Array.tabulate(biters, k) { (b, c) =>
-      parts.foldLeft(0.0)((acc, buf) => acc + buf(c * biters + b)) / n
-    }
-    finish(outMat, k, n, alp)
-  }
-
-  /** One partition's B x K signed sums, cell-major
-    * (`buf(cell * biters + b) = sum of s_b(rowid) * inf`). */
-  private def signedSums(rows: Iterator[InternalRow], k: Int, biters: Int,
-      seedMix: Long): Array[Double] = {
-    val buf = new Array[Double](k * biters)
-    val words = (biters + 63) >>> 6
-    val bitsOf = new java.util.HashMap[UTF8String, Array[Long]]()
-    val md5 = MessageDigest.getInstance("MD5")
-    rows.foreach { r =>
-      // the row's bytes are reused by the next row: a cached key is a copy
-      val key = r.getUTF8String(0)
-      var bits = bitsOf.get(key)
-      if (bits == null) {
-        val d = md5.digest(key.getBytes)
-        val keyMix = ByteBuffer.wrap(d).getLong ^ seedMix
-        bits = new Array[Long](words)
-        var b = 0
-        while (b < biters) {
-          bits(b >>> 6) |= signBit(keyMix, b) << (b & 63); b += 1
-        }
-        bitsOf.put(key.copy(), bits)
-      }
-      // s * inf without a branch: a set bit flips inf's sign bit
-      val inf = java.lang.Double.doubleToRawLongBits(r.getDouble(2))
-      val base = r.getInt(1) * biters
-      var b = 0
-      while (b < biters) {
-        buf(base + b) += java.lang.Double.longBitsToDouble(
-          inf ^ (((bits(b >>> 6) >>> (b & 63)) & 1L) << 63))
-        b += 1
-      }
-    }
-    buf
+    val table = org.apache.spark.sql.graftbridge.SessionScope.onEngine(ifTable)
+    val units = IFStore.assemble(IFStore.entryFragments(table), k, None,
+      Map.empty, Some(table.sparkSession.sparkContext.defaultParallelism))
+    val p = pass(units, Members.identity(k), Some(Boot(biters, seed, None)), n,
+      "MBoot.run/signedSums")
+    finish(p.draws, k, n, alp)
   }
 
   /** `sqrt(n)` scale, degenerate-dim drop, IQR-based SE and sup-t critical
@@ -199,42 +343,5 @@ object MBoot {
       .select(col("cluster").as("rowid"), col("cell"),
         (col("inf") / col("csize")).as("inf"))
     run(sized, k, nClusters, biters, alp, seed)
-  }
-
-  /** The panel's rowid -> cluster map (string columns `rowid`,
-    * `cluster`), or None when the bootstrap is by unit: `clustervar`
-    * unset, or equal to `idname` (the reference drops idname from
-    * clustervars, csdids/mboot.py:88-90). A unit mapping to more than
-    * one cluster value cannot be cluster-bootstrapped
-    * (csdids/mboot.py:99-104) and is rejected. */
-  private[did] def clusterMap(pp: PreprocessedPanel): Option[DataFrame] = {
-    val cfg = pp.config
-    cfg.clustervar.filter(_ != cfg.idname).map { cv =>
-      val cl = pp.df
-        .select(col("rowid").cast("string").as("rowid"),
-          col(cv).cast("string").as("cluster"))
-        .distinct()
-      val timeVarying = cl.groupBy("rowid")
-        .agg(count(lit(1)).as("nclust"))
-        .filter(col("nclust") > 1).limit(1).count()
-      require(timeVarying == 0,
-        s"Can't handle time-varying cluster variables: '$cv' varies " +
-          "within unit")
-      cl
-    }
-  }
-
-  /** Bootstrap an influence table of `pp`'s units the way its config
-    * asks: by cluster ([[runClustered]]) when [[clusterMap]] has one,
-    * else by unit. Both the fit and every aggregation go through here,
-    * so they resample the same way. */
-  private[did] def runFor(pp: PreprocessedPanel, ifTable: DataFrame,
-      k: Int): MBootResult = {
-    val cfg = pp.config
-    clusterMap(pp) match {
-      case Some(cl) =>
-        runClustered(ifTable, cl, k, cfg.biters, cfg.alp, cfg.seed)
-      case None => run(ifTable, k, pp.n, cfg.biters, cfg.alp, cfg.seed)
-    }
   }
 }

@@ -83,26 +83,38 @@ object Preprocess {
     val gCol = col(gname).cast("double")
 
     // Pass 1 (also materializes the projection): all-null rows (the
-    // `na.drop('all')` diagnostic, ATTgt.py:98-102) and rows per
-    // (cohort, period) — a null cohort is its own group, because the
-    // reference's tlist is distinct() over all rows. A continuous-valued
-    // period or cohort column would flood the driver, and the staggered-
-    // DiD grid is only meaningful for small |tlist| x |glist|, so a
-    // partition stops collecting past the caps and the run fails.
+    // `na.drop('all')` diagnostic, ATTgt.py:98-102), incomplete rows, and
+    // rows per (cohort, period) — a null cohort is its own group, because
+    // the reference's tlist is distinct() over all rows. A continuous-
+    // valued period or cohort column would flood the driver, and the
+    // staggered-DiD grid is only meaningful for small |tlist| x |glist|,
+    // so a partition stops collecting past the caps and the run fails.
+    //
+    // Complete cases (R `did`'s pre_process_did): a row with a null id
+    // (except in the true repeated cross section, which synthesizes
+    // rowid), outcome, weight, cluster or covariate is dropped, so every
+    // fit path and the influence store see the same rows. Null periods
+    // and cohorts stay: null-cohort rows shape tlist, and no cell takes
+    // either.
     val allNull = (roleCols.map(c => col(c).isNull) :+ col("w").isNull)
       .reduce(_ && _)
+    val required = (if (panel) Seq(idname) else Nil) ++
+      (Seq(yname) ++ clustervar.toSeq ++ covs :+ "w")
+    val incomplete = required.distinct.map(c => col(c).isNull).reduce(_ || _)
     // both passes read this one projection: one scan plan to generate
-    val roles = projected.select(gCol, tCol, allNull, col(idname))
+    val roles = projected.select(gCol, tCol, allNull, incomplete, col(idname))
       .queryExecution.toRdd
-    val counted = roles
-      .mapPartitions { rows =>
+    val counted = Phase(data.sparkSession.sparkContext, "Preprocess.run/counts") {
+      roles.mapPartitions { rows =>
         val m = mutable.LinkedHashMap.empty[(Option[Double], Double), Long]
         val ts = mutable.HashSet.empty[Double]
         val gs = mutable.HashSet.empty[Option[Double]]
         var dropped = 0L
+        var partial = 0L
         var over = false
         rows.foreach { r =>
           if (r.getBoolean(2)) dropped += 1
+          else if (r.getBoolean(3)) partial += 1
           else if (!over && !r.isNullAt(1)) {
             val key = (if (r.isNullAt(0)) None else Some(r.getDouble(0)),
               r.getDouble(1))
@@ -112,13 +124,15 @@ object Preprocess {
               m.size > MaxPairs
           }
         }
-        Iterator.single((dropped, over, m.toMap))
+        Iterator.single((dropped, partial, over, m.toMap))
       }.collect()
-    val nDropped = counted.map(_._1).sum
-    val raw = counted.foldLeft(Map.empty[(Option[Double], Double), Long]) {
-      case (acc, (_, _, m)) => addAll(acc, m)
     }
-    require(!counted.exists(_._2) &&
+    val nDropped = counted.map(_._1).sum
+    val nIncomplete = counted.map(_._2).sum
+    val raw = counted.foldLeft(Map.empty[(Option[Double], Double), Long]) {
+      case (acc, (_, _, _, m)) => addAll(acc, m)
+    }
+    require(!counted.exists(_._3) &&
         raw.keys.map(_._2).toSet.size <= MaxPeriods &&
         raw.keys.map(_._1).toSet.size <= MaxPeriods && raw.size <= MaxPairs,
       s"'$tname'/'$gname' look continuous (over $MaxPeriods distinct " +
@@ -127,22 +141,29 @@ object Preprocess {
     if (nDropped != 0)
       System.err.println(
         s"[graft.did] Dropped $nDropped rows from original data due to missing data")
+    if (nIncomplete != 0)
+      System.err.println(
+        s"[graft.did] Dropped $nIncomplete rows with a missing id, outcome, " +
+          "weight, cluster or covariate")
 
     // Pass 2: units per (cohort, first period of the unit), so the unit
     // count of every cohort follows the period cut below exactly (a unit
     // survives `tt < cut` iff its first period does).
     val idType = projected.schema(idname).dataType
-    val firstRaw = roles
-      .filter(r => !r.getBoolean(2) && !r.isNullAt(0) && !r.isNullAt(1) &&
-        !r.isNullAt(3))
-      .map(r => ((r.getDouble(0), InternalRow.copyValue(r.get(3, idType))),
-        r.getDouble(1)))
-      .reduceByKey(math.min(_, _))
-      .mapPartitions { units =>
-        val m = mutable.LinkedHashMap.empty[(Double, Double), Long]
-        units.foreach { case ((g, _), t) => m((g, t)) = m.getOrElse((g, t), 0L) + 1 }
-        Iterator.single(m.toMap)
-      }.collect().foldLeft(Map.empty[(Double, Double), Long])(addAll)
+    val firstRaw = Phase(data.sparkSession.sparkContext,
+        "Preprocess.run/firstPeriods") {
+      roles
+        .filter(r => !r.getBoolean(2) && !r.getBoolean(3) && !r.isNullAt(0) &&
+          !r.isNullAt(1) && !r.isNullAt(4))
+        .map(r => ((r.getDouble(0), InternalRow.copyValue(r.get(4, idType))),
+          r.getDouble(1)))
+        .reduceByKey(math.min(_, _))
+        .mapPartitions { units =>
+          val m = mutable.LinkedHashMap.empty[(Double, Double), Long]
+          units.foreach { case ((g, _), t) => m((g, t)) = m.getOrElse((g, t), 0L) + 1 }
+          Iterator.single(m.toMap)
+        }.collect().foldLeft(Map.empty[(Double, Double), Long])(addAll)
+    }
 
     // never-treated recode (ATTgt.py:111-118): cohorts past maxT merge
     // into 0.0 — their unit sets are disjoint (gg is unit-level), so
@@ -166,7 +187,7 @@ object Preprocess {
     }
 
     var df = projected
-      .na.drop("all")
+      .filter(!incomplete)
       .withColumn(Formula.InterceptCol, lit(1.0))
       .withColumn("tt", tCol)
       .withColumn("yy", col(yname).cast("double"))
@@ -261,7 +282,9 @@ object Preprocess {
     // intermediate projection it derives from (recomputing from source
     // would redo the caller's input plan), and to pin rowid in the
     // trueRcs regime (monotonically_increasing_id must never recompute).
-    df.queryExecution.toRdd.count()
+    Phase(data.sparkSession.sparkContext, "Preprocess.run/materialize") {
+      df.queryExecution.toRdd.count()
+    }
     projected.unpersist()
 
     PreprocessedPanel(df, tlist, glist, n, glist.length, nT,

@@ -37,7 +37,7 @@ object SessionScope {
 
   /** `df` on the engine session of its session: the memoized AQE-off
     * clone, renewed when the caller's conf has changed since it was
-    * made. The same analyzed plan, so persisted data keeps being served
+    * made; a frame already on an engine session stays there. The same analyzed plan, so persisted data keeps being served
     * from the shared cache manager (lookup is by canonicalized plan,
     * session-independent). */
   def onEngine(df: DataFrame): DataFrame = {
@@ -46,6 +46,9 @@ object SessionScope {
     val engine = engines.synchronized {
       Option(engines.get(caller)) match {
         case Some((c, e)) if c == conf => e
+        // already on an engine session (a frame of the engine's own)
+        case _ if engines.values.stream.anyMatch(_._2 eq caller) =>
+          caller.asInstanceOf[classic.SparkSession]
         case _ =>
           val e = caller.asInstanceOf[classic.SparkSession].cloneSession()
           e.conf.set(Aqe, "false")

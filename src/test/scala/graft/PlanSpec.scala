@@ -560,15 +560,21 @@ class PlanSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("att vcov: unit-id equi self-join, labels broadcast, no cartesian") {
+  test("att vcov: one fold of the unit store, labels broadcast, no " +
+      "shuffle, no cartesian") {
     withStaticPlan {
       val df = graft.SparkEntry.queries("q_att_gt_vcov")(spark, dir)
       val plan = planOf(df)
       assert(!plan.contains("Cartesian"), s"cartesian leaked:\n$plan")
       assert(plan.contains("BroadcastHashJoin"),
         s"cell labels / diagonal should broadcast:\n$plan")
-      assert(plan.contains("partial_"),
-        s"pair products must map-side combine:\n$plan")
+      // the covariance was folded from the unit rows before planning:
+      // the plan reads K^2 driver-built rows, never influence rows
+      assert(!plan.contains("Exchange hashpartitioning") &&
+        !plan.contains("ShuffleExchange") && !plan.contains("Scan ExistingRDD"),
+        s"influence rows reached the plan:\n$plan")
+      assert(plan.contains("LocalTableScan"),
+        s"the covariance should be a driver-built table:\n$plan")
       graft.operators.TrackedCaches.releaseAll()
     }
   }

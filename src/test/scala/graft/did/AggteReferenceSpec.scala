@@ -89,6 +89,26 @@ class AggteReferenceSpec extends AnyFunSuite with SparkSpec {
     }
     prep.units.unpersist(); fit.unpersist(); pp.unpersist()
   }
+  test("a uniform band's critical value comes from the draws of the " +
+      "SEs and equals a separate bootstrap of the band's members") {
+    val c = cfg.copy(biters = 199)
+    val pp = Preprocess.run(staggered(spark, nUnits = 200, noise = 0.1), c)
+    val fit = AttGt.fit(pp)
+    val prep = Aggte.prepare(fit)
+    val d = new Dense(prep)
+    val r = Aggte.dynamic(prep, bstrap = Some(true), cband = Some(true))
+    // the band's members: every event time, not the overall member
+    val band = d.dynamic.init
+    import spark.implicits._
+    val fam = (for (m <- band.indices; u <- d.ids.indices)
+      yield (d.ids(u), m, band(m).inf(u))).toDF("rowid", "cell", "inf")
+    val direct = MBoot.run(fam, band.length, pp.n, c.biters, c.alp, c.seed)
+    assert(direct.critVal > Stats.normPpf(1 - c.alp / 2),
+      s"band ${direct.critVal} within the pointwise one: nothing to compare")
+    assert(math.abs(r.critValEgt - direct.critVal) <= 1e-12 * direct.critVal,
+      s"band ${r.critValEgt} vs separate bootstrap ${direct.critVal}")
+    fit.unpersist(); pp.unpersist()
+  }
 }
 
 object AggteReferenceSpec {

@@ -202,9 +202,11 @@ class DistributedRcSpec extends AnyFunSuite with SparkSpec {
     def row(i: Int) = InternalRow(c.idx, UTF8String.fromString(s"u$i"),
       4.0, 3.0, 1.0, 1.0, 0.5, -0.5)
     (0 until 10).foreach(i => cell.add(row(i)))
-    // a row left out (null outcome) takes no room
-    cell.add(InternalRow(c.idx, UTF8String.fromString("u10"),
-      4.0, 3.0, null, 1.0, 0.5, -0.5))
+    // a null role value never reaches a cell (Preprocess keeps complete
+    // cases): such a row fails loudly and takes no room
+    val nul = intercept[IllegalArgumentException](cell.add(InternalRow(c.idx,
+      UTF8String.fromString("u10"), 4.0, 3.0, null, 1.0, 0.5, -0.5)))
+    assert(nul.getMessage.contains("complete cases"), nul.getMessage)
     val ex = intercept[IllegalArgumentException](cell.add(row(11)))
     Seq("g=3.0", "t=4.0", "11 rows", "66 doubles", "MiB", s"cap of $cap")
       .foreach(s => assert(ex.getMessage.contains(s), ex.getMessage))

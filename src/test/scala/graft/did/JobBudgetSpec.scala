@@ -47,6 +47,37 @@ class JobBudgetSpec extends AnyFunSuite with SparkSpec {
 
   private def jobsOf(f: => Any): Int = jobsAnd(f)._1
 
+  /** Descriptions of the jobs `f` submits, in order (drained like
+    * [[jobsAnd]]). */
+  private def descriptionsOf(f: => Any): Seq[String] = {
+    val sc = spark.sparkContext
+    val span = java.util.UUID.randomUUID().toString
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          val v = p.getProperty(Key)
+          if (v == span) seen.add(String.valueOf(p.getProperty(Desc)))
+          else if (v == s"$span/end") drained.countDown()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(Key, span)
+      f
+      sc.setLocalProperty(Key, s"$span/end")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      seen.toArray(Array.empty[String]).toSeq
+    } finally {
+      sc.setLocalProperty(Key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private val Desc = "spark.job.description"
+
   /** Asserts every call's count at once, so a failure shows them all. */
   private def assertBudget(got: Seq[(String, Int)],
       budget: Map[String, Int]): Unit = {
@@ -84,22 +115,42 @@ class JobBudgetSpec extends AnyFunSuite with SparkSpec {
       "Aggte.group(bstrap)" -> jobsOf(Aggte.group(p, bstrap = yes)),
       "Aggte.calendar(bstrap)" -> jobsOf(Aggte.calendar(p, bstrap = yes)),
       "Aggte.dynamic(bstrap)" -> jobsOf(Aggte.dynamic(p, bstrap = yes)),
+      "Aggte.dynamic(bstrap, cband)" ->
+        jobsOf(Aggte.dynamic(p, bstrap = yes, cband = yes)),
       "PreTest.wald" -> jobsOf(PreTest.wald(fit)))
-    p.units.unpersist(); fit.unpersist(); pp.unpersist()
+    fit.unpersist(); pp.unpersist()
     assertBudget(got, Map(
       "Preprocess.run" -> 3,
-      "AttGt.fit" -> 3,
-      "AttGt.fit(bstrap)" -> 4,
-      "Aggte.prepare" -> 1,
-      "Aggte.simple" -> 3,
-      "Aggte.group" -> 3,
-      "Aggte.calendar" -> 3,
-      "Aggte.dynamic" -> 3,
-      "Aggte.simple(bstrap)" -> 3,
-      "Aggte.group(bstrap)" -> 3,
-      "Aggte.calendar(bstrap)" -> 3,
-      "Aggte.dynamic(bstrap)" -> 3,
-      "PreTest.wald" -> 2))
+      "AttGt.fit" -> 2,
+      "AttGt.fit(bstrap)" -> 3,
+      "Aggte.prepare" -> 0,
+      "Aggte.simple" -> 1,
+      "Aggte.group" -> 1,
+      "Aggte.calendar" -> 1,
+      "Aggte.dynamic" -> 1,
+      "Aggte.simple(bstrap)" -> 1,
+      "Aggte.group(bstrap)" -> 1,
+      "Aggte.calendar(bstrap)" -> 1,
+      "Aggte.dynamic(bstrap)" -> 1,
+      "Aggte.dynamic(bstrap, cband)" -> 1,
+      "PreTest.wald" -> 1))
+  }
+
+  test("a clustered bootstrapped analysis holds its job budget") {
+    import org.apache.spark.sql.functions.{col, lit, pmod}
+    val df = staggered(spark, nUnits = 200, noise = 0.1)
+      .withColumn("clust", pmod(col("id"), lit(10)))
+    val pp = Preprocess.run(df, cfg.copy(clustervar = Some("clust"), biters = 99))
+    val (nFit, fit) = jobsAnd(AttGt.fit(pp, estMethod = "dr", bstrap = true))
+    val p = Aggte.prepare(fit)
+    val got = Seq(
+      "AttGt.fit(bstrap, clustered)" -> nFit,
+      "Aggte.simple(bstrap, clustered)" ->
+        jobsOf(Aggte.simple(p, bstrap = Some(true))))
+    fit.unpersist(); pp.unpersist()
+    assertBudget(got, Map(
+      "AttGt.fit(bstrap, clustered)" -> 3,
+      "Aggte.simple(bstrap, clustered)" -> 1))
   }
 
   private def fitJobs(c: AttGtConfig,
@@ -112,9 +163,10 @@ class JobBudgetSpec extends AnyFunSuite with SparkSpec {
 
   private val covCfg = cfg.copy(xfmla = Some("y ~ x1 + x2"))
 
-  // The covariate repeated-cross-section fit, once its own distributed
-  // path, runs the per-cell path: one job, the IF table's materialization.
-  test("a covariate DistributedRc fit holds its job budget") {
+  // The covariate repeated-cross-section fit runs the per-cell path: one
+  // job, which estimates the cells and materializes the store.
+  test("a covariate repeated-cross-section fit (per-cell path) holds its " +
+      "job budget") {
     assertBudget(Seq("AttGt.fit(dr, x1 + x2)" -> fitJobs(covCfg)),
       Map("AttGt.fit(dr, x1 + x2)" -> 1))
   }
@@ -126,5 +178,26 @@ class JobBudgetSpec extends AnyFunSuite with SparkSpec {
         fitJobs(covCfg.copy(allowUnbalancedPanel = false)),
       "AttGt.fit(customRc)" -> fitJobs(cfg, Some(CellEstimators.RegDidRc))),
       Map("AttGt.fit(panel dr, x1 + x2)" -> 1, "AttGt.fit(customRc)" -> 1))
+  }
+
+  test("every engine job carries its phase label, and the caller's " +
+      "description is restored") {
+    val sc = spark.sparkContext
+    sc.setLocalProperty(Desc, "caller's own")
+    try {
+      val labels = descriptionsOf {
+        val pp = Preprocess.run(staggered(spark, nUnits = 120, noise = 0.1), cfg)
+        val fit = AttGt.fit(pp, estMethod = "dr", bstrap = true)
+        val p = Aggte.prepare(fit)
+        Aggte.dynamic(p, bstrap = Some(false))
+        PreTest.wald(fit)
+        fit.unpersist(); pp.unpersist()
+      }
+      assert(labels == Seq("Preprocess.run/counts",
+        "Preprocess.run/firstPeriods", "Preprocess.run/materialize",
+        "AttGt.fit/groupSums", "AttGt.fit/store", "MBoot/signedSums",
+        "Aggte.dynamic/pass", "PreTest.wald/fold"), labels.mkString(", "))
+      assert(sc.getLocalProperty(Desc) == "caller's own")
+    } finally sc.setLocalProperty(Desc, null)
   }
 }
