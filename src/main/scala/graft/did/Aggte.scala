@@ -8,16 +8,15 @@ import org.apache.spark.sql.DataFrame
   * reference (SURVEY.md §2.9), implemented here as a flagged extension
   * with the R `did` package semantics.
   *
-  * All influence-function algebra runs distributed on the fit's
-  * unit-major store ([[IFStore]]): a request is one Spark job with no
-  * shuffle, a pass over the units that maps each to its members'
-  * influence values and folds them into sums of squares or bootstrap
-  * draws; only member-sized vectors reach the driver. The
-  * weight-estimation influence (`wif`, `csdids/utils_aggte.py:7-36`)
-  * reduces to a per-unit closed form
-  * `wbar * (attW(gbar)/S - c2 * cnt(gbar))` over a small
-  * cohort->coefficient map held in the task closure, not a matrix
-  * product.
+  * A request runs no Spark job: every aggregated influence function is
+  * linear in one per-unit vector z ([[ZLayout]]), and the job that
+  * materialized the fit's store folded `M = Σ z z'` and the bootstrap
+  * draws of z, so an SE or a draw is a small product on the driver
+  * ([[family]]). Only a bootstrapped request on a fit made without
+  * `bstrap` pays one pass, once, to draw z. The weight-estimation
+  * influence (`wif`, `csdids/utils_aggte.py:7-36`) reduces to a per-unit
+  * closed form `wbar * (attW(gbar)/S - c2 * cnt(gbar))`: a coefficient
+  * on the unit's cohort column of z, not a matrix product.
   *
   * Intended-semantics notes (SURVEY.md §7.5): the reference's overall
   * `group` wif indexes cohorts through the first nG cells
@@ -100,36 +99,42 @@ object Aggte {
     }
   }
 
-  /** SEs of a family of aggregated members in ONE pass over the store
-    * (`get_agg_inf_func` and `get_se`, `utils_aggte.py:38-66`, batched):
-    * member m has `IF_m(unit) = sum_cells wt*inf + wbar*coef_m(gbar)`
-    * ([[Members]]), from (cell position, member, weight) and (member,
-    * cohort, coefficient) triples. The pass folds it into `sum IF^2` for
-    * the analytic SE `sqrt(sum IF^2)/n`, and, bootstrapped, into one
-    * COMBINED seeded multiplier bootstrap of all members (per-member IQR
-    * SEs are column-independent, so one run over all members is
+  /** SEs of a family of aggregated members (`get_agg_inf_func` and
+    * `get_se`, `utils_aggte.py:38-66`, batched), by driver algebra on the
+    * fit's sufficient statistics: member m has
+    * `IF_m(unit) = sum_cells wt*inf + wbar*coef_m(gbar) = v_m·z_unit`
+    * ([[ZLayout]]), `v_m` built from (cell position, member, weight) and
+    * (member, cohort, coefficient) triples. The analytic SE is
+    * `sqrt(v_m'Mv_m)/n`; bootstrapped, draw b of member m is `v_m·D_b`,
+    * one COMBINED seeded multiplier bootstrap of all members (per-member
+    * IQR SEs are column-independent, so one run over all members is
     * statistically identical to the reference's per-column calls),
     * clustered like the fit's own bootstrap. With `band = Some(k)` the
     * sup-t critical value over members 0..k-1 comes from the first k
     * columns of the same draws, with the reference's clamps; else it is
     * the pointwise normal quantile. */
-  private def family(p: Prep, typec: String,
+  private def family(p: Prep,
       cellWts: Seq[(Int, Int, Double)],   // (cell position, member, wt)
       wifCoefs: Seq[(Int, Double, Double)], // (member, cohort g, coef)
       nMembers: Int, bs: Boolean, band: Option[Int])
       : (Array[Double], Double) = {
     val alp = p.fit.pp.config.alp
     val z = Stats.normPpf(1 - alp / 2)
-    // positions -> store cell ids (differ after na_rm pruning)
-    val members = Members(nMembers,
-      cellWts.map { case (k, m, w) => (p.cellIds(k), m, w) }, wifCoefs)
-    val pass = MBoot.passOver(p.fit.pp, p.fit.store, members,
-      bootstrap = bs || band.nonEmpty, s"Aggte.$typec/pass")
+    val store = p.fit.store
+    val moments = store.moments
+    val layout = store.layout
+    // positions -> store cell ids (differ after na_rm pruning); each
+    // cohort coefficient goes to its cohort's column
+    val v = Array.ofDim[Double](nMembers, layout.p)
+    cellWts.foreach { case (k, m, w) => v(m)(p.cellIds(k)) += w }
+    wifCoefs.foreach { case (m, g, c) => v(m)(layout.column(g)) += c }
+    lazy val draws = MBoot.drawsOf(p.fit.pp, store)
+    lazy val memberDraws = draws.of(v)
     val se =
-      if (bs) MBoot.finish(pass.draws, nMembers, pass.n, alp).se
-      else pass.sumSq.map(ss => math.sqrt(ss) / p.n)
+      if (bs) MBoot.finish(memberDraws, nMembers, draws.n, alp).se
+      else v.map(vm => math.sqrt(moments.quad(vm)) / p.n)
     val crit = band.fold(z)(k => clampCritVal(
-      MBoot.finish(pass.draws.map(_.take(k)), k, pass.n, alp).critVal, z))
+      MBoot.finish(memberDraws.map(_.take(k)), k, draws.n, alp).critVal, z))
     (se.map(se => if (se <= Stats.DegenerateTol) Double.NaN else se), crit)
   }
 
@@ -140,8 +145,7 @@ object Aggte {
       .filter(i => p.group(i) <= p.t(i) && p.t(i) <= p.group(i) + maxE)
     val s = keepers.map(p.pg).sum
     val att = keepers.map(k => p.att(k) * p.pg(k)).sum / s
-    val (ses, _) = family(p, "simple",
-      keepers.map(k => (k, 0, p.pg(k) / s)),
+    val (ses, _) = family(p, keepers.map(k => (k, 0, p.pg(k) / s)),
       wifCoefFor(p, keepers).toSeq.map { case (g, c) => (0, g, c) },
       1, bs, None)
     AggteResult("simple", att, ses(0), Nil, Nil, Nil,
@@ -209,7 +213,7 @@ object Aggte {
     val cellWts = perG.flatMap { case (gi, which, s) =>
       which.map(k => (k, gi, p.pg(k) / s))
     } ++ overallWts
-    val (ses, critEgt) = family(p, "group", cellWts, overallWif, nG + 1, bs,
+    val (ses, critEgt) = family(p, cellWts, overallWif, nG + 1, bs,
       Option.when(cb)(nG))
     val seEgt = ses.take(nG)
     val se = ses(nG)
@@ -252,7 +256,7 @@ object Aggte {
       .groupBy(_._1)
       .map { case (g, cs) => (nT, g, cs.map(_._2).sum / nT) }
 
-    val (ses, critEgt) = family(p, "calendar", cellWts, wifCoefs, nT + 1, bs,
+    val (ses, critEgt) = family(p, cellWts, wifCoefs, nT + 1, bs,
       Option.when(cb)(nT))
     val seEgt = ses.take(nT)
     val se = ses(nT)
@@ -323,7 +327,7 @@ object Aggte {
       .groupBy(_._1)
       .map { case (g, cs) => (nE, g, cs.map(_._2).sum / post.length) }
 
-    val (ses, critEgt) = family(p, "dynamic", cellWts, wifCoefs, nE + 1, bs,
+    val (ses, critEgt) = family(p, cellWts, wifCoefs, nE + 1, bs,
       Option.when(cb)(nE))
     AggteResult("dynamic", overallAtt, ses(nE), perE.map(_._1),
       perE.map(_._4), ses.take(nE).toSeq, critEgt, cfg.alp)

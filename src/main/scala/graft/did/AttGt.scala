@@ -21,8 +21,9 @@ final case class CellDef(
   * `store` holds the influence function unit-major, one persisted row per
   * unit with its cells and values ([[IFStore]]): the sparse equivalent of
   * the reference's dense n x K driver matrix (`csdids/ATTgt.py:273,476`),
-  * which no driver could hold at scale. The bootstrap, every aggregation
-  * and the pre-test each read it in one pass without a shuffle.
+  * which no driver could hold at scale. The job that materializes it
+  * also folds the fit's sufficient statistics, from which every
+  * aggregation and the pre-test are answered on the driver.
   * `ifTable` is the long-form view of the same rows, one (rowid, cell,
   * inf) row per unit and cell.
   */
@@ -78,7 +79,8 @@ final case class AttGtFit(
   *
   * Both paths end in the same job: the rows' influence entries and the
   * units' weights, cohorts and clusters are shuffled by rowid and folded
-  * into one row per unit, the persisted [[IFStore]].
+  * into one row per unit, the persisted [[IFStore]], whose job also folds
+  * the fit's sufficient statistics and, bootstrapped by unit, its draws.
   */
 object AttGt {
 
@@ -127,15 +129,26 @@ object AttGt {
       customRc: Option[RcCellEstimator],
       customPanel: Option[PanelCellEstimator]): AttGtFit = {
     val cells = buildCells(pp, basePeriod)
+    val k = cells.length
+    // the per-unit vector of the fit's statistics; a bootstrap needs them
+    // within their cap, the ATT(g,t) and their analytic SEs do not
+    val layout = new ZLayout(k, pp.glist.toArray)
+    if (bstrap) {
+      MBoot.requireBiters(pp.config.biters)
+      layout.overCap(pp.config.biters).foreach(e =>
+        throw new IllegalArgumentException(e))
+    }
     // both paths end with the store persisted and materialized, and the
     // per-cell sums of squared influence values in hand: the closed form
     // folds them from the store's units, the per-cell path sums each
     // cell in its task, in an order no partitioning changes
     val (att, post, skipped, store, sumSq) =
       if (!pp.panel && pp.config.interceptOnly && customRc.isEmpty) {
-        val (a, p, s, st) = fitRcDistributed(pp, cells, estMethod)
+        val (a, p, s, st) = fitRcDistributed(pp, cells, estMethod, layout,
+          bstrap)
         (a, p, s, st, st.stats.sumSq)
-      } else fitPerCell(pp, cells, estMethod, customRc, customPanel)
+      } else fitPerCell(pp, cells, estMethod, customRc, customPanel, layout,
+        bstrap)
 
     // Analytic per-cell SE: sqrt(mean(IF^2)/n) over all n units (absent
     // units contribute IF=0)
@@ -143,12 +156,11 @@ object AttGt {
 
     val (se, crit) =
       if (bstrap) {
-        val k = cells.length
-        val b = MBoot.passOver(pp, store, Members.identity(k),
-          bootstrap = true, "MBoot/signedSums")
-        val r = MBoot.finish(b.draws, k, b.n, pp.config.alp)
+        // the cells are z's first K coordinates
+        val d = MBoot.drawsOf(pp, store)
+        val r = MBoot.finish(d.d.map(_.take(k)), k, d.n, pp.config.alp)
         (r.se, r.critVal)
-      } else (Array.fill(cells.length)(0.0), 0.0)
+      } else (Array.fill(k)(0.0), 0.0)
 
     AttGtFit(pp, cells, att, post, skipped, store, seA, se, crit,
       estMethod, bstrap)
@@ -158,14 +170,20 @@ object AttGt {
     * cluster id (`clustervar` unset or equal to `idname` bootstraps by
     * unit, as the reference drops idname from clustervars,
     * `csdids/mboot.py:88-90`), and a balanced panel takes each unit's
-    * weight and cohort from its first-period row. */
-  private def buildStore(pp: PreprocessedPanel, k: Int,
-      entries: Option[DataFrame], lookup: IFStore.Lookup): IFStore = {
+    * weight and cohort from its first-period row. The store's job folds
+    * the draws of a fit bootstrapped by unit; a clustered one needs the
+    * cluster sizes that job produces, and draws in one more pass. */
+  private def buildStore(pp: PreprocessedPanel, layout: ZLayout,
+      entries: Option[DataFrame], lookup: IFStore.Lookup,
+      bstrap: Boolean): IFStore = {
     val cfg = pp.config
     val cv = cfg.clustervar.filter(_ != cfg.idname)
     val rows = IFStore.rowFragments(pp.df, cv.fold(lit(null))(col))
     IFStore.build(entries.fold(rows)(e => rows.union(IFStore.entryFragments(e))),
-      k, if (pp.panel) Some(pp.tlist.head) else None, lookup, cv.nonEmpty)
+      layout, if (pp.panel) Some(pp.tlist.head) else None, lookup, cv.nonEmpty,
+      layout.overCap(cfg.biters),
+      Option.when(bstrap && cv.isEmpty)(MBoot.Boot(cfg.biters, cfg.seed, None)),
+      pp.n)
   }
 
   /** (g,t) grid with the varying/universal base-period logic of
@@ -218,7 +236,8 @@ object AttGt {
     * (cohort, period) -> cells lookup held in the task closure.
     */
   private def fitRcDistributed(
-      pp: PreprocessedPanel, cells: Vector[CellDef], estMethod: String)
+      pp: PreprocessedPanel, cells: Vector[CellDef], estMethod: String,
+      layout: ZLayout, bstrap: Boolean)
       : (Array[Double], Array[Int], Array[Boolean], IFStore) = {
     val groups = Phase(pp.df.sparkSession.sparkContext, "AttGt.fit/groupSums") {
       groupSums(pp.df)
@@ -294,7 +313,7 @@ object AttGt {
     // unbalanced-panel-as-RC regime rowid := unit id, so a unit's pre-
     // and post-period rows in the same cell make one unit-level IF entry
     // (n = #units; sum(inf^2) SEs depend on it).
-    (att, post, skipped, buildStore(pp, cells.length, None, lookup))
+    (att, post, skipped, buildStore(pp, layout, None, lookup, bstrap))
   }
 
   /** Row count, sum of `w1` and sum of `w1 * yy` per (cohort `gg`,
@@ -381,7 +400,8 @@ object AttGt {
   private def fitPerCell(
       pp: PreprocessedPanel, cells: Vector[CellDef], estMethod: String,
       customRc: Option[RcCellEstimator],
-      customPanel: Option[PanelCellEstimator])
+      customPanel: Option[PanelCellEstimator],
+      layout: ZLayout, bstrap: Boolean)
       : (Array[Double], Array[Int], Array[Boolean], IFStore,
          Array[Double]) = {
     val spark = pp.df.sparkSession
@@ -431,8 +451,9 @@ object AttGt {
         inf
       }
     }
-    val store = buildStore(pp, cells.length,
-      Some(spark.createDataFrame(ifRows, IFStore.LongSchema)), Map.empty)
+    val store = buildStore(pp, layout,
+      Some(spark.createDataFrame(ifRows, IFStore.LongSchema)), Map.empty,
+      bstrap)
 
     // a cell no row reached is skipped like a degenerate one; a re-run
     // task reports its cells again with the same numbers

@@ -49,19 +49,35 @@ private[did] final case class StoreStats(
   * per unit ([[UnitIF]]), the sparse equivalent of the reference's dense
   * n x K matrix (`csdids/ATTgt.py:273,476`).
   *
-  * Every reader is one pass over the units with no shuffle: the
-  * bootstrap, each aggregation and the pre-test map a unit to the values
-  * they need with their weights and coefficients held in the task
-  * closure, and fold them into small per-partition buffers that the
-  * driver adds in partition order. The long-form table and the units
-  * frame the public API exposes are lazy views over the same rows, on the
-  * engine session the store was built on. */
+  * The job that materializes the store also folds the fit's sufficient
+  * statistics over the per-unit vector z ([[ZLayout]]): `M = Σ z z'`
+  * ([[Moments]]) and, when the fit bootstraps by unit, the draws `D`
+  * ([[MBoot.Draws]]). Every aggregation and the pre-test are then driver
+  * algebra on them, with no Spark job; draws the store job did not fold
+  * take one pass the first time they are asked for ([[MBoot.drawsOf]]),
+  * and the store keeps them. Past the statistics' cap
+  * ([[ZLayout.overCap]]) the store holds no M, and what needs it fails.
+  * The long-form table and the units frame the public API exposes are
+  * lazy views over the same rows, on the engine session the store was
+  * built on. */
 final class IFStore private[did] (
     private[did] val units: RDD[UnitIF],
     private[did] val engine: SparkSession,
     val k: Int,
     val clustered: Boolean,
-    private[did] val stats: StoreStats) {
+    private[did] val stats: StoreStats,
+    private[did] val layout: ZLayout,
+    folded: Either[String, Moments],
+    private var drawn: Option[MBoot.Draws]) {
+
+  /** `M` over the layout's coordinates; fails past the cap. */
+  private[did] def moments: Moments =
+    folded.fold(e => throw new IllegalArgumentException(e), identity)
+
+  /** The store's draws: those its job folded, else `pass`'s, made once. */
+  private[did] def draws(pass: => MBoot.Draws): MBoot.Draws = synchronized {
+    drawn.getOrElse { val d = pass; drawn = Some(d); d }
+  }
 
   /** The long form: one (rowid STRING, cell INT, inf DOUBLE) row per unit
     * and cell of the unit. */
@@ -77,15 +93,6 @@ final class IFStore private[did] (
       case u if !u.wbar.isNaN =>
         Row(u.rowid, u.wbar, if (u.gbar.isNaN) null else u.gbar)
     }), IFStore.UnitsSchema)
-
-  /** The units, coalesced (no shuffle) to at most the default
-    * parallelism: a reader's job needs no more tasks than cores. A store
-    * no wider is read as it is, so its partitions are added in their own
-    * order, like a regrouped long-form table's ([[MBoot.run]]). */
-  private[did] def readable: RDD[UnitIF] = {
-    val cores = units.sparkContext.defaultParallelism
-    if (units.getNumPartitions > cores) units.coalesce(cores) else units
-  }
 
   def unpersist(): Unit = { units.unpersist(blocking = false); () }
 }
@@ -151,16 +158,31 @@ object IFStore {
       .mapPartitions(rows => new Assembler(k, panelBase, lookup).units(rows))
   }
 
-  /** Builds the store of `frags`, persisted and materialized by one Spark
-    * job that also folds its [[StoreStats]]. */
-  private[did] def build(frags: DataFrame, k: Int, panelBase: Option[Double],
-      lookup: Lookup, clustered: Boolean): IFStore = {
+  /** `units` coalesced (no shuffle) to at most the default parallelism: a
+    * job over them needs no more tasks than cores, and the driver collects
+    * at most one buffer per core whatever the shuffle width. Partitions
+    * are folded and added in order, so a rerun is bit-identical. */
+  private[did] def readable(units: RDD[UnitIF]): RDD[UnitIF] = {
+    val cores = units.sparkContext.defaultParallelism
+    if (units.getNumPartitions > cores) units.coalesce(cores) else units
+  }
+
+  /** Builds the store of `frags` over `layout`'s cells, persisted and
+    * materialized by one Spark job over its [[readable]] view that also
+    * folds its [[StoreStats]], `M` unless `overCap` says why not, and with
+    * `boot` the draws over `n` units. */
+  private[did] def build(frags: DataFrame, layout: ZLayout,
+      panelBase: Option[Double], lookup: Lookup, clustered: Boolean,
+      overCap: Option[String], boot: Option[MBoot.Boot], n: Long): IFStore = {
+    val k = layout.k
     val units = assemble(frags, k, panelBase, lookup, None)
       .setName("AttGt influence store").persist(StorageLevel.MEMORY_AND_DISK)
+    val foldM = overCap.isEmpty
     val parts = Phase(units.sparkContext, "AttGt.fit/store") {
-      units.mapPartitions(us => Iterator.single(foldStats(us, k))).collect()
+      readable(units).mapPartitions(us =>
+        Iterator.single(foldPartition(us, layout, foldM, boot))).collect()
     }
-    val stats = parts.foldLeft(
+    val stats = parts.map(_._1).foldLeft(
       StoreStats(new Array[Double](k), Map.empty, Map.empty, 0L)) { (a, b) =>
       StoreStats(Array.tabulate(k)(i => a.sumSq(i) + b.sumSq(i)),
         b.cohortW.foldLeft(a.cohortW) { case (m, (g, w)) =>
@@ -169,15 +191,27 @@ object IFStore {
           m.updated(c, m.getOrElse(c, 0L) + s) },
         a.varyingClusters + b.varyingClusters)
     }
-    new IFStore(units, frags.sparkSession, k, clustered, stats)
+    val moments = overCap.toLeft(Moments.merge(layout.p, parts.flatMap(_._2).toSeq))
+    val draws = boot.map(b =>
+      MBoot.merge(parts.flatMap(_._3).toSeq, layout.p, b.biters, n))
+    new IFStore(units, frags.sparkSession, k, clustered, stats, layout,
+      moments, draws)
   }
 
-  /** One partition's [[StoreStats]], units added in order. */
-  private def foldStats(units: Iterator[UnitIF], k: Int): StoreStats = {
+  /** One partition's [[StoreStats]], `M` fold and draws buffer, units
+    * added in order. */
+  private def foldPartition(units: Iterator[UnitIF], layout: ZLayout,
+      foldM: Boolean, boot: Option[MBoot.Boot])
+      : (StoreStats, Option[Moments.Fold], Option[Array[Double]]) = {
+    val k = layout.k
     val ss = new Array[Double](k)
     val cohortW = mutable.LinkedHashMap.empty[Double, Double]
     val sizes = mutable.LinkedHashMap.empty[String, Long]
     var varying = 0L
+    val m = Option.when(foldM)(new Moments.Fold(layout.p))
+    val d = boot.map(new MBoot.DrawsFold(layout.p, _))
+    val at = new Array[Int](layout.p)
+    val vs = new Array[Double](layout.p)
     units.foreach { u =>
       var i = 0
       while (i < u.cells.length) {
@@ -187,8 +221,13 @@ object IFStore {
         cohortW(u.gbar) = cohortW.getOrElse(u.gbar, 0.0) + u.wbar
       if (u.cluster != null) sizes(u.cluster) = sizes.getOrElse(u.cluster, 0L) + 1
       if (u.clusterVaries) varying += 1
+      if (foldM || d.nonEmpty) {
+        val cnt = layout.coords(u, at, vs)
+        m.foreach(_.add(at, vs, cnt))
+        d.foreach(_.add(u, at, vs, cnt))
+      }
     }
-    StoreStats(ss, cohortW.toMap, sizes.toMap, varying)
+    (StoreStats(ss, cohortW.toMap, sizes.toMap, varying), m, d.map(_.buf))
   }
 
   /** Folds each run of equal rowids of a partition's sorted fragments

@@ -49,76 +49,6 @@ final case class MBootResult(
   }
 }
 
-/** Linear members of the per-unit influence: member m of unit u is
-  * `IF_m(u) = sum_c wt(c, m) * inf(u, c) + wbar(u) * coef_m(gbar(u))`
-  * (`get_agg_inf_func` with the `wif` term, `csdids/utils_aggte.py:7-50`).
-  * The bootstrap of a fit's cells is the identity family; each
-  * aggregation builds its weights and cohort coefficients on the driver,
-  * and they ride to the tasks in the closure. */
-private[did] final class Members private (
-    val m: Int,
-    cellM: Array[Array[Int]],    // cell id -> members it enters (or null)
-    cellW: Array[Array[Double]], // cell id -> their weights
-    cohorts: Map[Double, (Array[Int], Array[Double])]) extends Serializable {
-
-  /** Writes unit `u`'s non-zero members into `v` and lists them in `nz`;
-    * returns how many. `v` and `seen` must come in cleared, and the
-    * caller clears the listed entries after use. */
-  def values(u: UnitIF, v: Array[Double], seen: Array[Boolean],
-      nz: Array[Int]): Int = {
-    var cnt = 0
-    var i = 0
-    while (i < u.cells.length) {
-      val c = u.cells(i)
-      if (c < cellM.length && cellM(c) != null) {
-        val ms = cellM(c); val ws = cellW(c)
-        var j = 0
-        while (j < ms.length) {
-          val mm = ms(j)
-          if (!seen(mm)) { seen(mm) = true; nz(cnt) = mm; cnt += 1 }
-          v(mm) += ws(j) * u.infs(i)
-          j += 1
-        }
-      }
-      i += 1
-    }
-    if (!u.wbar.isNaN && !u.gbar.isNaN) cohorts.get(u.gbar).foreach {
-      case (ms, cs) =>
-        var j = 0
-        while (j < ms.length) {
-          val mm = ms(j)
-          if (!seen(mm)) { seen(mm) = true; nz(cnt) = mm; cnt += 1 }
-          v(mm) += u.wbar * cs(j)
-          j += 1
-        }
-    }
-    cnt
-  }
-}
-
-private[did] object Members {
-
-  /** Member c is cell c: the fit's own bootstrap. */
-  def identity(k: Int): Members =
-    new Members(k, Array.tabulate(k)(Array(_)), Array.fill(k)(Array(1.0)),
-      Map.empty)
-
-  /** `m` members from (cell id, member, weight) and (member, cohort,
-    * coefficient) triples. */
-  def apply(m: Int, cellWts: Seq[(Int, Int, Double)],
-      wifCoefs: Seq[(Int, Double, Double)]): Members = {
-    val k = if (cellWts.isEmpty) 0 else cellWts.map(_._1).max + 1
-    val byCell = cellWts.groupBy(_._1)
-    val cohorts = wifCoefs.groupBy(_._2).map { case (g, cs) =>
-      g -> ((cs.map(_._1).toArray, cs.map(_._3).toArray))
-    }
-    new Members(m,
-      Array.tabulate(k)(c => byCell.get(c).map(_.map(_._2).toArray).orNull),
-      Array.tabulate(k)(c => byCell.get(c).map(_.map(_._3).toArray).orNull),
-      cohorts)
-  }
-}
-
 /** Rademacher multiplier bootstrap with sup-t simultaneous critical value
   * (`csdids/mboot.py:63-143`).
   *
@@ -132,13 +62,15 @@ private[did] object Members {
   * partitioned, and DuckDB replays it in SQL (the `q_mboot_*` oracles
   * in `SparkEntry`).
   *
-  * One execution, one Spark job, over the fit's unit-major store
-  * ([[IFStore]]): each unit draws its B signs once from the key stored
-  * with it, maps itself to its members' values ([[Members]]), and adds
-  * them signed into one B x M buffer per partition; the driver adds the
-  * buffers in partition order, so a rerun over the same store is
-  * bit-identical. A long-form table given to [[run]] is first regrouped
-  * by rowid into the same unit rows, inside the same job.
+  * A fit's draws are those of its per-unit vector z ([[ZLayout]]): each
+  * unit draws its B signs once from the key stored with it and adds its
+  * coordinates signed into one B x (K + nG) buffer per partition
+  * ([[DrawsFold]]), and the driver adds the buffers in partition order,
+  * so a rerun over the same store is bit-identical. The fit's store job
+  * folds them ([[IFStore]]); the fit's own bootstrap takes the K cell
+  * columns, and an aggregated member m is `v_m·D_b` on the driver. A
+  * long-form table given to [[run]] is regrouped by rowid into the same
+  * unit rows and drawn over its cells, in one job.
   *
   * Quantiles are exact type-1 (`inverted_cdf`) per `mboot.py:128-137`;
   * Spark's percentile_approx is NOT acceptable here (SURVEY.md §7.6).
@@ -170,110 +102,128 @@ object MBoot {
     }
   }
 
-  /** How a pass resamples: B draws of `seed`, by unit, or by cluster with
+  /** How draws resample: B draws of `seed`, by unit, or by cluster with
     * each unit's values divided by its cluster's unit count. */
   private[did] final case class Boot(biters: Int, seed: Long,
       clusterSizes: Option[Map[String, Long]])
 
-  /** What one pass of a family over the units returns: each member's sum
-    * of squared values, and with a bootstrap the B x M mean draws, taken
-    * over `n` units or clusters. */
-  private[did] final case class Pass(sumSq: Array[Double],
-      draws: Array[Array[Double]], n: Long)
+  private[did] def requireBiters(biters: Int): Unit =
+    require(biters >= 2,
+      s"mboot needs biters >= 2 (SE and ddof=1 covariance), got $biters")
 
-  /** One Spark job over `units`: every member's sum of squared values
-    * and, with `boot`, its B signed sums, each partition folded into one
-    * buffer (`buf(m * biters + b)`) and the buffers added in partition
-    * order; the draws are divided by `n`. */
-  private[did] def pass(units: RDD[UnitIF], members: Members,
-      boot: Option[Boot], n: Long, label: String): Pass = {
-    val m = members.m
-    val biters = boot.fold(0)(_.biters)
-    val seedMix = boot.fold(0L)(b => splitmix64(b.seed))
-    val clusterSizes = boot.flatMap(_.clusterSizes).map(_.map { case (c, s) =>
-      c -> s.toDouble })
-    val parts = Phase(units.sparkContext, label) {
-      units.mapPartitions { us =>
-        val ss = new Array[Double](m)
-        val buf = new Array[Double](m * biters)
-        val v = new Array[Double](m)
-        val seen = new Array[Boolean](m)
-        val nz = new Array[Int](m)
-        val words = new Array[Long]((biters + 63) >>> 6)
-        val byCluster = new java.util.HashMap[String, Array[Long]]()
-        val md5 = MessageDigest.getInstance("MD5")
-        us.foreach { u =>
-          val cnt = members.values(u, v, seen, nz)
-          if (cnt > 0) {
-            var i = 0
-            while (i < cnt) { val j = nz(i); ss(j) += v(j) * v(j); i += 1 }
-            if (biters > 0) {
-              // signs keyed by the unit, or shared by its cluster
-              val (bits, size) = clusterSizes match {
-                case None =>
-                  fillSigns(words, u.key ^ seedMix, biters)
-                  (words, 1.0)
-                case Some(sizes) =>
-                  var cb = byCluster.get(u.cluster)
-                  if (cb == null) {
-                    cb = new Array[Long](words.length)
-                    fillSigns(cb, IFStore.key64(u.cluster, md5) ^ seedMix, biters)
-                    byCluster.put(u.cluster, cb)
-                  }
-                  (cb, sizes(u.cluster))
-              }
-              i = 0
-              while (i < cnt) {
-                val j = nz(i)
-                // s * x without a branch: a set bit flips x's sign bit
-                val x = java.lang.Double.doubleToRawLongBits(v(j) / size)
-                val base = j * biters
-                var b = 0
-                while (b < biters) {
-                  buf(base + b) += java.lang.Double.longBitsToDouble(
-                    x ^ (((bits(b >>> 6) >>> (b & 63)) & 1L) << 63))
-                  b += 1
-                }
-                i += 1
-              }
-            }
-            i = 0
-            while (i < cnt) { val j = nz(i); v(j) = 0.0; seen(j) = false; i += 1 }
-          }
+  /** The B x P mean signed sums `D` of a [[ZLayout]]'s coordinates,
+    * `D(b)(j) = Σ_u s_b(u) z_uj / n` over `n` units or clusters. */
+  private[did] final case class Draws(d: Array[Array[Double]], n: Long) {
+
+    /** Draw b of each member of `v` (members x P): `v_m·D_b`. */
+    def of(v: Array[Array[Double]]): Array[Array[Double]] = {
+      val nz = v.map(vm => vm.indices.filter(vm(_) != 0.0).toArray)
+      d.map { db =>
+        Array.tabulate(v.length) { m =>
+          val vm = v(m); val js = nz(m)
+          var s = 0.0
+          var i = 0
+          while (i < js.length) { s += vm(js(i)) * db(js(i)); i += 1 }
+          s
         }
-        Iterator.single((ss, buf))
-      }.collect()
+      }
     }
-    val sumSq = Array.tabulate(m)(j => parts.foldLeft(0.0)(_ + _._1(j)))
-    val draws = Array.tabulate(biters, m) { (b, j) =>
-      parts.foldLeft(0.0)((acc, p) => acc + p._2(j * biters + b)) / n
-    }
-    Pass(sumSq, draws, n)
   }
 
-  /** A pass over a fit's store, bootstrapped (when `bootstrap`) the way
-    * its config asks: by cluster when the fit is clustered, else by unit.
-    * The fit and every aggregation resample through here, so they
-    * resample the same way. A unit whose cluster id varies cannot be
+  /** One partition's signed sums of p coordinates, `buf(j * biters + b)`:
+    * each unit draws its B signs once, from the key stored with it or
+    * shared by its cluster, and adds its values signed. The fit's store
+    * job and [[pass]] fold through here. */
+  private[did] final class DrawsFold(p: Int, boot: Boot) {
+    private val biters = boot.biters
+    private val seedMix = splitmix64(boot.seed)
+    val buf = new Array[Double](p * biters)
+    private val words = new Array[Long]((biters + 63) >>> 6)
+    private val byCluster = new java.util.HashMap[String, Array[Long]]()
+    private lazy val md5 = MessageDigest.getInstance("MD5")
+
+    /** Adds unit `u`, whose coordinates and values are the first `cnt` of
+      * `at` and `vs`. */
+    def add(u: UnitIF, at: Array[Int], vs: Array[Double], cnt: Int): Unit =
+      if (cnt > 0) {
+        val (bits, size) = boot.clusterSizes match {
+          case None =>
+            fillSigns(words, u.key ^ seedMix, biters)
+            (words, 1.0)
+          case Some(sizes) =>
+            var cb = byCluster.get(u.cluster)
+            if (cb == null) {
+              cb = new Array[Long](words.length)
+              fillSigns(cb, IFStore.key64(u.cluster, md5) ^ seedMix, biters)
+              byCluster.put(u.cluster, cb)
+            }
+            (cb, sizes(u.cluster).toDouble)
+        }
+        var i = 0
+        while (i < cnt) {
+          // s * x without a branch: a set bit flips x's sign bit
+          val x = java.lang.Double.doubleToRawLongBits(vs(i) / size)
+          val base = at(i) * biters
+          var b = 0
+          while (b < biters) {
+            buf(base + b) += java.lang.Double.longBitsToDouble(
+              x ^ (((bits(b >>> 6) >>> (b & 63)) & 1L) << 63))
+            b += 1
+          }
+          i += 1
+        }
+      }
+  }
+
+  /** The partitions' [[DrawsFold]] buffers added in order, divided by
+    * `n`. */
+  private[did] def merge(parts: Seq[Array[Double]], p: Int, biters: Int,
+      n: Long): Draws =
+    Draws(Array.tabulate(biters, p) { (b, j) =>
+      parts.foldLeft(0.0)((acc, buf) => acc + buf(j * biters + b)) / n
+    }, n)
+
+  /** One Spark job over `units`: the draws of `layout`'s coordinates,
+    * each partition folded into one buffer. */
+  private[did] def pass(units: RDD[UnitIF], layout: ZLayout, boot: Boot,
+      n: Long, label: String): Draws = {
+    val p = layout.p
+    val parts = Phase(units.sparkContext, label) {
+      units.mapPartitions { us =>
+        val fold = new DrawsFold(p, boot)
+        val at = new Array[Int](p)
+        val vs = new Array[Double](p)
+        us.foreach(u => fold.add(u, at, vs, layout.coords(u, at, vs)))
+        Iterator.single(fold.buf)
+      }.collect()
+    }
+    merge(parts.toSeq, p, boot.biters, n)
+  }
+
+  /** The draws of a fit's store, resampled the way its config asks: by
+    * cluster when the fit is clustered, else by unit. The fit's store job
+    * folds them when the fit bootstraps by unit; otherwise one pass
+    * (`MBoot/draws`) makes them the first time they are asked for, and
+    * the store keeps them. The fit's own bootstrap and every aggregation
+    * read these same draws. A unit whose cluster id varies cannot be
     * cluster-bootstrapped (`csdids/mboot.py:99-104`) and fails the
     * bootstrap. */
-  private[did] def passOver(pp: PreprocessedPanel, store: IFStore,
-      members: Members, bootstrap: Boolean, label: String): Pass = {
-    val cfg = pp.config
-    val boot =
-      if (!bootstrap) None
-      else if (!store.clustered) Some(Boot(cfg.biters, cfg.seed, None))
-      else {
-        require(store.stats.varyingClusters == 0,
-          s"Can't handle time-varying cluster variables: " +
-            s"'${cfg.clustervar.getOrElse("")}' varies within unit")
-        Some(Boot(cfg.biters, cfg.seed, Some(store.stats.clusterSizes)))
-      }
-    if (bootstrap) require(cfg.biters >= 2,
-      s"mboot needs biters >= 2 (SE and ddof=1 covariance), got ${cfg.biters}")
-    val n = if (bootstrap && store.clustered) store.stats.clusterSizes.size.toLong
-      else pp.n
-    pass(store.readable, members, boot, n, label)
+  private[did] def drawsOf(pp: PreprocessedPanel, store: IFStore): Draws = {
+    store.moments // the statistics' cap holds for the draws too
+    store.draws {
+      val cfg = pp.config
+      requireBiters(cfg.biters)
+      val (sizes, n) =
+        if (!store.clustered) (None, pp.n)
+        else {
+          require(store.stats.varyingClusters == 0,
+            s"Can't handle time-varying cluster variables: " +
+              s"'${cfg.clustervar.getOrElse("")}' varies within unit")
+          (Some(store.stats.clusterSizes), store.stats.clusterSizes.size.toLong)
+        }
+      pass(IFStore.readable(store.units), store.layout, Boot(cfg.biters, cfg.seed, sizes), n,
+        "MBoot/draws")
+    }
   }
 
   /** Bootstrap of a long-form influence table (rowid, cell, inf): its
@@ -281,14 +231,13 @@ object MBoot {
   def run(ifTable: DataFrame, k: Int, n: Long, biters: Int, alp: Double,
       seed: Long): MBootResult = {
     // fail at the configuration site, not lazily at first .cov access
-    require(biters >= 2,
-      s"mboot needs biters >= 2 (SE and ddof=1 covariance), got $biters")
+    requireBiters(biters)
     val table = org.apache.spark.sql.graftbridge.SessionScope.onEngine(ifTable)
     val units = IFStore.assemble(IFStore.entryFragments(table), k, None,
       Map.empty, Some(table.sparkSession.sparkContext.defaultParallelism))
-    val p = pass(units, Members.identity(k), Some(Boot(biters, seed, None)), n,
-      "MBoot.run/signedSums")
-    finish(p.draws, k, n, alp)
+    val d = pass(units, new ZLayout(k, Array.empty), Boot(biters, seed, None),
+      n, "MBoot.run/signedSums")
+    finish(d.d, k, n, alp)
   }
 
   /** `sqrt(n)` scale, degenerate-dim drop, IQR-based SE and sup-t critical

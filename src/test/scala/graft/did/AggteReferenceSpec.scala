@@ -109,6 +109,119 @@ class AggteReferenceSpec extends AnyFunSuite with SparkSpec {
       s"band ${r.critValEgt} vs separate bootstrap ${direct.critVal}")
     fit.unpersist(); pp.unpersist()
   }
+
+  /** `a` equals `b` to `tol` relative, or both are NaN. */
+  private def near(a: Double, b: Double, tol: Double): Boolean =
+    a == b || (a.isNaN && b.isNaN) || math.abs(a - b) <= tol * math.abs(b)
+
+  /** One cell of the seeded grid: the panel's regime, control group, base
+    * period, anticipation, weights, estimator, fit path (covariates send
+    * a fit down the per-cell path, as does the balanced panel), whether
+    * the bootstrap is clustered, and whether the fit itself bootstraps
+    * (its store job folds the draws; otherwise the first bootstrapped
+    * request draws them). */
+  private final case class Regime(name: String, c: AttGtConfig,
+      est: String, base: String, fitBstrap: Boolean)
+
+  private val gridBase = cfg.copy(biters = 99)
+  private val grid = Seq(
+    Regime("rc, never treated, varying base, dr, closed form", gridBase,
+      "dr", "varying", fitBstrap = true),
+    Regime("rc, not yet treated, weights, reg, closed form, clustered",
+      gridBase.copy(controlGroup = "notyettreated", weightsName = Some("wgt"),
+        clustervar = Some("clust")), "reg", "varying", fitBstrap = true),
+    Regime("rc, universal base, anticipation 1, ipw, closed form",
+      gridBase.copy(anticipation = 1), "ipw", "universal", fitBstrap = false),
+    Regime("rc, not yet treated, universal base, weights, dr, per cell",
+      gridBase.copy(controlGroup = "notyettreated", weightsName = Some("wgt"),
+        xfmla = Some("y ~ x1")), "dr", "universal", fitBstrap = false),
+    Regime("panel, never treated, varying base, dr, clustered",
+      gridBase.copy(allowUnbalancedPanel = false, clustervar = Some("clust")),
+      "dr", "varying", fitBstrap = false),
+    Regime("panel, not yet treated, universal base, anticipation 1, " +
+      "weights, ipw", gridBase.copy(allowUnbalancedPanel = false,
+        controlGroup = "notyettreated", anticipation = 1,
+        weightsName = Some("wgt")), "ipw", "universal", fitBstrap = true),
+    Regime("panel, never treated, covariate, reg", gridBase.copy(
+      allowUnbalancedPanel = false, xfmla = Some("y ~ x1")), "reg", "varying",
+      fitBstrap = true),
+    Regime("rc, never treated, covariates, ipw, per cell, clustered",
+      gridBase.copy(xfmla = Some("y ~ x1 + x2"), clustervar = Some("clust")),
+      "ipw", "varying", fitBstrap = false))
+
+  private lazy val gridPanel = staggered(spark, nUnits = 120, noise = 0.1,
+    seed = 5L).withColumn("clust", pmod(col("id"), lit(9)))
+
+  for ((r, i) <- grid.zipWithIndex) {
+    test(s"grid $i (${r.name}): analytic SEs, including the wif-heavy " +
+        "calendar and dynamic overall members, and the Wald statistic " +
+        "match the dense reference at 1e-9; bootstrap SEs and band " +
+        "critical values match a bootstrap of the dense family IF at 1e-12") {
+      val pp = Preprocess.run(gridPanel, r.c)
+      val fit = AttGt.fit(pp, r.est, r.base, bstrap = r.fitBstrap)
+      val prep = Aggte.prepare(fit)
+      val d = new Dense(prep)
+      val no = Some(false); val yes = Some(true)
+      // analytic: every point estimate and SE; a member whose IF is
+      // identically zero (a universal base period's event time) has a
+      // NaN SE
+      val analytic = Seq(("simple", Aggte.simple(prep, bstrap = no), d.simple),
+        ("group", Aggte.group(prep, bstrap = no), d.group),
+        ("calendar", Aggte.calendar(prep, bstrap = no), d.calendar),
+        ("dynamic", Aggte.dynamic(prep, bstrap = no), d.dynamic))
+      for ((tag, got, ref) <- analytic) {
+        val atts = got.attEgt :+ got.overallAtt
+        val ses = got.seEgt :+ got.overallSe
+        ref.indices.foreach { m =>
+          assert(near(atts(m), ref(m).att, 1e-9), s"$tag att[$m]")
+          val want = d.se(ref(m))
+          if (want <= Stats.DegenerateTol)
+            assert(ses(m).isNaN, s"$tag se[$m]: ${ses(m)} for a zero IF")
+          else assert(near(ses(m), want, 1e-9), s"$tag se[$m]: ${ses(m)} vs $want")
+        }
+      }
+      // under a universal base the base period's event time holds only
+      // zero cells: its member's IF is identically zero
+      if (r.base == "universal")
+        assert(d.dynamic.exists(_.inf.forall(_ == 0.0)), "no zero-IF member")
+      val w = PreTest.wald(fit)
+      assert(near(w.w, d.wald, 1e-9), s"wald ${w.w} vs dense ${d.wald}")
+
+      // bootstrapped: SEs of every member, and each band's critical value
+      // over its element members, against MBoot over the dense family IF
+      import spark.implicits._
+      val clusters = r.c.clustervar.map(cv => pp.df
+        .select(col("rowid").cast("string").as("rowid"),
+          col(cv).cast("string").as("cluster")).distinct())
+      def direct(ref: Seq[Member]): MBootResult = {
+        val fam = (for (m <- ref.indices; u <- d.ids.indices)
+          yield (d.ids(u), m, ref(m).inf(u))).toDF("rowid", "cell", "inf")
+        clusters.fold(MBoot.run(fam, ref.length, pp.n, r.c.biters, r.c.alp,
+          r.c.seed))(cl => MBoot.runClustered(fam, cl, ref.length, r.c.biters,
+          r.c.alp, r.c.seed))
+      }
+      val z = Stats.normPpf(1 - r.c.alp / 2)
+      val boot = Seq(("simple", Aggte.simple(prep, bstrap = yes), d.simple),
+        ("group", Aggte.group(prep, bstrap = yes, cband = yes), d.group),
+        ("calendar", Aggte.calendar(prep, bstrap = yes, cband = yes),
+          d.calendar),
+        ("dynamic", Aggte.dynamic(prep, bstrap = yes, cband = yes), d.dynamic))
+      for ((tag, got, ref) <- boot) {
+        val want = direct(ref)
+        val ses = got.seEgt :+ got.overallSe
+        ref.indices.foreach { m =>
+          assert(near(ses(m), want.se(m), 1e-12),
+            s"$tag bootstrap se[$m]: ${ses(m)} vs ${want.se(m)}")
+        }
+        if (tag != "simple") {
+          val band = Aggte.clampCritVal(direct(ref.init).critVal, z)
+          assert(near(got.critValEgt, band, 1e-12),
+            s"$tag band ${got.critValEgt} vs $band")
+        }
+      }
+      fit.unpersist(); pp.unpersist()
+    }
+  }
 }
 
 object AggteReferenceSpec {
@@ -220,5 +333,21 @@ object AggteReferenceSpec {
     }
 
     def se(m: Member): Double = math.sqrt(m.inf.map(v => v * v).sum) / n
+
+    /** The Wald pre-test statistic from the dense covariance of the
+      * pre-treatment cells, degenerate cells dropped. */
+    def wald: Double = {
+      val pre = (0 until nK).filter { k =>
+        val c = fit.cells(prep.cellIds(k))
+        !c.zeroCell && !fit.skipped(c.idx) && c.tn < c.g
+      }
+      val v = breeze.linalg.DenseMatrix.tabulate(pre.length, pre.length) {
+        (i, j) => (0 until nU).map(u => psi(u)(pre(i)) * psi(u)(pre(j))).sum /
+          (n * n)
+      }
+      val keep = pre.indices.filter(i => v(i, i) > Stats.DegenerateTol)
+      val a = breeze.linalg.DenseVector(keep.map(i => att(pre(i))).toArray)
+      a dot (breeze.linalg.inv(v(keep, keep).toDenseMatrix) * a)
+    }
   }
 }

@@ -98,13 +98,20 @@ class JobBudgetSpec extends AnyFunSuite with SparkSpec {
     val df = staggered(spark, nUnits = 200, noise = 0.1)
     val (nPre, pp) = jobsAnd(Preprocess.run(df, cfg))
     val (nFit, fit0) = jobsAnd(AttGt.fit(pp, estMethod = "dr"))
+    val no = Some(false); val yes = Some(true)
+    // a fit made without bstrap draws at its first bootstrapped request,
+    // once
+    val p0 = Aggte.prepare(fit0)
+    val nLazy = jobsOf(Aggte.simple(p0, bstrap = yes))
+    val nDrawn = jobsOf(Aggte.dynamic(p0, bstrap = yes, cband = yes))
     fit0.unpersist()
     val (nFitB, fit) = jobsAnd(AttGt.fit(pp, estMethod = "dr", bstrap = true))
     val (nPrep, p) = jobsAnd(Aggte.prepare(fit))
-    val no = Some(false); val yes = Some(true)
     val got = Seq(
       "Preprocess.run" -> nPre,
       "AttGt.fit" -> nFit,
+      "first Aggte(bstrap) of it" -> nLazy,
+      "second Aggte(bstrap) of it" -> nDrawn,
       "AttGt.fit(bstrap)" -> nFitB,
       "Aggte.prepare" -> nPrep,
       "Aggte.simple" -> jobsOf(Aggte.simple(p, bstrap = no)),
@@ -122,18 +129,20 @@ class JobBudgetSpec extends AnyFunSuite with SparkSpec {
     assertBudget(got, Map(
       "Preprocess.run" -> 3,
       "AttGt.fit" -> 2,
-      "AttGt.fit(bstrap)" -> 3,
+      "first Aggte(bstrap) of it" -> 1,
+      "second Aggte(bstrap) of it" -> 0,
+      "AttGt.fit(bstrap)" -> 2,
       "Aggte.prepare" -> 0,
-      "Aggte.simple" -> 1,
-      "Aggte.group" -> 1,
-      "Aggte.calendar" -> 1,
-      "Aggte.dynamic" -> 1,
-      "Aggte.simple(bstrap)" -> 1,
-      "Aggte.group(bstrap)" -> 1,
-      "Aggte.calendar(bstrap)" -> 1,
-      "Aggte.dynamic(bstrap)" -> 1,
-      "Aggte.dynamic(bstrap, cband)" -> 1,
-      "PreTest.wald" -> 1))
+      "Aggte.simple" -> 0,
+      "Aggte.group" -> 0,
+      "Aggte.calendar" -> 0,
+      "Aggte.dynamic" -> 0,
+      "Aggte.simple(bstrap)" -> 0,
+      "Aggte.group(bstrap)" -> 0,
+      "Aggte.calendar(bstrap)" -> 0,
+      "Aggte.dynamic(bstrap)" -> 0,
+      "Aggte.dynamic(bstrap, cband)" -> 0,
+      "PreTest.wald" -> 0))
   }
 
   test("a clustered bootstrapped analysis holds its job budget") {
@@ -150,7 +159,7 @@ class JobBudgetSpec extends AnyFunSuite with SparkSpec {
     fit.unpersist(); pp.unpersist()
     assertBudget(got, Map(
       "AttGt.fit(bstrap, clustered)" -> 3,
-      "Aggte.simple(bstrap, clustered)" -> 1))
+      "Aggte.simple(bstrap, clustered)" -> 0))
   }
 
   private def fitJobs(c: AttGtConfig,
@@ -187,16 +196,19 @@ class JobBudgetSpec extends AnyFunSuite with SparkSpec {
     try {
       val labels = descriptionsOf {
         val pp = Preprocess.run(staggered(spark, nUnits = 120, noise = 0.1), cfg)
-        val fit = AttGt.fit(pp, estMethod = "dr", bstrap = true)
+        val fit = AttGt.fit(pp, estMethod = "dr")
         val p = Aggte.prepare(fit)
         Aggte.dynamic(p, bstrap = Some(false))
+        Aggte.dynamic(p, bstrap = Some(true))
         PreTest.wald(fit)
         fit.unpersist(); pp.unpersist()
       }
+      // the analytic request and the pre-test run no job; the first
+      // bootstrapped request of a fit made without bstrap draws once
       assert(labels == Seq("Preprocess.run/counts",
         "Preprocess.run/firstPeriods", "Preprocess.run/materialize",
-        "AttGt.fit/groupSums", "AttGt.fit/store", "MBoot/signedSums",
-        "Aggte.dynamic/pass", "PreTest.wald/fold"), labels.mkString(", "))
+        "AttGt.fit/groupSums", "AttGt.fit/store", "MBoot/draws"),
+        labels.mkString(", "))
       assert(sc.getLocalProperty(Desc) == "caller's own")
     } finally sc.setLocalProperty(Desc, null)
   }

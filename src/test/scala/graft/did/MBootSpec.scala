@@ -87,6 +87,24 @@ class MBootSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("the draws the fit's store job folds equal MBoot.run over its long " +
+      "form, at shuffle widths 1, 7, 64 and 200") {
+    val df = staggered(spark, nUnits = 200, noise = 0.1)
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    for (width <- Seq(1, 7, 64, 200)) {
+      spark.conf.set(key, width.toString)
+      try {
+        val pp = Preprocess.run(df, cfg)
+        val f = AttGt.fit(pp, estMethod = "dr", bstrap = true)
+        val r = MBoot.run(f.ifTable, f.cells.length, pp.n, cfg.biters, cfg.alp,
+          cfg.seed)
+        assertAgree(MBootResult(r.bres, f.se, f.critVal), r, s"width $width")
+        f.unpersist(); pp.unpersist()
+      } finally spark.conf.set(key, saved)
+    }
+  }
+
   test("an independent replay of signs and contraction agrees at 1e-12") {
     val (biters, seed, k, n) = (199, 3L, fit.cells.length, fit.pp.n)
     val gamma = 0x9E3779B97F4A7C15L

@@ -10,8 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * event study with a uniform band and the Wald pre-test — on both fit paths
   * (closed form, per-cell), each bootstrapped by unit and by cluster, and
   * every number is compared with a baseline run under: shuffle widths 1,
-  * 7 and 64; the input in 1 partition or spread over 16; and the unit id
-  * as a string instead of a number. */
+  * 7, 64 and Spark's default 200; the input in 1 partition or spread over
+  * 16; and the unit id as a string instead of a number. */
 class StoreInvarianceSpec extends AnyFunSuite with SparkSpec {
   import TestPanels._
 
@@ -55,7 +55,7 @@ class StoreInvarianceSpec extends AnyFunSuite with SparkSpec {
   }
 
   private val variants: Seq[(String, AttGtConfig => Seq[(String, Double)])] =
-    Seq(1, 7, 64).map(n => s"$n shuffle partitions" ->
+    Seq(1, 7, 64, 200).map(n => s"$n shuffle partitions" ->
       ((c: AttGtConfig) => withShuffle(n)(numbers(panel, c)))) ++ Seq(
       "input in 1 partition" -> ((c: AttGtConfig) => numbers(panel.coalesce(1), c)),
       "input over 16 partitions" ->
